@@ -110,6 +110,34 @@ object Tables {
   * tables (region/nation/...) never shuffle.
   */
 object GraftSession {
+  /** The session-scoped SQL settings, kept apart from the builder so a
+    * spec can apply exactly these to a child session.
+    */
+  private[graft] val SqlConfs: Seq[(String, String)] = Seq(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // The join-regime rule, stated once. Unless a join carries an
+    // explicit hint, AQE re-plans it from the MEASURED size of its
+    // materialized shuffle stages and
+    //  - broadcasts a side under the runtime broadcast threshold
+    //    (spark.sql.adaptive.autoBroadcastJoinThreshold, unset, so the
+    //    10 MB spark.sql.autoBroadcastJoinThreshold default);
+    //  - else hash-builds a side under threshold × shuffle partitions
+    //    that is also 3× smaller than the other side (the planner's
+    //    shuffled-hash rule, which preferSortMergeJoin=false enables);
+    //  - else sort-merges, the spill-safe plan for big pair sets.
+    // JoinRegimeSpec pins all three on a checkpointed pair set. The
+    // trade-off on record (ADVICE r13): a shuffled-hash build cannot
+    // spill, so the rule bounds it at about one broadcast threshold per
+    // partition; corpus×corpus self-joins (dd_substring's admission
+    // join) fail the 3× test and keep the spillable sort-merge.
+    "spark.sql.join.preferSortMergeJoin" -> "false",
+    // events.ts is TIMESTAMP(NANOS) parquet — Spark 4 rejects it unless
+    // nanos are read as long (Tables.events then divides to µs).
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.session.timeZone" -> "UTC")
+
   def apply(appName: String = "graft",
             master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
             shufflePartitions: Int = 32,
@@ -119,59 +147,8 @@ object GraftSession {
       .appName(appName)
       .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Prefer hash joins over sort-merge wherever statistics allow
-      // (round 13): the dedup/attach families join data-dependent pair
-      // streams against bounded relations, and a sort of the stream is
-      // pure waste — broadcast still wins when a side is small, and
-      // stats-blind sites (checkpoint-descended relations) carry their
-      // own explicit guarded-broadcast/SHUFFLE_HASH treatment.
-      // Deliberately SESSION-wide, with the trade-off on record
-      // (ADVICE r13): a ShuffledHashJoin build side cannot spill the
-      // way sort-merge does, so a badly mis-estimated build side at
-      // untested scale trades a sort for an executor OOM. Accepted
-      // because (a) the conf only changes STATS-KNOWN joins, where the
-      // planner still requires the build side to estimate under
-      // spark.sql.shuffledHashJoinFactor × the other side — the blind
-      // sites that motivated the sweep are all explicitly
-      // guarded/hinted, (b) corpus×corpus self-joins that genuinely
-      // need a spillable sort (dd_substring's admission join) carry no
-      // hint and exceed the factor, keeping sort-merge, and (c) the
-      // SmjScan join-strategy census runs in the per-round evidence
-      // gate (round_probes.sh step 6), so a strategy flip on any heavy
-      // query surfaces as an artifact diff, not a silent plan change.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      // Runtime join-regime selection for pair-set joins (round 20,
-      // VERDICT r19 #2): the candidate-pair relations used to be
-      // localCheckpoint'ed purely so a plan-time pairGuard count could
-      // pick broadcast/SHUFFLE_HASH/MERGE — one serial materialization
-      // barrier per funnel. AQE already re-plans those joins from the
-      // MEASURED size of the materialized shuffle stage, which is
-      // strictly better information than a plan-time row-count proxy;
-      // this threshold gives AQE the guard's MID regime at runtime:
-      // convert a sort-merge to a shuffled-hash build while every
-      // post-shuffle partition stays under the same per-partition
-      // hash-build bound the guard's second regime enforced
-      // (HashBuildBytesPerPartition = 32 MB); past it the join stays
-      // sort-merge — exactly pairGuard's spill-safe fallback. The
-      // broadcast regime needs no threshold raise: runtime conversion
-      // at the default adaptive.autoBroadcastJoinThreshold (10 MB)
-      // already covers every candidate-pair set the guard would have
-      // broadcast (they are output-class — orders of magnitude under
-      // 10 MB wherever broadcast is right), and a session-wide 64 MB
-      // raise was measured a WASH in alternating isolation arms
-      // (dd_ngram_jaccard/dd_keep_best/dd_substring within host noise
-      // both ways), so the default stays — smallest deviation wins.
-      // Scale-adaptive by construction: the decision keys on runtime
-      // bytes, not on a local[32] constant.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "32m")
-      // events.ts is TIMESTAMP(NANOS) parquet — Spark 4 rejects it unless
-      // nanos are read as long (Tables.events then divides to µs).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+    SqlConfs.foreach { case (k, v) => builder.config(k, v) }
     extraConfs.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -256,8 +256,7 @@ object CorpusOps {
     * same occ-aggregate scalar the coarse guard reads, known before any
     * pair row exists; previously the raw set's materialized distinct
     * count, which cost a full shuffle + checkpoint of the candidate
-    * stream just to decide), the attachGuard pattern on the work-volume
-    * axis.
+    * stream just to decide).
     *
     * UNITS (round 17, ADVICE r16): the round-16 switch changed what this
     * constant is compared against — raw pre-distinct join MASS
@@ -420,7 +419,7 @@ object CorpusOps {
     // LAZY checkpoint: the signature blocks materialize as a side effect
     // of the candidate job (buckets consume sigs), so the small-corpus
     // path pays no extra barrier; the cut branch then reads the same
-    // blocks for its attaches and its (free) doc count.
+    // blocks for its attaches.
     // Degenerate-basis floor (round 15): only docs with >=
     // MinCappedShingles surviving shingles are COMPARABLE (see the
     // constant's note) — the count rides the signature aggregate for
@@ -487,12 +486,12 @@ object CorpusOps {
         // occ is recomputed here rather than checkpointed: the cold
         // path — every oracle corpus — must not pay a materialization
         // barrier for the hot path's second consumer.
+        // Eager: both anti/semi joins below read it in one job.
         val hotK = occ.filter(col("ne") + col("nt") > HotBucketOcc)
           .select(col("band"), col("bh"))
-          .localCheckpoint(eager = false) // hk's count materializes
-        val hk = Dedup.attachGuard(hotK.count(), rowBytes = 16L) _
-        val cold = buckets.join(hk(hotK), Seq("band", "bh"), "left_anti")
-        val hot = buckets.join(hk(hotK), Seq("band", "bh"), "left_semi")
+          .localCheckpoint()
+        val cold = buckets.join(hotK, Seq("band", "bh"), "left_anti")
+        val hot = buckets.join(hotK, Seq("band", "bh"), "left_semi")
         // A doc hot in fine band 2k and 2k+1 re-keys ONCE at coarse k.
         val coarse = Dedup.bucketsFromSigs(sigs, FuzzyBandRows * 2)
           .select(col("doc_id"), col("band").as("cband"), col("bh"))
@@ -502,18 +501,6 @@ object CorpusOps {
           .unionByName(bipartite(
             hotM.join(coarse, Seq("doc_id", "cband")), Seq("cband", "bh")))
       }
-    // Guarded attaches: per-doc size and doc-id relations key on the
-    // SIGNED-DOC count as their proxy (round 19: nSigned rides the occ
-    // totals above for free — Σ(ne+nt) is exactly NumPerms/FuzzyBandRows
-    // band rows per signed doc — where the previous sh.count() was one
-    // more serial cached-block job per entry for a LOOSER bound). It is
-    // a true upper bound for everything g attaches: candidates derive
-    // from floored-signature buckets, so candidate docs ⊆ signed docs,
-    // and both guarded relations (the candidate-doc-id set and the
-    // per-candidate-doc sizes) are doc-granularity over candidate docs.
-    // The candidate PAIR set — not corpus-bounded — is checkpointed (two
-    // consumers: the candidate-doc semi-join and the final pair gate)
-    // and guarded on its OWN count (Dedup.pairGuard).
     // Round 16: in the cut regime the distinct runs AFTER the sketch cut
     // — on the ~10⁻⁴ survivor volume, not the full candidate stream (the
     // dd_embed cascade's exact lesson, now applied to the Jaccard
@@ -526,21 +513,14 @@ object CorpusOps {
     // Nothing of candidate volume is ever stored: join → sig attaches →
     // agreement filter → distinct(survivors) → checkpoint (60 rows at
     // 100×).
-    val g = Dedup.attachGuard(nSigned) _
     val candidates =
       (if (mass > cutMinMass)
-        // nSigned IS sigs.count() (one band-row group per signed doc) —
-        // read from the totals job instead of one more count job.
-        Dedup.sketchCutPairs(candPre, sigs, nSigned, FuzzyTau,
-          "train_doc", "eval_doc")
+        Dedup.sketchCutPairs(candPre, sigs, FuzzyTau, "train_doc", "eval_doc")
       else candPre).distinct()
-    // NOT checkpointed since round 20 (the minhashFrom rationale): the
-    // distinct's exchange is computed once for all three consumers via
-    // ReuseExchange/AQE stage reuse, and AQE picks the pair joins'
-    // regime from the MEASURED stage size under the session thresholds
-    // that mirror pairGuard's three regimes — the plan-time count (one
-    // serial job + barrier per entry) bought nothing the runtime stats
-    // don't already know. NOTE the asymmetry with minhashFrom, which
+    // NOT checkpointed since round 20: the distinct's exchange is
+    // computed once for all three consumers via ReuseExchange/AQE stage
+    // reuse, and AQE picks the pair joins' regime from the MEASURED
+    // stage size. NOTE the asymmetry with minhashFrom, which
     // re-gained its candidates checkpoint (plan truncation only, lazy,
     // un-counted) later in round 20: re-adding the same lazy checkpoint
     // HERE was measured 2.66 → 3.6–3.9 s (alternating isolation arms,
@@ -549,13 +529,20 @@ object CorpusOps {
     // only adds first-materialization serialization across the
     // concurrent SHUFFLE_HASH leaf stages. Keep the un-checkpointed
     // form here; the trade is measured, not assumed.
-    val candG = candidates
     // Exact verification restricted to candidate docs; the eval/train
-    // split is a pure doc_id predicate, so each side is a filter. The
-    // doc-id set names its own guard (hints do not survive the union).
-    val candDocs = g(candidates.select(col("train_doc").as("doc_id"))
-      .union(candidates.select(col("eval_doc").as("doc_id"))).distinct())
-    val shCand = sh.join(candDocs, Seq("doc_id"), "left_semi")
+    // split is a pure doc_id predicate, so each side is a filter.
+    val candDocs = candidates.select(col("train_doc").as("doc_id"))
+      .union(candidates.select(col("eval_doc").as("doc_id"))).distinct()
+    // The one join-regime hint left in this family. Unhinted, the
+    // planner cannot size candDocs and shuffles the corpus shingle
+    // stream before AQE converts the join to a broadcast: alternating
+    // isolation pairs at sf0.1 on 4 cores read
+    // dd_decontaminate_fuzzy_staged at 4.14 / 3.05 / 3.92 s unhinted vs
+    // 2.83 / 2.75 / 3.35 s at the parent. candDocs is bounded: below
+    // the shipped sketch-cut threshold it holds at most
+    // 2 × SketchCutMinMass docs, above it the cut's survivors (60 pairs
+    // at the 100× staging).
+    val shCand = sh.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
     val sizes = shCand.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val evalSh = shCand.filter(col("doc_id") % EvalModulus === 0)
       .select(col("doc_id").as("eval_doc"), col("shingle"))
@@ -564,11 +551,11 @@ object CorpusOps {
     val common = evalSh.hint("SHUFFLE_HASH").join(trainSh, Seq("shingle"))
       .groupBy(col("train_doc"), col("eval_doc"))
       .agg(count(lit(1)).as("c"))
-      .join(candG, Seq("train_doc", "eval_doc"), "left_semi")
+      .join(candidates, Seq("train_doc", "eval_doc"), "left_semi")
     common
-      .join(g(sizes.select(col("doc_id").as("train_doc"), col("n").as("nt"))),
+      .join(sizes.select(col("doc_id").as("train_doc"), col("n").as("nt")),
         Seq("train_doc"))
-      .join(g(sizes.select(col("doc_id").as("eval_doc"), col("n").as("ne"))),
+      .join(sizes.select(col("doc_id").as("eval_doc"), col("n").as("ne")),
         Seq("eval_doc"))
       .withColumn("jaccard",
         col("c").cast("double") / (col("nt") + col("ne") - col("c")).cast("double"))

@@ -126,18 +126,7 @@ object Dedup {
     * re-cap aggregation over the full shingle table (measured ~1.5 s per
     * consumer at sf0.1).
     */
-  private[queries] def jaccardPairsCapped(sh: DataFrame, threshold: Double,
-      guard: Option[DataFrame => DataFrame] = None): DataFrame = {
-    // Join physics (round 13, the cascadeVerify finding generalized): a
-    // DATA-DEPENDENT pair stream is never the sorted side of an attach —
-    // when the caller supplies an attachGuard, the per-doc sizes
-    // relation broadcasts under the ceiling and hash-builds above it.
-    // Callers without a free corpus count (the quadratic oracle form)
-    // pass None and keep the planner's choice. The shingle self-join is
-    // always the planner's: preferSortMergeJoin=false (GraftSession)
-    // picks a hash build when statistics allow, and both of its sides
-    // are the same corpus-linear relation, not the pair stream.
-    val g = guard.getOrElse(identity[DataFrame] _)
+  private[queries] def jaccardPairsCapped(sh: DataFrame, threshold: Double): DataFrame = {
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val a = sh.select(col("doc_id").as("doc_a"), col("shingle"))
     val b = sh.select(col("doc_id").as("doc_b"), col("shingle"))
@@ -146,8 +135,8 @@ object Dedup {
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("c"))
     common
-      .join(g(sizes.select(col("doc_id").as("doc_a"), col("n").as("na"))), Seq("doc_a"))
-      .join(g(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb"))), Seq("doc_b"))
+      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
+      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), Seq("doc_b"))
       .withColumn("jaccard",
         col("c").cast("double") / (col("na") + col("nb") - col("c")).cast("double"))
       .filter(col("jaccard") >= threshold)
@@ -636,24 +625,20 @@ object Dedup {
     * while the low-J candidate mass that unselective 2-row bands admit
     * at scale (J ≈ 0.15 pairs collide with p ≈ 0.5 at 32 bands)
     * concentrates 4σ BELOW the cut and is dismissed on 520 B of
-    * signature instead of re-joining its whole shingle sets. The sig
-    * relation is per-doc (corpus-bounded): guarded attach at its own
-    * ~528 B row width.
+    * signature instead of re-joining its whole shingle sets.
     */
   private[queries] def sketchCutPairs(cands: DataFrame, sigs: DataFrame,
-      nDocs: Long, threshold: Double,
-      aCol: String, bCol: String): DataFrame = {
+      threshold: Double, aCol: String, bCol: String): DataFrame = {
     val sigma = math.sqrt(threshold * (1.0 - threshold) / NumPerms)
     val cut = threshold - 4.0 * sigma
-    val sg = attachGuard(nDocs, rowBytes = 8L * NumPerms + 16L) _
     // Positional agreement via the codegen SigAgree expression (round
     // 16): the previous zip_with + aggregate chain evaluated its lambda
     // interpreted per element — measured 12.6 s for 11.5M pairs × 64
     // positions at the 100× staging, the query's largest warm term.
     val matches = graft.functions.SigAgree.sigAgree(col("sig_a"), col("sig_b"))
     cands
-      .join(sg(sigs.select(col("doc_id").as(aCol), col("sig").as("sig_a"))), Seq(aCol))
-      .join(sg(sigs.select(col("doc_id").as(bCol), col("sig").as("sig_b"))), Seq(bCol))
+      .join(sigs.select(col("doc_id").as(aCol), col("sig").as("sig_a")), Seq(aCol))
+      .join(sigs.select(col("doc_id").as(bCol), col("sig").as("sig_b")), Seq(bCol))
       .filter(matches.cast("double") / lit(NumPerms.toDouble) >= lit(cut))
       .select(col(aCol), col(bCol))
   }
@@ -693,54 +678,35 @@ object Dedup {
     // verify-side joins below all move 8 B longs instead of shingle
     // strings; signatures are bit-identical either way.
     val shC = hashCompact(shRaw)
-    // LAZY checkpoint + count (round 19, guide §1.2 "don't compute
-    // things you throw away" at the job grain): the eager form ran one
-    // job to materialize the blocks and a second to count them; the
-    // count itself is the materializing action, so the same work is one
-    // job and one barrier fewer — applied to every checkpoint whose
-    // FIRST consumer is its own count (or a single-scan job), never
-    // where the first job scans the relation from several stages at
-    // once (concurrent first-materialization would duplicate the
-    // subtree's work per stage).
+    // Eager: the first job after this reads sh from several stages at
+    // once (signatures and the candidate-doc semi-join), and a lazy
+    // checkpoint would be first-materialized by each of them.
     val sh = shC.join(broadcast(hotShingles(shC)), Seq("shingle"), "left_anti")
-      .localCheckpoint(eager = false)
-    // The materializing action — the corpus-count proxy every
-    // attachGuard below keys on.
-    val g = attachGuard(sh.count()) _
+      .localCheckpoint()
     val buckets = bandedBuckets(sh, BandRows)
     val candA = buckets.select(col("band"), col("bh"), col("doc_id").as("doc_a"))
     val candB = buckets.select(col("band"), col("bh"), col("doc_id").as("doc_b"))
-    // Un-COUNTED since round 20 (VERDICT r19 #2's barrier lens): the
-    // plan-time pairGuard count is gone — AQE re-plans the pair joins
-    // from the MEASURED stage size under the session thresholds that
-    // mirror pairGuard's three regimes (GraftSession: broadcast
-    // ≤ 64 MB runtime bytes, shuffled-hash while post-shuffle
-    // partitions ≤ 32 MB, sort-merge past both). The LAZY checkpoint
-    // STAYS, for the plan not the blocks: three consumers inline this
-    // subtree (candidate-doc union ×2 + final pair gate), and dropping
-    // the checkpoint entirely was measured this round at +0.5–1.5 s of
-    // DRIVER time per entry (guide §3.3's planning-cost trap — max
-    // inter-job gap 0.4–1.6 s vs ≤0.2 s with the plan truncated;
-    // AQE re-optimizes the full logical plan per stage completion).
-    // No count: the first consumer stage materializes the blocks.
+    // The LAZY checkpoint is for the plan, not the blocks: three
+    // consumers inline this subtree (candidate-doc union ×2 + final pair
+    // gate), and dropping the checkpoint entirely was measured in round
+    // 20 at +0.5–1.5 s of DRIVER time per entry (guide §3.3's
+    // planning-cost trap — max inter-job gap 0.4–1.6 s vs ≤0.2 s with
+    // the plan truncated; AQE re-optimizes the full logical plan per
+    // stage completion). No count: the first consumer stage
+    // materializes the blocks.
     val candidates = candA.join(candB, Seq("band", "bh"))
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b")).distinct()
       .localCheckpoint(eager = false)
-    val candG = candidates
-    // Exact verification restricted to candidate docs only; the
-    // candidate/doc-id relations are guarded attaches (each one names
-    // its own guard — a hint does not propagate through a union), so
-    // neither the corpus shingle stream nor the pair stream is ever
-    // sorted against them.
-    val candDocs = g(candidates.select(col("doc_a").as("doc_id"))
-      .union(candidates.select(col("doc_b").as("doc_id"))).distinct())
+    // Exact verification restricted to candidate docs only.
+    val candDocs = candidates.select(col("doc_a").as("doc_id"))
+      .union(candidates.select(col("doc_b").as("doc_id"))).distinct()
     val shCand = sh.join(candDocs, Seq("doc_id"), "left_semi")
     // sh is already capped over the full corpus basis (top of this
     // method), so cap decisions are identical to ngramJaccard's and the
     // capped core applies directly — no re-cap pass.
-    jaccardPairsCapped(shCand, 0.8, Some(g))
-      .join(candG, Seq("doc_a", "doc_b"), "left_semi")
+    jaccardPairsCapped(shCand, 0.8)
+      .join(candidates, Seq("doc_a", "doc_b"), "left_semi")
   }
 
   /** Oracle: identical to dd_ngram_jaccard — LSH recall at J≥0.8 with 16
@@ -1489,116 +1455,6 @@ object Dedup {
     */
   private[graft] val CascadeSketchBroadcastMax = guardCeilingRows(SketchRowBytes)
 
-  /** Guarded attach hint (round 13): broadcast a CORPUS-BOUNDED
-    * relation (per-doc sizes, candidate-doc-id sets — anything whose
-    * cardinality is ≤ the corpus row count by construction) onto its
-    * consuming joins when the corpus it derives from is small (a row
-    * count the caller already has for free, from an existing
-    * checkpoint), SHUFFLE_HASH-build it above the ceiling. The proxy is
-    * a true UPPER bound only for such relations — candidate PAIR sets
-    * are not corpus-bounded and must use [[pairGuard]] instead
-    * (ADVICE r13). Either way the bigger stream on the other side is
-    * never sorted — the static-stats estimates for these relations are
-    * garbage (distinct/union over join outputs inflate to tens of GB at
-    * sf0.1, read from the optimized plan this round), so without the
-    * hint the planner sort-merges and only AQE's runtime conversion
-    * saves the small scale, while at 10⁹ docs nothing saves the sort.
-    * Two designs measured and rejected this round: bare SHUFFLE_HASH
-    * hints (forfeit the broadcast that is right when the relation is
-    * small — ~1.5-2× across the family at sf0.1) and per-relation
-    * checkpoint-then-count guards (exact, but each one is a serial
-    * materialization job — mm_phash read 2.8× its committed min-lap).
-    * The corpus-count proxy costs nothing and errs only in the
-    * in-between regime (big corpus, small relation), where the fallback
-    * is a hash build, never a sort.
-    */
-  /** Per-partition byte budget for a SHUFFLE_HASH build — the ceiling
-    * above which the guard's third regime engages (round 15): a hash
-    * build is NOT spillable, so past the point where one partition's
-    * build (rows × rowBytes × HashedRelationOverhead / shuffle
-    * partitions) outgrows its task's execution-memory share the only
-    * safe plan is an explicit sort-merge (the dd_substring window-join
-    * lesson, now enforced by the guard instead of remembered per call
-    * site — and it must be an explicit MERGE hint, because the
-    * session-wide preferSortMergeJoin=false means an unhinted join
-    * would hash-build anyway). 32 MB is conservative against the
-    * measured regime: the 300× fuzzy staging OOM'd SHUFFLE_HASH builds
-    * at ~80 MB/partition raw with checkpoint blocks holding the
-    * protected storage pool. The ceiling scales with the partition
-    * count, so a real cluster's higher parallelism raises it.
-    */
-  private[graft] val HashBuildBytesPerPartition: Long = 32L << 20
-
-  private[graft] def hashBuildCeilingRows(spark: org.apache.spark.sql.SparkSession,
-      rowBytes: Long): Long = {
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toLong
-    HashBuildBytesPerPartition * parts / (rowBytes * HashedRelationOverhead)
-  }
-
-  private[graft] def attachGuard(corpusRows: Long,
-      rowBytes: Long = PairRowBytes)(df: DataFrame): DataFrame =
-    if (corpusRows <= guardCeilingRows(rowBytes)) broadcast(df)
-    else df.hint("SHUFFLE_HASH")
-
-  /** Pair-relation guard (round 14, ADVICE r13 medium): a candidate
-    * PAIR set is NOT bounded by the corpus row count — on
-    * duplication-heavy corpora (many docs sharing LSH buckets) it grows
-    * super-linearly in corpus size, so the corpus-count proxy that is a
-    * true upper bound for per-doc relations (sizes, candidate-doc sets)
-    * could force a multi-GB broadcast here and OOM the driver. Pair
-    * sets are therefore guarded on their OWN cardinality. Contract:
-    * `pairs` must arrive localCheckpoint'ed — the count is then a
-    * cached-block metadata read, not a new job. (Round 13 measured and
-    * rejected per-relation checkpoint+count guards for SINGLE-consumer
-    * relations — each checkpoint was a serial materialization job;
-    * every pair set guarded here has ≥ 2 consumers, so its checkpoint
-    * also deletes a replay of the candidate join that produced it.)
-    */
-  private[graft] def pairGuard(pairs: DataFrame,
-      rowBytes: Long = PairRowBytes,
-      hashCeilingOverride: Long = -1L): DataFrame = {
-    // The checkpoint contract is ENFORCED, not just documented (ADVICE
-    // r14): an un-checkpointed caller would silently pay a full count
-    // job plus a lineage replay per consumer. Every leaf of the analyzed
-    // plan must be a checkpoint scan (LogicalRDD — localCheckpoint's
-    // plan; narrow projections over it are fine), AND no Join/Aggregate
-    // may sit ABOVE the checkpoint (ADVICE r15 low: a join over
-    // checkpointed leaves passes a leaves-only check yet still replays
-    // the join per consumer and pays a full recompute for the count —
-    // the exact cost this contract exists to prevent). Leaf check is
-    // name-matched to avoid depending on LogicalRDD's package
-    // visibility; the node check uses the public logical operators.
-    val analyzed = pairs.queryExecution.analyzed
-    val leaves = analyzed.collectLeaves()
-    require(leaves.nonEmpty && leaves.forall(
-        _.getClass.getSimpleName.startsWith("LogicalRDD")),
-      "pairGuard input must arrive localCheckpoint'ed (its count is then " +
-        s"a cached-block read); got leaves: ${leaves.map(_.nodeName)}")
-    val replaying = analyzed.collect {
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j.nodeName
-      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a.nodeName
-    }
-    require(replaying.isEmpty,
-      "pairGuard input must be the checkpointed pair set itself, not a " +
-        s"plan over it — these nodes would replay per consumer: $replaying")
-    // THREE regimes for pair sets (round 15): broadcast under the byte
-    // budget, SHUFFLE_HASH up to the per-partition hash-build ceiling,
-    // explicit MERGE above it — a hash build is not spillable, and the
-    // 300× fuzzy staging measured 53M-pair builds OOMing tasks while a
-    // sort-merge spills (the dd_substring window-join lesson, enforced
-    // by the guard). The third regime keys on the pair set's own EXACT
-    // count — only pairGuard gets it, because attachGuard's corpus
-    // proxies can overshoot by the shingle multiplier and a loose proxy
-    // must never push a small build into sorting the big stream.
-    val n = pairs.count()
-    val hashCeiling =
-      if (hashCeilingOverride >= 0) hashCeilingOverride
-      else hashBuildCeilingRows(pairs.sparkSession, rowBytes)
-    if (n <= guardCeilingRows(rowBytes)) broadcast(pairs)
-    else if (n <= hashCeiling) pairs.hint("SHUFFLE_HASH")
-    else pairs.hint("MERGE")
-  }
-
   /** The sketch-verify cascade + exact verification tail, shared by the
     * closed-corpus pipeline ([[embedBucketedWithPlan]]) and the
     * incremental one ([[deltaEmbedFrom]]): prune candidate pairs on the
@@ -1735,56 +1591,6 @@ object Dedup {
         / (col("nrm_a") * col("nrm_b")))
       .filter(col("cs") >= threshold)
       .select(col("vec_a"), col("vec_b"), round(col("cs"), 6).as("cs"))
-  }
-
-  /** Scratch-instrument hook (EmbedHiProbe): the hi-corpus pipeline's
-    * intermediate stages — (candidates, probe rows, keyed rows) — built
-    * with the same plan the query would use, so stage-level volumes and
-    * wall times can be measured instead of argued. Mirrors
-    * embedBucketedWithPlan's first three stages; not query surface.
-    */
-  private[graft] def embedHiDebug(spark: SparkSession, sfDir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val nBase = Tables.embeddings(spark, sfDir).count()
-    val corpus = embedHiCorpus(spark, sfDir)
-    embedDebugStages(corpus, nBase + nBase / 10, "hi", EmbedDim)
-  }
-
-  /** 768-d sibling (EmbedHiProbe dim=768): dd_embed_hi768's executed
-    * stages, so the 100×-decade marginal (SCALE_r13: 1.47) can be
-    * decomposed into sign / probe / candidate volumes instead of argued.
-    */
-  private[graft] def embedHi768Debug(spark: SparkSession, sfDir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val base = hi768Base(spark, sfDir)
-    val n0 = base.count()
-    embedDebugStages(plantNearDups(base), n0 + n0 / 10, "hi768", EmbedHiDim)
-  }
-
-  private def embedDebugStages(corpus: DataFrame, n: Long, tag: String,
-      dim: Int): (DataFrame, DataFrame, DataFrame) = {
-    val plan = solveLsh(n, EmbedHiThreshold, Some(sampledP1Cached(corpus, n, tag, dim)))
-    println(s"[hiprobe] plan bits=${plan.bits} tables=${plan.tables} " +
-      f"candFrac=${plan.candFraction}%.3g work=${plan.work}%.3g")
-    val e = corpus.select(col("vec_id"), col("embedding"))
-    val flat = graft.functions.HyperplaneSigs.flatten(planesFor(dim), plan.tables, plan.bits, dim)
-    val t0 = System.nanoTime()
-    val sigs = e.select(col("vec_id"),
-      graft.functions.HyperplaneSigs.sigs(col("embedding"), flat, plan.tables, plan.bits, dim)
-        .as("sig"))
-      .localCheckpoint() // mirror the query: one signing pass
-    println(f"[hiprobe] signing-checkpoint wall=${(System.nanoTime() - t0) / 1e9}%.1fs")
-    val keyed = keyedPacked(sigs)
-    val probes = sigs.select(col("vec_id").as("vec_a"),
-      explode(graft.functions.HyperplaneSigs.probeBuckets(
-        col("sig"), plan.tables, plan.bits, depth = 1, directional = true)).as("tk"))
-    val raw = probes.join(keyed.hint("SHUFFLE_HASH"), Seq("tk"))
-      .filter(col("vec_a") =!= col("vec_b"))
-    val cands = raw
-      .select(least(col("vec_a"), col("vec_b")).as("vec_a"),
-        greatest(col("vec_a"), col("vec_b")).as("vec_b"))
-      .distinct()
-    (cands, raw, keyed)
   }
 
   /** dd_embed_hi — the bucketed near-dup pass at a PRODUCTION threshold
@@ -2132,33 +1938,20 @@ object Dedup {
   private[queries] def propagateComponents(pairs: DataFrame): DataFrame =
     propagateComponentsWithRounds(pairs)._1
 
-  /** [[propagateComponents]] plus the labeled-row count when the small-
-    * graph arm already knows it DRIVER-SIDE for free (round 20): the
-    * labels were computed locally, so consumers' attach guards can key
-    * on `labels.length` instead of paying a count job over the returned
-    * relation. None in the loop arm, where the count would be a real
-    * job the caller must decide to pay.
-    */
-  private[queries] def propagateComponentsCounted(
-      pairs: DataFrame): (DataFrame, Option[Long]) = {
-    val (df, _, known) = propagateComponentsFull(pairs)
-    (df, known)
-  }
-
   /** Same operator, also returning the distributed round count — the
     * skew/convergence probes assert the O(log diameter) bound from it
     * (they pass `smallGraphCeiling = 0` to force the loop arm).
     *
     * TWO ARMS since round 19 (guide §1.2 "the distributed algorithm" +
     * §2.4 "remove shuffles outright"): the near-dup pair graph is
-    * OUTPUT-CLASS — the same size class every attachGuard broadcast in
-    * this file already ships to the driver and every executor — yet the
+    * OUTPUT-CLASS — the size class a broadcast join ships to the driver
+    * and every executor — yet the
     * loop paid 2 distributed joins + a checkpoint + a count job PER
     * ROUND (measured 3 rounds × ~0.35 s at sf0.1 = ~1.1 s of pure
     * round overhead in dd_clusters, replicated into dd_keep_best and
-    * both pipeline flagships). Below the same broadcast ceiling the
-    * guards use (guardCeilingRows(PairRowBytes) — if the set fits a
-    * broadcast build, it fits a driver pass), the edge list is
+    * both pipeline flagships). Below the pair-relation broadcast ceiling
+    * (guardCeilingRows(PairRowBytes) — if the set fits a broadcast
+    * build, it fits a driver pass), the edge list is
     * collected ONCE and closed with a min-rooted union-find: pointing
     * the larger root at the smaller keeps every tree's root = the
     * component's minimum member, so labels are exactly the loop's
@@ -2170,13 +1963,6 @@ object Dedup {
     */
   private[queries] def propagateComponentsWithRounds(pairs: DataFrame,
       smallGraphCeiling: Long = guardCeilingRows(PairRowBytes)): (DataFrame, Int) = {
-    val (df, rounds, _) = propagateComponentsFull(pairs, smallGraphCeiling)
-    (df, rounds)
-  }
-
-  private def propagateComponentsFull(pairs: DataFrame,
-      smallGraphCeiling: Long = guardCeilingRows(PairRowBytes))
-      : (DataFrame, Int, Option[Long]) = {
     // One orientation, lazily checkpointed: pairs' lineage (shingle+band
     // join) replays per consumer otherwise; the arm decision's count IS
     // the materializing action (one job, not checkpoint + count).
@@ -2221,7 +2007,7 @@ object Dedup {
       }
       import sess.implicits._
       val labels = (0 until n).map(j => (ids(j), find(ids(j))))
-      return (labels.toDF("doc_id", "cluster_id"), 0, Some(n.toLong))
+      return (labels.toDF("doc_id", "cluster_id"), 0)
     }
     // Undirected edge list, both orientations (cheap: reads the
     // checkpointed blocks, not the pair lineage).
@@ -2259,7 +2045,7 @@ object Dedup {
     // than a loud failure for a dedup pipeline, so refuse to return them.
     require(converged,
       s"component propagation did not converge within $rounds rounds")
-    (labels.select(col("doc_id"), col("label").as("cluster_id")), rounds, None)
+    (labels.select(col("doc_id"), col("label").as("cluster_id")), rounds)
   }
 
   /** Oracle: reachability closure via recursive CTE over the same J≥0.8
@@ -2317,13 +2103,9 @@ object Dedup {
     * the same struct: maximizing -doc_id IS minimizing doc_id, all in
     * long/double comparisons both engines share. The best-per-cluster
     * relation is #clusters-sized and attaches back to the clustered-doc
-    * stream under [[attachGuard]]: the r14 SmjScan census caught the
-    * planner leaving this join SortMergeJoin even post-AQE (the agg side
-    * sits above the checkpointed propagation leaf, whose stats don't
-    * survive the loop), which sorted BOTH output-sized streams. The
-    * guard keys on labeled's own count — a cheap read over its
-    * checkpointed blocks, and a true upper bound since best carries one
-    * row per cluster vs labeled's one per member (≥ 2 per cluster).
+    * stream unhinted: AQE sees its measured size after the aggregate's
+    * exchange and picks the join regime (PlanSpec pins that no
+    * sort-merge join survives to the final plan).
     */
   def keepBest(spark: SparkSession, sfDir: String): DataFrame = {
     // Quality = the ta_quality blend (documents carry no stored score;
@@ -2333,11 +2115,11 @@ object Dedup {
     val docs = TextAnalysis.quality(spark, sfDir)
       .select(col("doc_id"), col("quality_score"))
     // No checkpoint over the propagation output (round 20): the small
-    // arm returns a LocalRelation (driver rows — reuse is free and its
-    // count is known without a job), and the loop arm's labels are
-    // already narrow projections over the per-round checkpoint, so a
-    // second checkpoint bought nothing either way.
-    val (labeled, known) = propagateComponentsCounted(
+    // arm returns a LocalRelation (driver rows — reuse is free), and the
+    // loop arm's labels are already narrow projections over the
+    // per-round checkpoint, so a second checkpoint bought nothing either
+    // way.
+    val labeled = propagateComponents(
       minhash(spark, sfDir).select(col("doc_a"), col("doc_b")))
     // The join attaches quality to clustered docs only (left_semi-sized:
     // |labeled| ≪ |docs| — near-dup members), then one agg per cluster.
@@ -2346,8 +2128,7 @@ object Dedup {
       .agg(max(struct(col("quality_score").as("q"),
         (-col("doc_id")).as("nd"))).as("b"))
       .select(col("cluster_id"), (-col("b.nd")).as("keep_id"))
-    labeled.join(attachGuard(known.getOrElse(labeled.count()))(best),
-        Seq("cluster_id"))
+    labeled.join(best, Seq("cluster_id"))
       .select(col("doc_id"), col("cluster_id"), col("keep_id"))
   }
 
@@ -2916,10 +2697,8 @@ object Dedup {
       .distinct()
 
   private[queries] def deltaCandidates(newB: DataFrame, allB: DataFrame): DataFrame =
-    // Un-COUNTED since round 20 (the minhashFrom rationale): the pair
-    // joins' regime is picked by AQE from the measured stage size — the
-    // per-step plan-time count was one serial job + barrier per delta
-    // step. The LAZY checkpoint stays for the plan (not the blocks):
+    // No count: the first consumer stage materializes the blocks. The
+    // LAZY checkpoint is for the plan (not the blocks):
     // deltaVerify inlines this subtree ~7× (candidate-doc union ×2,
     // final gate, and the shCand semi-join fans it into sizes/shNew/
     // shAll), and dd_delta measured ~1 s of per-action driver planning
@@ -2931,22 +2710,9 @@ object Dedup {
     * ever materialize.
     */
   private[queries] def deltaVerify(sh: DataFrame, candidates: DataFrame,
-      isNew: Column => Column, threshold: Double,
-      corpusRows: Long = -1L): DataFrame = {
-    // Guarded attaches keyed on the corpus-count proxy: sh arrives
-    // checkpointed from every product caller, so the count is free
-    // (spec topologies are tiny either way). A caller running several
-    // steps over ONE checkpointed sh (the chain) passes the count in —
-    // the same number re-counted per step is a cached-block job each
-    // time. The candidate PAIR set is un-checkpointed and un-hinted
-    // since round 20: AQE picks its joins' regime from the measured
-    // stage size (the GraftSession thresholds mirror pairGuard's three
-    // regimes), and the distinct's exchange is reused across both
-    // consumers.
-    val g = attachGuard(if (corpusRows >= 0) corpusRows else sh.count()) _
-    val candG = candidates
-    val candDocs = g(candidates.select(col("doc_a").as("doc_id"))
-      .union(candidates.select(col("doc_b").as("doc_id"))).distinct())
+      isNew: Column => Column, threshold: Double): DataFrame = {
+    val candDocs = candidates.select(col("doc_a").as("doc_id"))
+      .union(candidates.select(col("doc_b").as("doc_id"))).distinct()
     val shCand = sh.join(candDocs, Seq("doc_id"), "left_semi")
     val sizes = shCand.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val shNew = shCand.filter(isNew(col("doc_id")))
@@ -2963,10 +2729,10 @@ object Dedup {
       .groupBy(least(col("doc_n"), col("doc_o")).as("doc_a"),
         greatest(col("doc_n"), col("doc_o")).as("doc_b"))
       .agg(count(lit(1)).as("c"))
-      .join(candG, Seq("doc_a", "doc_b"), "left_semi")
+      .join(candidates, Seq("doc_a", "doc_b"), "left_semi")
     common
-      .join(g(sizes.select(col("doc_id").as("doc_a"), col("n").as("na"))), Seq("doc_a"))
-      .join(g(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb"))), Seq("doc_b"))
+      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
+      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), Seq("doc_b"))
       .withColumn("jaccard",
         col("c").cast("double") / (col("na") + col("nb") - col("c")).cast("double"))
       .filter(col("jaccard") >= threshold)
@@ -3054,10 +2820,7 @@ object Dedup {
     * candidate docs (a candidate-bounded semi-join — the same access
     * pattern deltaDedup documents); the staged index is never re-derived
     * from it, which DedupSpec pins on the candidate plan (no minhash
-    * aggregate anywhere, staged side read from parquet). `corpusRows` is
-    * the chain's hoisted attach-guard proxy (sh is checkpointed once for
-    * the whole chain; each step re-counting it was one cached-block job
-    * per step for the same number).
+    * aggregate anywhere, staged side read from parquet).
     */
   /** Declared-read-schema fence for the staged index writes (ADVICE
     * r19): the explicit read schemas exist so an empty batch stays
@@ -3076,15 +2839,15 @@ object Dedup {
   }
 
   private[queries] def deltaIngestStep(spark: SparkSession, sh: DataFrame,
-      isBatch: Column => Column, indexPaths: Seq[String], batchPath: String,
-      corpusRows: Long): DataFrame = {
+      isBatch: Column => Column, indexPaths: Seq[String],
+      batchPath: String): DataFrame = {
     val batchB = bandedBuckets(sh.filter(isBatch(col("doc_id"))), BandRows)
     assertStagedSchema(batchB, BucketSchema, "deltaIngestStep")
     batchB.write.mode("overwrite").parquet(batchPath)
     def readB(p: String): DataFrame = spark.read.schema(BucketSchema).parquet(p)
     val newB = readB(batchPath)
     val allB = (indexPaths.map(readB) :+ newB).reduce(_.unionByName(_))
-    deltaVerify(sh, deltaCandidates(newB, allB), isBatch, 0.8, corpusRows)
+    deltaVerify(sh, deltaCandidates(newB, allB), isBatch, 0.8)
   }
 
   /** dd_delta_chain — the multi-batch lifecycle end-to-end: seed the
@@ -3109,13 +2872,10 @@ object Dedup {
       val b2 = s"$dir/b2.parquet"
       seedDeltaIndex(sh,
         c => c % m =!= DeltaResidue && c % m =!= DeltaResidue2, seed)
-      // One cached-block count serves both steps' attach guards (the
-      // seed write above materialized the checkpoint).
-      val nSh = sh.count()
       val s1 = deltaIngestStep(spark, sh, _ % m === DeltaResidue,
-        Seq(seed), b1, nSh)
+        Seq(seed), b1)
       val s2 = deltaIngestStep(spark, sh, _ % m === DeltaResidue2,
-        Seq(seed, b1), b2, nSh)
+        Seq(seed, b1), b2)
       // ONE eager materialization for the whole chain (round 19 fusion):
       // nothing staged is ever mutated, so neither step needs its own
       // checkpoint barrier — the union job computes both verify subtrees
@@ -3602,12 +3362,12 @@ object Dedup {
     // substrings, exactly as in round 5.
     val docGrams = gramsPos.select(col("doc_id"), col("g")).distinct()
     // Lazy checkpoint (round 19, second pass): the hot set is consumed by
-    // TWO actions — the admission count below and the returned tail — and
-    // each rebuilt it from scratch (a full docGrams distinct + df
+    // TWO actions — the coolDoc checkpoint below and the returned tail —
+    // and each rebuilt it from scratch (a full docGrams distinct + df
     // aggregate per action; exchange reuse never crosses an action
-    // boundary). The admission job's broadcast build materializes the
+    // boundary). The coolDoc job's broadcast build materializes the
     // blocks (one consumer at a time — no concurrent-first-compute
-    // hazard), and the tail's two anti-join builds read them.
+    // hazard), and the tail's anti-join build reads them.
     val hot = docGrams.groupBy(col("g")).agg(count(lit(1)).as("df"))
       .filter(col("df") > ShingleDfCap)
       .select(col("g"))
@@ -3621,15 +3381,16 @@ object Dedup {
       .localCheckpoint()
     val coolPos = gramsPos.join(broadcast(hot), Seq("g"), "left_anti")
     // Three consumers below (two doc-id prefilters + the final pair
-    // gate): checkpointed so the admission join runs once. The table is
-    // the admitted PAIR LIST — output-sized, the smallest thing in the
-    // query.
-    // The admission self-join is left to the planner: BOTH sides are
-    // the corpus-linear window table — a forced hash build here failed
-    // every 100× lap this round (per-partition builds of a ~300M-row
-    // side × 32 concurrent tasks exhaust the heap; the attachGuard rule
-    // covers bounded relations, not corpus×corpus self-joins, where a
-    // spillable sort-merge is the right default).
+    // gate): checkpointed so the admission join runs once. Eager: the
+    // tail job reads it from three stages at once, and a lazy
+    // checkpoint would be first-materialized by each of them. The table
+    // is the admitted PAIR LIST — output-sized, the smallest thing in
+    // the query.
+    // The admission self-join carries no hint: BOTH sides are the
+    // corpus-linear window table — a forced hash build here failed
+    // every 100× lap in round 13 (per-partition builds of a ~300M-row
+    // side × 32 concurrent tasks exhaust the heap), and a spillable
+    // sort-merge is the right plan for a corpus×corpus self-join.
     val admitted = coolDoc.select(col("doc_id").as("doc_a"), col("g"))
       .join(coolDoc.select(col("doc_id").as("doc_b"), col("g")), Seq("g"))
       .filter(col("doc_a") < col("doc_b"))
@@ -3637,17 +3398,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= SubstrMinShared)
       .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint(eager = false)
-    // The materializing action (lazy checkpoint + count = one job): the
-    // guard count for broadcasting the output-class admitted set onto
-    // the corpus-sized position streams below. Above the ceiling the
-    // semi-joins fall back to a hash build of the admitted side — the
-    // streams still never sort (the jaccardPairsCapped join-physics
-    // note).
-    val nAdmitted = admitted.count()
-    def admittedGuarded(df: DataFrame): DataFrame =
-      if (nAdmitted <= guardCeilingRows(PairRowBytes)) broadcast(df)
-      else df.hint("SHUFFLE_HASH")
+      .localCheckpoint()
     // doc_a positions whose window occurs ANYWHERE in doc_b (distinct: a
     // window repeated in doc_b must not duplicate the position row), then
     // islands: consecutive positions share (i − row_number) and collapse
@@ -3661,7 +3412,7 @@ object Dedup {
     // end (a doc can be admitted with one partner yet share windows with
     // a non-admitted third).
     val sharedPos = coolPos
-      .join(admittedGuarded(admitted.select(col("doc_a").as("doc_id")).distinct()),
+      .join(admitted.select(col("doc_a").as("doc_id")).distinct(),
         Seq("doc_id"), "left_semi")
       .select(col("doc_id").as("doc_a"), col("i"), col("g"))
       // SHUFFLE_HASH on the doc_b side: it is the DISTINCT admitted-doc
@@ -3670,15 +3421,14 @@ object Dedup {
       // while the streamed side carries every POSITION of the admitted
       // doc_a's — the default sort-merge would sort that larger side.
       .join(coolDoc
-          .join(admittedGuarded(
-            admitted.select(col("doc_b").as("doc_id")).distinct()),
+          .join(admitted.select(col("doc_b").as("doc_id")).distinct(),
             Seq("doc_id"), "left_semi")
           .select(col("doc_id").as("doc_b"), col("g"))
           .hint("SHUFFLE_HASH"),
         Seq("g"))
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"), col("i")).distinct()
-      .join(admittedGuarded(admitted), Seq("doc_a", "doc_b"), "left_semi")
+      .join(admitted, Seq("doc_a", "doc_b"), "left_semi")
     val byPair = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_a"), col("doc_b")).orderBy(col("i"))
     sharedPos

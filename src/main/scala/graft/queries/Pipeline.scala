@@ -67,7 +67,7 @@ object Pipeline {
     // ingest pipeline materializes between its dedup passes; PlanSpec
     // gates that the final plan reads no parquet at all and that the
     // stage-1+2 subtree scans `documents` exactly once.
-    // Lazy (round 19): the funnel's capped-basis count is the
+    // Lazy (round 19): the funnel's capped-basis checkpoint is the
     // materializing action (a single scan of this relation) — the eager
     // form paid a separate materialization job first.
     val kept = exactKeptFrom(rawDocs).localCheckpoint(eager = false)
@@ -95,29 +95,30 @@ object Pipeline {
     val pairs = Dedup.minhashFrom(shinglesOf(kept))
       .select(col("doc_a"), col("doc_b"))
     // No checkpoint over the propagation output (round 20, the keepBest
-    // rationale): the small arm returns a LocalRelation whose row count
-    // is known driver-side for free, the loop arm's labels are already
-    // projections over the per-round checkpoint — and BOTH guards below
-    // key on that one count (|best| = #clusters ≤ |labeled| and
-    // |losers| < |labeled| — a tighter proxy than the previous
-    // kept.count(), whose job this deletes).
-    val (labeled, known) = Dedup.propagateComponentsCounted(pairs)
-    val nLabeled = known.getOrElse(labeled.count())
+    // rationale): the small arm returns a LocalRelation, and the loop
+    // arm's labels are already projections over the per-round
+    // checkpoint.
+    val labeled = Dedup.propagateComponents(pairs)
     val best = labeled
       .join(kept.select(col("doc_id"), col("quality_score")), Seq("doc_id"))
       .groupBy(col("cluster_id"))
       .agg(max(struct(col("quality_score").as("q"),
         (-col("doc_id")).as("nd"))).as("b"))
       .select(col("cluster_id"), (-col("b.nd")).as("keep_id"))
-    // Losers = clustered docs that are not their cluster's keeper. Both
-    // attaches are guarded — the survivor corpus, the stream carrying
-    // full text, is never sorted in either guard regime.
+    // Losers = clustered docs that are not their cluster's keeper.
     val losers = labeled
-      .join(Dedup.attachGuard(nLabeled)(best), Seq("cluster_id"))
+      .join(best, Seq("cluster_id"))
       .filter(col("doc_id") =!= col("keep_id"))
       .select(col("doc_id"))
-
-    kept.join(Dedup.attachGuard(nLabeled)(losers), Seq("doc_id"), "left_anti")
+    // The one join-regime hint left in the LSH funnels. The planner
+    // cannot size `losers` (its estimate multiplies through the joins
+    // above), so unhinted it shuffles `kept`, the text-carrying
+    // survivor corpus, before AQE converts the join to a broadcast:
+    // alternating isolation pairs at sf0.1 on 4 cores read
+    // pipeline_clean_corpus at 5.07 / 5.50 / 4.65 s unhinted vs
+    // 4.26 / 4.38 / 4.34 s at the parent. `losers` is output-class
+    // (near-dup members, at most the clustered docs).
+    kept.join(broadcast(losers), Seq("doc_id"), "left_anti")
   }
 
   /** pipeline_v2 — the flagship with the eval-set DECONTAMINATION pass
@@ -158,7 +159,6 @@ object Pipeline {
     // Checkpoint: stage 4 consumes the survivors TWICE (gram basis +
     // output anti-join base) — without it the whole stage-0–3 chain
     // would replay per consumer (the exactKept lesson, round 5).
-    // Lazy: trainSurv.count() (the stage-4 attach guard) materializes.
     val surv = cleanSurvivorsFrom(rawDocs).localCheckpoint(eager = false)
     // 8-grams hash-compacted before the distinct (the dd_decontaminate
     // rationale): grams are internal — only overlap membership reaches
@@ -184,9 +184,7 @@ object Pipeline {
       .join(evalGrams.join(broadcast(hot), Seq("gram"), "left_anti")
         .select(col("gram")), Seq("gram"), "left_semi")
       .select(col("doc_id")).distinct()
-    projectOut(trainSurv.join(
-      Dedup.attachGuard(trainSurv.count())(contaminated),
-      Seq("doc_id"), "left_anti"))
+    projectOut(trainSurv.join(contaminated, Seq("doc_id"), "left_anti"))
   }
 
   /** Stages 1+2 (quality gate, exact dedup) — the survivor corpus stage 3

@@ -172,39 +172,31 @@ class PlanSpec extends SparkSuite {
   }
 
   test("minhash family: no pair-stream sort-merge join survives to the executed plan") {
-    // The attachGuard discipline (round 13) still pins the corpus-bounded
-    // attaches (doc-id sets, sizes) STATICALLY: they broadcast under the
-    // corpus-count ceiling and hash-build above it. The candidate PAIR
-    // set's own joins moved to runtime regimes in round 20: the
-    // plan-time pairGuard count cost one serial checkpoint+count barrier
-    // per funnel, and AQE re-plans those joins from the MEASURED stage
-    // size under the GraftSession thresholds that mirror the guard's
-    // three regimes — broadcast ≤ 64 MB runtime bytes (the guards' own
-    // raw-byte budget), shuffled-hash while post-shuffle partitions stay
-    // ≤ 32 MB (the guard's per-partition hash-build bound), and
-    // sort-merge past both, which is exactly the spill-safe MERGE the
-    // guard's top regime also chose — at that scale a sort IS the
-    // answer. So the pin is now on the EXECUTED (final adaptive) plan:
-    // at test scale every pair relation is tiny and a surviving
-    // SortMergeJoin means the runtime conversion regressed. (mm_phash
-    // is the documented exception: its corpus-linear int-keyed
-    // self-join is left to the planner.)
+    // No join in these entries carries a plan-time regime hint: AQE
+    // re-plans each one from the MEASURED stage sizes (the rule lives
+    // at GraftSession; JoinRegimeSpec pins its three regimes). So the
+    // pin is on the EXECUTED (final adaptive) plans: at test scale every
+    // pair and per-doc relation is tiny, and a surviving SortMergeJoin
+    // means the runtime conversion regressed. Every plan the entry
+    // executes is read, checkpoint jobs included — dd_delta_chain's
+    // result, for one, is a checkpoint whose own plan joins nothing.
+    // (mm_phash is the documented exception: its corpus-linear
+    // int-keyed self-join is left to the planner.)
     Seq("dd_minhash", "dd_ngram_jaccard", "dd_editdist", "dd_delta",
-      "dd_decontaminate", "dd_decontaminate_fuzzy", "pipeline_clean_corpus")
+      "dd_decontaminate", "dd_decontaminate_fuzzy", "pipeline_clean_corpus",
+      "dd_keep_best", "dd_clusters", "dd_substring", "dd_delta_chain",
+      "pipeline_v2", "dd_minhash_staged")
       .foreach { q =>
-        val df = SparkEntry.queries(q)(spark, sf)
-        // collect, not a noop write: the write wraps the plan in its own
-        // QueryExecution, leaving df's AdaptiveSparkPlan un-executed.
-        df.collect()
-        val full = df.queryExecution.executedPlan.toString
-        assert(full.contains("isFinalPlan=true"),
-          s"$q: expected the final adaptive plan after execution:\n$full")
-        // toString prints the final plan followed by the INITIAL plan,
-        // whose pre-conversion SortMergeJoins are expected — assert on
-        // the final section only.
-        val p = full.split("== Initial Plan ==")(0)
-        assert(!p.contains("SortMergeJoin"),
-          s"$q: a pair-stream join stayed sort-merge at runtime:\n$p")
+        val adaptive = ExecutedPlans.of(spark)(SparkEntry.queries(q)(spark, sf).collect())
+          .filter(_.contains("AdaptiveSparkPlan"))
+        assert(adaptive.nonEmpty, s"$q: no adaptive plan was executed")
+        adaptive.foreach { full =>
+          assert(full.contains("isFinalPlan=true"),
+            s"$q: expected the final adaptive plan after execution:\n$full")
+          val p = ExecutedPlans.finalSection(full)
+          assert(!p.contains("SortMergeJoin"),
+            s"$q: a join stayed sort-merge at runtime:\n$p")
+        }
       }
   }
 

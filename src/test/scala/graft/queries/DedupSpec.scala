@@ -689,16 +689,15 @@ class DedupSpec extends SparkSuite {
     val b1Path = s"$dir/b1.parquet"
     val b2Path = s"$dir/b2.parquet"
     Dedup.seedDeltaIndex(sh, c => c % 10 =!= 3 && c % 10 =!= 7, seedPath)
-    val nSh = sh.count()
     def fileSet(p: String): Set[String] =
       new java.io.File(p).listFiles().map(_.getName).toSet
     val seedN = spark.read.parquet(seedPath).count()
     val seedFiles = fileSet(seedPath)
     val s1 = Dedup.deltaIngestStep(spark, sh, _ % 10 === 3,
-      Seq(seedPath), b1Path, nSh)
+      Seq(seedPath), b1Path)
     val afterB1 = seedN + spark.read.parquet(b1Path).count()
     val s2 = Dedup.deltaIngestStep(spark, sh, _ % 10 === 7,
-      Seq(seedPath, b1Path), b2Path, nSh)
+      Seq(seedPath, b1Path), b2Path)
     val afterB2 = afterB1 + spark.read.parquet(b2Path).count()
     // APPEND semantics at the file grain: each step publishes exactly its
     // batch's bucket rows as its OWN table under the index root — nothing
@@ -882,59 +881,5 @@ class DedupSpec extends SparkSuite {
         s"cluster $cl keeps $keep, brute force says $expect " +
           s"(qualities ${mem.toSeq.sorted.map(d => d -> quality(d))})")
     }
-  }
-
-  test("pair guard: keyed on the pair set's OWN count, not the corpus proxy") {
-    // ADVICE r13 (medium): a candidate PAIR set grows super-linearly on
-    // duplication-heavy corpora, so a sub-ceiling CORPUS can still carry
-    // an over-ceiling pair list — guarding it on the corpus-count proxy
-    // would force a driver-OOM broadcast. pairGuard keys on the
-    // relation's own cardinality: fixture with corpus (5 rows) UNDER an
-    // injected ceiling of 6 and its all-pairs set (10 rows) OVER it —
-    // the old proxy guard would broadcast; the own-count guard must
-    // hash-build. Both regimes row-identical (a guard chooses a plan,
-    // never an answer).
-    val sess = spark
-    import sess.implicits._
-    val corpusIds = (1L to 5L)
-    val pairsDf = (for { a <- corpusIds; b <- corpusIds if a < b }
-      yield (a, b)).toDF("doc_a", "doc_b").localCheckpoint()
-    assert(pairsDf.count() == 10)
-    val stream = (for { a <- corpusIds; b <- corpusIds; r <- 1 to 3 }
-      yield (a, b, r)).toDF("doc_a", "doc_b", "r")
-    // ceiling 6: corpus (5) under it, pair set (10) over it. The width
-    // backs out the HashedRelation overhead factor the ceiling divides
-    // by (ADVICE r14: the budget prices the in-memory hash structure,
-    // not raw unsafe-row bytes).
-    val rowBytesFor6 =
-      Dedup.GuardBroadcastBudgetBytes / (6 * Dedup.HashedRelationOverhead)
-    assert(Dedup.guardCeilingRows(rowBytesFor6) == 6L)
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val (pOver, gotOver) = try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // hashCeilingOverride pins the MIDDLE regime: the injected huge
-      // rowBytes would otherwise also shrink the derived hash-build
-      // ceiling below the pair count and (correctly) select MERGE —
-      // the third regime has its own test in FuzzyFloorSpec.
-      val joined = stream.join(
-        Dedup.pairGuard(pairsDf, rowBytes = rowBytesFor6,
-          hashCeilingOverride = 100L),
-        Seq("doc_a", "doc_b"), "left_semi")
-      (joined.queryExecution.sparkPlan.toString,
-        joined.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-    assert(!pOver.contains("BroadcastHashJoin"),
-      s"an over-ceiling pair set must not broadcast even when the corpus is small:\n$pOver")
-    assert(pOver.contains("ShuffledHashJoin") && !pOver.contains("SortMergeJoin"),
-      s"over-ceiling pair attach must hash-build, never sort:\n$pOver")
-    val under = stream.join(Dedup.pairGuard(pairsDf),
-      Seq("doc_a", "doc_b"), "left_semi")
-    val pUnder = under.queryExecution.sparkPlan.toString
-    assert(pUnder.contains("BroadcastHashJoin"),
-      s"an under-ceiling pair set must still broadcast:\n$pUnder")
-    val gotUnder = under.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(gotOver == gotUnder, "the guard must choose a plan, never change rows")
-    assert(gotUnder.nonEmpty)
   }
 }

@@ -67,44 +67,4 @@ class FuzzyFloorSpec extends SparkSuite {
           "(HAVING count(*) >= floor on the shingle basis) before shipping")
     }
   }
-
-  test("pairGuard's third regime: above the hash-build ceiling the pair set sort-merges") {
-    val sess = spark
-    import sess.implicits._
-    val rel = (1L to 20L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-      .localCheckpoint()
-    val stream = (1L to 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // Pair count (20) over the broadcast ceiling (rowBytes sized so the
-      // ceiling is 0) AND over an injected hash ceiling of 10 -> the
-      // guard must emit a MERGE hint: a hash build is not spillable, and
-      // an unhinted join would still hash-build under the session-wide
-      // preferSortMergeJoin=false.
-      val merged = stream.join(
-        Dedup.pairGuard(rel, rowBytes = Dedup.GuardBroadcastBudgetBytes,
-          hashCeilingOverride = 10L),
-        Seq("doc_a", "doc_b"), "left_semi")
-      val plan = merged.queryExecution.sparkPlan.toString
-      assert(plan.contains("SortMergeJoin"),
-        s"above the hash-build ceiling the pair attach must sort-merge (spillable):\n$plan")
-      // Same relation under the hash ceiling: hash-build as before.
-      val hashed = stream.join(
-        Dedup.pairGuard(rel, rowBytes = Dedup.GuardBroadcastBudgetBytes,
-          hashCeilingOverride = 100L),
-        Seq("doc_a", "doc_b"), "left_semi")
-      val plan2 = hashed.queryExecution.sparkPlan.toString
-      assert(plan2.contains("ShuffledHashJoin"),
-        s"under the hash-build ceiling the pair attach must hash-build:\n$plan2")
-      // Both regimes choose a plan, never an answer.
-      assert(merged.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
-        hashed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
-      // The derived ceiling scales with the shuffle-partition count and
-      // prices the HashedRelation overhead, not raw bytes.
-      val parts = spark.conf.get("spark.sql.shuffle.partitions").toLong
-      assert(Dedup.hashBuildCeilingRows(spark, 16L) ==
-        Dedup.HashBuildBytesPerPartition * parts / (16L * Dedup.HashedRelationOverhead))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-  }
 }

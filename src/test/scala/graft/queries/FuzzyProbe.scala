@@ -32,7 +32,6 @@ object FuzzyProbe {
       println(s"[fuzzyprobe]   docs=${s.count()}")
       s
     }
-    val nDocs = sigs.count()
     val buckets = Dedup.bucketsFromSigs(sigs, 2)
     val evalB = buckets.filter(col("doc_id") % evalMod === 0)
       .select(col("band"), col("bh"), col("doc_id").as("eval_doc"))
@@ -47,8 +46,7 @@ object FuzzyProbe {
       c
     }
     val candidates = timed("sketch-cut+distinct") {
-      val c = Dedup.sketchCutPairs(candRaw, sigs, nDocs, 0.5,
-        "train_doc", "eval_doc").distinct().localCheckpoint()
+      val c = Dedup.sketchCutPairs(candRaw, sigs, 0.5, "train_doc", "eval_doc").distinct().localCheckpoint()
       println(s"[fuzzyprobe]   surviving pairs=${c.count()}")
       c
     }

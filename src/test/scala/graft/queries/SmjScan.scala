@@ -1,9 +1,12 @@
 package graft.queries
 
-/** Scratch instrument: static join-strategy census over the heavy query
+import graft.ExecutedPlans
+
+/** Scratch instrument: join-strategy census over the heavy query
   * surface (SortMergeJoin / ShuffledHashJoin / BroadcastHashJoin counts
-  * per executed plan). This is how the round-13 attach-guard sweep was
-  * scoped and verified — run it after touching any join-shaped operator.
+  * over the FINAL adaptive plans each entry executes, checkpoint jobs
+  * included — the joins that actually ran, not AQE's pre-conversion
+  * initial plan). Run it after touching any join-shaped operator.
   *
   *   sbt "Test/runMain graft.queries.SmjScan"
   */
@@ -18,11 +21,11 @@ object SmjScan {
       "dd_ngram_jaccard","ta_tfidf","ev_sessionize","ev_attribution","dd_embed_auto")
     for (q <- qs) {
       try {
-        val p = graft.SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
-        val smj = p.linesIterator.count(_.contains("SortMergeJoin"))
-        val shj = p.linesIterator.count(_.contains("ShuffledHashJoin"))
-        val bhj = p.linesIterator.count(_.contains("BroadcastHashJoin"))
-        println(f"[smjscan] $q%-24s SMJ=$smj SHJ=$shj BHJ=$bhj")
+        val ran = ExecutedPlans.of(spark)(graft.SparkEntry.queries(q)(spark, sf).collect())
+          .map(ExecutedPlans.finalSection)
+        def n(join: String) = ran.map(_.linesIterator.count(_.contains(join))).sum
+        println(f"[smjscan] $q%-24s SMJ=${n("SortMergeJoin")} " +
+          s"SHJ=${n("ShuffledHashJoin")} BHJ=${n("BroadcastHashJoin")}")
       } catch { case e: Exception => println(s"[smjscan] $q ERROR ${e.getMessage.take(60)}") }
     }
     spark.stop()

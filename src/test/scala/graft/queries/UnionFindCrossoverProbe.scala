@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   *
   * Round 19 added the driver-side union-find arm to component
   * propagation for pair graphs under guardCeilingRows(PairRowBytes)
-  * (= 4M rows ≈ 64 MB raw — the same class every attachGuard broadcast
-  * ships), with the distributed pointer-doubling loop unchanged above.
+  * (= 4M rows ≈ 64 MB raw — the size class of a pair-relation
+  * broadcast), with the distributed pointer-doubling loop unchanged above.
   * The arm-equivalence was spec-proven, and the fast arm's win was
   * measured at organic sizes (dd_clusters 2.59 → 1.46 s isolation), but
   * the CEILING itself was argued, not measured: no reading existed at a
