@@ -283,32 +283,17 @@ object CorpusOps {
 
   /** dd_decontaminate_fuzzy_staged — the staged-basis deployment form
     * as a correctness-gated entry (round 17, the dd_minhash_staged
-    * rationale): stage the compacted basis, point the session dispatch
-    * at it for the duration of plan CONSTRUCTION (the dispatch reads
-    * the conf when `sharedBasis` resolves, so the built plan carries
-    * the staged parquet relation; the finally-unset cannot leak into
-    * any other entry), and run the same query. Same oracle as
-    * dd_decontaminate_fuzzy. This is the family where staging wins
+    * rationale): stage the compacted basis to a fresh directory, pass it
+    * to the `sharedBasis` dispatch, and run the same query. Same oracle
+    * as dd_decontaminate_fuzzy. This is the family where staging wins
     * robustly (STAGED_r17: 26.9 → 18.8 s at the 100× staging, R* = 1
     * in both measured sessions) — the entry benches the form a real
     * ingest pipeline would run.
-    *
-    * Concurrency contract — a RUNTIME GUARD since round 19
-    * ([[Dedup.withEntryStaging]], VERDICT r18 #6): `queries()` entries
-    * execute SERIALLY per session (the Verify/Bench/CrossCheck driver
-    * contract) — the dispatch resolves the conf once at plan
-    * CONSTRUCTION, and a concurrent entry opening a second staging
-    * window now fails loudly instead of racing the session conf. The
-    * prior conf value is RESTORED, not unset (ADVICE r17): in a session
-    * legitimately running the deployment form (conf set at ingest),
-    * this entry must not degrade every subsequent signature-family
-    * query to recompute.
     */
   def decontaminateFuzzyStaged(spark: SparkSession, sfDir: String): DataFrame = {
     val staging = Dedup.entryStagingDir(sfDir)
     Dedup.stageBasis(spark, sfDir, staging)
-    Dedup.withEntryStaging(spark, Dedup.StagingConfKey, staging)(
-      decontaminateFuzzy(spark, sfDir))
+    decontaminateFuzzyCoarse(spark, sfDir, SketchCutMinMass, -1L, Some(staging))
   }
 
   /** Core with the sketch-cut threshold injectable so the spec can force
@@ -396,17 +381,18 @@ object CorpusOps {
 
   private[queries] def decontaminateFuzzyCut(spark: SparkSession,
       sfDir: String, cutMinMass: Long): DataFrame =
-    decontaminateFuzzyCoarse(spark, sfDir, cutMinMass, -1L)
+    decontaminateFuzzyCoarse(spark, sfDir, cutMinMass, -1L, None)
 
   private[queries] def decontaminateFuzzyCoarse(spark: SparkSession,
-      sfDir: String, cutMinMass: Long, coarseMinMass: Long): DataFrame = {
+      sfDir: String, cutMinMass: Long, coarseMinMass: Long,
+      staging: Option[String]): DataFrame = {
     // Capped over the FULL corpus basis before signing (the cap-ordering
     // invariant minhashFrom documents); checkpointed — signatures,
     // candidate semi-join, and verification sizes all branch off it.
     // Lazy (round 19): the occ-totals aggregate below is the
     // materializing action — a single scan of this relation — so the
     // eager checkpoint's separate job is saved (the minhashFrom note).
-    val sh = Dedup.cappedShingles(spark, sfDir).localCheckpoint(eager = false)
+    val sh = Dedup.cappedShingles(spark, sfDir, staging).localCheckpoint(eager = false)
     // Signatures are materialized ONCE and serve twice: band keys for
     // candidate generation, and the per-pair Jaccard sketch that prunes
     // the candidate stream (round 14). At τ = 0.5 the 2-row bands are

@@ -189,7 +189,7 @@ object Dedup {
 
   /** dd_minhash — LSH-banded near-dup detection, exact-verified. */
   def minhash(spark: SparkSession, sfDir: String): DataFrame =
-    minhashFrom(sharedBasis(spark, sfDir))
+    minhashFrom(sharedBasis(spark, sfDir, None))
 
   /** The 100 TB shape of dd_minhash: shingles are materialized ONCE to a
     * staging location at corpus-ingest time, and both the signature pass
@@ -199,10 +199,10 @@ object Dedup {
     *
     * Round 17 (VERDICT r16 #1): this is now the signature families'
     * PRODUCTION DEPLOYMENT FORM, behind the [[sharedBasis]] dispatch —
-    * stage once per corpus ingest ([[stageBasis]]), point
-    * `spark.graft.shingleStaging` at it, and every signature-family
-    * consumer (dd_minhash, dd_decontaminate_fuzzy, the delta
-    * lifecycles) reads the staged table for the rest of the pipeline,
+    * stage once per corpus ingest ([[stageBasis]]), pass the staging
+    * directory, and every signature-family consumer (dd_minhash,
+    * dd_decontaminate_fuzzy, the delta lifecycles) reads the staged
+    * table for the rest of the pipeline,
     * exactly the materialize-once/read-many discipline the reference
     * builds its whole shuffle on (nMap×nReduce intermediate files,
     * mr/worker.go:86-124). The crossover is MEASURED, not argued
@@ -214,8 +214,8 @@ object Dedup {
     * 2.35 s, staged read 0.17 s), and even at 1× R* ≤ 4 — compaction
     * flipped the round-2 "staged is ~2× slower at sf0.1" measurement,
     * because the table being round-tripped is now 8 B longs instead of
-    * shingle strings. queries() still ships the recompute arm (conf
-    * unset) so every oracle states the self-contained form.
+    * shingle strings. queries() still ships the recompute arm (no
+    * staging) so every oracle states the self-contained form.
     *
     * Round 18 (VERDICT r17 #3 — the dd_minhash A/B settled): the r17
     * 2-pair sessions flipped sign between hosts (17.3→13.9 then
@@ -230,7 +230,7 @@ object Dedup {
     minhashFrom(spark.read.parquet(stageBasis(spark, sfDir, stagingDir)))
 
   /** dd_minhash_staged — the deployment form INSIDE the correctness
-    * gate (round 17): stage the compacted basis to a per-corpus tmp
+    * gate (round 17): stage the compacted basis to a fresh tmp
     * location, then run the signature pipeline off the staged table.
     * Same DuckDB oracle as dd_minhash — the dispatch differential
     * (StagedBasisSpec) promoted to a driver-verified rows+schema+hash
@@ -238,24 +238,20 @@ object Dedup {
     * every round rather than only by a spec.
     *
     * The entry stages and then immediately reads ITS OWN staging
-    * output (no conf dispatch, so no fence is needed for staleness),
-    * and [[entryStagingDir]] is pid-scoped, so a concurrent process's
-    * overwrite can never land under this read (ADVICE r17). Within a
-    * session the entry assumes the serial-driver contract like every
-    * *_staged member.
+    * output (no dispatch, so no fence is needed for staleness), and
+    * [[entryStagingDir]] is unique per invocation, so no concurrent
+    * run — in this process or another — writes under this read.
     */
   def minhashStagedEntry(spark: SparkSession, sfDir: String): DataFrame =
     minhashStaged(spark, sfDir, entryStagingDir(sfDir))
 
-  /** Deterministic per-corpus, per-PROCESS staging location for the
-    * *_staged entries (tmp-dir scoped; each invocation overwrites, so
-    * the entry is self-contained like every other `queries()` member).
-    * Keyed on the corpus basename plus an MD5 digest of the full path
-    * (ADVICE r17: String.hashCode can collide across corpora) and the
-    * JVM pid, so two concurrent bench/verify PROCESSES on one host
-    * never overwrite each other's staged table mid-read. Within one
-    * process the entries run serially (the Verify/Bench/CrossCheck
-    * driver contract), so one dir per corpus is race-free.
+  /** A fresh staging location for one *_staged invocation (tmp-dir
+    * scoped, so the entry is self-contained like every other `queries()`
+    * member). Keyed on the corpus basename plus an MD5 digest of the
+    * full path (ADVICE r17: String.hashCode can collide across corpora),
+    * the JVM pid, and a per-process invocation number, so no two runs —
+    * concurrent entries in one session or two bench/verify processes on
+    * one host — ever write the same staged table.
     */
   private[queries] def entryStagingDir(sfDir: String): String = {
     val digest = java.security.MessageDigest.getInstance("MD5")
@@ -265,16 +261,18 @@ object Dedup {
     sweepDeadEntryStaging()
     entryStagingCleanupHook
     s"${System.getProperty("java.io.tmpdir")}/graft_entry_staging_" +
-      s"${base}_${digest}_p$pid"
+      s"${base}_${digest}_p${pid}_${entryStagingSeq.incrementAndGet()}"
   }
+
+  private val entryStagingSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** Orphan control for the pid-scoped entry staging dirs (ADVICE r18):
     * every bench/verify PROCESS mints fresh `graft_entry_staging_*_p<pid>`
     * dirs, and before this round nothing deleted them — unbounded tmp
     * growth on long-lived hosts. Two mechanisms, both driver-side only:
     * a JVM shutdown hook deletes THIS process's dirs (prefix + `_p<pid>`
-    * suffix — the *_staged entries' own staging products, plus any
-    * sibling suffixed dir like the `_embed768`/`_ivf` variants), and
+    * plus the per-invocation `_<n>` suffix — the *_staged entries' own
+    * staging products), and
     * [[sweepDeadEntryStaging]] reaps dirs whose embedded pid is no
     * longer alive (a crashed or SIGKILLed run never reaches its hook).
     * Live foreign pids are never touched — their staged tables may be
@@ -287,8 +285,8 @@ object Dedup {
       Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
         .filter(f => f.isDirectory && f.getName.startsWith("graft_entry_staging_")
           // `_p<pid>` after the 12-hex digest, at the end or followed by
-          // a variant suffix — a bare contains("_p12") would also match
-          // a live pid 123's dir.
+          // the invocation suffix — a bare contains("_p12") would also
+          // match a live pid 123's dir.
           && f.getName.matches(s".*_[0-9a-f]{12}_p$pid(_.*)?"))
         .foreach(deleteRecursively)
     }, "graft-entry-staging-cleanup"))
@@ -304,8 +302,8 @@ object Dedup {
       .filter(f => f.isDirectory && f.getName.startsWith("graft_entry_staging_"))
       .foreach { f =>
         // The pid rides the dir name as `_p<digits>` right after the
-        // 12-hex path digest (possibly followed by a variant suffix
-        // like `_embed768` — never another `_p<digits>`).
+        // 12-hex path digest (followed by the `_<n>` invocation suffix
+        // — never another `_p<digits>`).
         val m = "_[0-9a-f]{12}_p(\\d+)".r.findFirstMatchIn(f.getName)
         val deadOwner = m.exists { mm =>
           val pid = mm.group(1).toLong
@@ -324,56 +322,15 @@ object Dedup {
     f.delete()
   }
 
-  /** The *_staged entries' conf window, promoted from a scaladoc contract
-    * to a RUNTIME GUARD (round 19, VERDICT r18 #6): set `key` to `dir`
-    * for the duration of plan construction, restore the prior value
-    * (never drop a session's ingest conf — ADVICE r17), and hold a
-    * process-wide gate so a CONCURRENT entry opening a staging window
-    * while one is in flight fails loudly instead of racing the session
-    * conf. The dispatches resolve their conf once at plan-construction
-    * time, so serial execution inside this window is exactly what makes
-    * the conf mutation safe; the gate turns that assumption into an
-    * invariant a violation cannot slip past.
-    */
-  private val entryStagingGate =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
-  private[queries] def withEntryStaging[T](spark: SparkSession, key: String,
-      dir: String)(body: => T): T = {
-    val holder = s"$key=$dir (thread ${Thread.currentThread().getName})"
-    if (!entryStagingGate.compareAndSet(null, holder))
-      throw new IllegalStateException(
-        "concurrent *_staged entries: a staging conf window is already " +
-          s"open [${entryStagingGate.get()}] while entering [$holder]; " +
-          "queries() entries must execute serially per session")
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, dir)
-    try body
-    finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-      entryStagingGate.set(null)
-    }
-  }
-
-  /** Session-conf key naming the staged-basis directory for the CURRENT
-    * corpus (the dd_embed_auto-style dispatch switch, VERDICT r16 #1).
-    * Unset — the default, and the state every `queries()` entry runs
-    * under — means recompute; the oracle surface is untouched.
-    */
-  private[graft] val StagingConfKey = "spark.graft.shingleStaging"
-
   /** Corpus-ingest staging step: write the COMPACTED shingle basis
     * (8 B xxhash64 longs per distinct (doc, shingle) — see
     * [[hashCompact]]) plus a provenance sidecar, and return the staged
     * table path. The sidecar records WHICH corpus the basis was staged
     * from: [[sharedBasis]] refuses to serve a basis staged from a
-    * different corpus (falls back to recompute), so a stale conf can
-    * slow a query but never corrupt one. Hadoop FileSystem API
-    * throughout — the staging dir is a path in whatever object store /
-    * DFS the session talks to, not assumed local.
+    * different corpus (falls back to recompute), so a stale staging
+    * directory can slow a query but never corrupt one. Hadoop
+    * FileSystem API throughout — the staging dir is a path in whatever
+    * object store / DFS the session talks to, not assumed local.
     */
   def stageBasis(spark: SparkSession, sfDir: String, stagingDir: String): String = {
     val staged = s"$stagingDir/shingles.parquet"
@@ -436,51 +393,27 @@ object Dedup {
   }
 
   /** The signature families' basis dispatch (round 17, VERDICT r16 #1):
-    * serve the staged compacted basis when the session names one AND its
-    * provenance matches the requested corpus; recompute otherwise. Both
-    * arms yield the same relation (staged IS `hashCompact(shingles)` by
-    * construction; StagedBasisSpec differentials pin dd_minhash /
-    * dd_decontaminate_fuzzy / dd_delta row identity across the switch),
-    * so consumers downstream — df cap, floor, signatures, verify joins —
-    * are arm-blind. The provenance fence makes the dispatch safe under
-    * operator error: a conf left pointing at another corpus's staging
-    * degrades to a recompute, never to wrong rows.
+    * serve the staged compacted basis when the caller names a `staging`
+    * directory AND its provenance matches the requested corpus; recompute
+    * otherwise. Both arms yield the same relation (staged IS
+    * `hashCompact(shingles)` by construction; StagedBasisSpec
+    * differentials pin dd_minhash / dd_decontaminate_fuzzy / dd_delta row
+    * identity across the switch), so consumers downstream — df cap,
+    * floor, signatures, verify joins — are arm-blind. The manifest fence
+    * — the corpus path, its content fingerprint (a corpus regenerated in
+    * place keeps its path but not its file mtimes, ADVICE r17) and the
+    * basis construction — makes the dispatch safe under operator error:
+    * a directory staged from another corpus or generation degrades to a
+    * recompute, never to wrong rows.
     */
-  private[queries] def sharedBasis(spark: SparkSession, sfDir: String): DataFrame =
-    stagedBasisFor(spark, sfDir) match {
-      case Some(p) => spark.read.parquet(p)
-      case None => hashedShingles(spark, sfDir)
-    }
-
-  private def stagedBasisFor(spark: SparkSession, sfDir: String): Option[String] =
-    spark.conf.getOption(StagingConfKey).flatMap { dir =>
-      try {
-        val conf = spark.sparkContext.hadoopConfiguration
-        val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-        val table = new org.apache.hadoop.fs.Path(s"$dir/shingles.parquet/_SUCCESS")
-        // The manifest fence: EVERY field must match — the path says
-        // which corpus the basis was staged from, the content
-        // fingerprint says which GENERATION of it (a corpus regenerated
-        // in place keeps its path but not its file mtimes — ADVICE
-        // r17's silent-staleness mode), the basis tag says how it was
-        // constructed. One shared reader for every staged family
-        // (round 19, VERDICT r18 #3).
-        if (!fs.exists(table)) None
-        else if (graft.sources.Manifest.matches(conf, dir, "basis_meta.json",
-            basisManifestFields(spark, sfDir)))
-          Some(s"$dir/shingles.parquet")
-        else {
-          System.err.println(s"[graft] $StagingConfKey=$dir was staged " +
-            s"from a different corpus or corpus generation " +
-            s"(wanted $sfDir at its current content) - recomputing basis")
-          None
-        }
-      } catch {
-        case e: Exception =>
-          System.err.println(s"[graft] staged-basis probe failed ($e) - recomputing")
-          None
-      }
-    }
+  private[queries] def sharedBasis(spark: SparkSession, sfDir: String,
+      staging: Option[String]): DataFrame =
+    staging.flatMap { dir =>
+      val table = s"$dir/shingles.parquet"
+      graft.sources.Manifest.lookup(spark.sparkContext.hadoopConfiguration,
+        dir, "basis_meta.json", Seq(table), basisManifestFields(spark, sfDir))
+        .map(_ => spark.read.parquet(table))
+    }.getOrElse(hashedShingles(spark, sfDir))
 
   /** Hash-compacted shingle basis (round 16, the r17 lead landed
     * early): the signature families carry `xxhash64(shingle)` — 8-byte
@@ -520,11 +453,12 @@ object Dedup {
     * verified Jaccard always score the same quantity (the cap-ordering
     * argument on minhashFrom). Hash-compacted (see [[hashCompact]]).
     */
-  private[queries] def cappedShingles(spark: SparkSession, sfDir: String): DataFrame = {
+  private[queries] def cappedShingles(spark: SparkSession, sfDir: String,
+      staging: Option[String]): DataFrame = {
     // sharedBasis (round 17): the staged compacted basis when the
-    // session names one, hashCompact(shingles) otherwise — the fuzzy
+    // caller names one, hashCompact(shingles) otherwise — the fuzzy
     // and delta families inherit the deployment form through this site.
-    val shRaw = sharedBasis(spark, sfDir)
+    val shRaw = sharedBasis(spark, sfDir, staging)
     shRaw.join(broadcast(hotShingles(shRaw)), Seq("shingle"), "left_anti")
   }
 
@@ -970,7 +904,7 @@ object Dedup {
     val plan = solveLsh(n, threshold, Some(sampledP1Cached(corpus, n, cacheTag, dim)))
     // cacheTag doubles as the staged-signature dispatch tag: both name
     // the corpus CONSTRUCTION over its physical files.
-    embedBucketedWithPlan(corpus, plan, threshold, dim, tag = cacheTag)
+    embedBucketedWithPlan(corpus, plan, threshold, None, dim, tag = cacheTag)
   }
 
   /** Per-corpus cache for the sampled selectivity table (ADVICE r11: it
@@ -1215,14 +1149,6 @@ object Dedup {
   private def packTk(tbl: Column, bkt: Column): Column =
     shiftleft(tbl.cast("long"), 32).bitwiseOR(bkt.cast("long"))
 
-  /** Session-conf key naming the staged hyperplane-SIGNATURE directory
-    * for the current corpus (round 18, VERDICT r17 #2 — the embedding
-    * twin of [[StagingConfKey]]). Unset — the default, and the state
-    * every `queries()` entry runs under — means recompute; the oracle
-    * surface is untouched.
-    */
-  private[graft] val EmbedStagingConfKey = "spark.graft.embedStaging"
-
   /** The signing pass as a relation: one row per vector, all L bucket
     * ids in one array — exactly the product [[stageEmbedSigs]] persists
     * and the recompute arm derives in-flight.
@@ -1260,12 +1186,12 @@ object Dedup {
 
   /** The staging write itself, with the corpus fingerprint EXPLICIT: the
     * public [[stageEmbedSigs]] derives + requires file lineage (the
-    * conf-dispatch fence must have an identity to verify); the delta
+    * dispatch fence must have an identity to verify); the delta
     * lifecycles pass the sentinel `"self-staged"` because they read
     * their own fresh tmp staging BY PATH within one call — the fence is
     * never consulted, and the sentinel can never match a real corpus
-    * fingerprint if a conf is mistakenly pointed at their staging
-    * ([[stagedEmbedSigsFor]] derives the real fp of the corpus it is
+    * fingerprint if a caller mistakenly passes their staging
+    * ([[sharedEmbedSigs]] derives the real fp of the corpus it is
     * asked about, which is a 32-hex MD5). One persistence idiom for
     * every embedding-family staged product (round 19, VERDICT r18 #2).
     */
@@ -1302,15 +1228,16 @@ object Dedup {
     CorpusCaches.corpusFpMd5(corpus)
 
   /** The embedding families' signature dispatch — [[sharedBasis]]'s
-    * twin: serve the staged signature relation when the session names
-    * one AND its provenance matches (corpus content, construction tag,
-    * dim, bits, tables); recompute otherwise. Both arms yield the same
-    * relation (staged IS computeEmbedSigs persisted — the expression is
-    * deterministic per seeded plane tensor), so every downstream
-    * consumer — base keys, probe expansion, cascade verify — is
-    * arm-blind; EmbedStagedSpec pins row identity across the switch.
-    * A stale or foreign conf degrades to recompute, never to wrong
-    * rows. The recompute arm localCheckpoints: sigs feeds TWO consumers
+    * twin: serve the staged signature relation when the caller names a
+    * `staging` directory AND its provenance matches (corpus content,
+    * construction tag, dim, bits, tables); recompute otherwise. Both
+    * arms yield the same relation (staged IS computeEmbedSigs persisted
+    * — the expression is deterministic per seeded plane tensor), so
+    * every downstream consumer — base keys, probe expansion, cascade
+    * verify — is arm-blind; EmbedStagedSpec pins row identity across the
+    * switch. A stale or foreign staging degrades to recompute, never to
+    * wrong rows, and a corpus with no file lineage is never served. The
+    * recompute arm localCheckpoints: sigs feeds TWO consumers
     * (base keys + probe expansion) and Spark duplicates unshared
     * subtrees — without it the N·L·B·dim signing pass runs twice per
     * query (~50 s per pass at d=768 on the 100× staging, EmbedHiProbe).
@@ -1318,45 +1245,18 @@ object Dedup {
     * checkpoint needed.
     */
   private[queries] def sharedEmbedSigs(corpus: DataFrame, tag: String,
-      plan: LshPlan, dim: Int): DataFrame = {
+      plan: LshPlan, dim: Int, staging: Option[String]): DataFrame = {
     val spark = corpus.sparkSession
-    stagedEmbedSigsFor(spark, corpus, tag, plan, dim) match {
-      case Some(p) => spark.read.parquet(p)
-      case None => computeEmbedSigs(corpus, plan, dim).localCheckpoint()
-    }
+    staging.flatMap { dir =>
+      graft.sources.Manifest.lookup(spark.sparkContext.hadoopConfiguration,
+        dir, "embed_meta.json", Seq(embedSigsPath(dir)),
+        embedManifestFields(tag, embedCorpusFp(corpus), plan, dim))
+        .map(_ => spark.read.parquet(embedSigsPath(dir)))
+    }.getOrElse(computeEmbedSigs(corpus, plan, dim).localCheckpoint())
   }
 
-  private def stagedEmbedSigsFor(spark: SparkSession, corpus: DataFrame,
-      tag: String, plan: LshPlan, dim: Int): Option[String] =
-    spark.conf.getOption(EmbedStagingConfKey).flatMap { dir =>
-      try {
-        val conf = spark.sparkContext.hadoopConfiguration
-        val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-        val table = new org.apache.hadoop.fs.Path(s"${embedSigsPath(dir)}/_SUCCESS")
-        val fp = embedCorpusFp(corpus)
-        // The manifest fence: ALL fields must match — content identity,
-        // construction, and the exact signing plan (the shared
-        // Manifest reader, round 19, VERDICT r18 #3).
-        if (!fs.exists(table) || fp.isEmpty) None
-        else if (graft.sources.Manifest.matches(conf, dir, "embed_meta.json",
-            embedManifestFields(tag, fp, plan, dim)))
-          Some(embedSigsPath(dir))
-        else {
-          System.err.println(s"[graft] $EmbedStagingConfKey=$dir does " +
-            s"not match (tag=$tag dim=$dim bits=${plan.bits} " +
-            s"tables=${plan.tables}, current corpus content) - recomputing signatures")
-          None
-        }
-      } catch {
-        case e: Exception =>
-          System.err.println(
-            s"[graft] staged-signature probe failed ($e) - recomputing")
-          None
-      }
-    }
-
   private[queries] def embedBucketedWithPlan(corpus: DataFrame, plan: LshPlan,
-      threshold: Double, dim: Int = EmbedDim,
+      threshold: Double, staging: Option[String], dim: Int = EmbedDim,
       cascadeCutFloor: Double = CascadeCutFloor,
       tag: String = "base"): DataFrame = {
     val bits = plan.bits
@@ -1370,7 +1270,7 @@ object Dedup {
     // `tag` names the corpus CONSTRUCTION (the sampledP1Cached cacheTag
     // discipline) so a staged relation can never serve a differently
     // constructed corpus over the same files.
-    val sigs = sharedEmbedSigs(corpus, tag, plan, dim)
+    val sigs = sharedEmbedSigs(corpus, tag, plan, dim, staging)
     // Base keys carry the SAME packed (table << 32 | bucket) long the
     // probe expression emits — the join runs on one 8-byte key, and the
     // probe side (B/2+1 rows per base row, the big side by construction)
@@ -1636,7 +1536,7 @@ object Dedup {
     * planted partners too, so the measured curve keeps a linearly
     * growing true-positive load at every scale point.
     */
-  private val EmbedHiThreshold = 0.8
+  private[queries] val EmbedHiThreshold = 0.8
   private val PlantIdBase = 10000000L
 
   /** Single-split spread for the PRODUCTION-DIMENSION corpus source
@@ -1784,31 +1684,22 @@ object Dedup {
   /** dd_embed_hi768_staged — the embedding deployment form INSIDE the
     * correctness gate (round 18, VERDICT r17 #2 — the dd_minhash_staged
     * rationale applied to the signature symmetry): stage the hyperplane
-    * signature relation at production dimension, point the session
-    * dispatch at it for the duration of plan CONSTRUCTION, and run the
-    * same query. Same DuckDB oracle as dd_embed_hi768, so staged ≡
-    * recompute is re-proven by rows+schema+hash every round. Signing is
-    * the dominant hi768 stage (~50 s/pass at the 100× staging), so this
-    * entry benches the form a real ingest pipeline runs: sign once,
-    * serve every pass.
-    *
-    * Same serial-driver contract as every *_staged entry — since round
-    * 19 a RUNTIME GUARD, not a scaladoc note ([[withEntryStaging]],
-    * VERDICT r18 #6): the conf set/restore brackets plan construction
-    * only (the dispatch resolves at `sharedEmbedSigs` call time), a
-    * concurrent entry opening a second window fails loudly, and the
-    * prior conf value is restored, never dropped.
+    * signature relation at production dimension to a fresh directory,
+    * pass it to the dispatch, and run the same query. Same DuckDB oracle
+    * as dd_embed_hi768, so staged ≡ recompute is re-proven by
+    * rows+schema+hash every round. Signing is the dominant hi768 stage
+    * (~50 s/pass at the 100× staging), so this entry benches the form a
+    * real ingest pipeline runs: sign once, serve every pass.
     */
   def embedHi768StagedEntry(spark: SparkSession, sfDir: String): DataFrame = {
-    // The exact plan embedHi768 will solve: same corpus, same cached
-    // selectivity sample, same deterministic minimizer — so the sidecar
-    // (dim, bits, tables) matches at dispatch time. Any divergence just
-    // fails the fence into recompute: slower, never wrong.
+    // One solved plan signs the staging and runs the query — exactly the
+    // plan embedHi768 solves (same corpus, cached selectivity sample,
+    // deterministic minimizer), so the manifest fence matches.
     val (corpus, plan) = hi768CorpusAndPlan(spark, sfDir)
-    val staging = s"${entryStagingDir(sfDir)}_embed768"
+    val staging = entryStagingDir(sfDir)
     stageEmbedSigs(spark, corpus, "hi768", plan, EmbedHiDim, staging)
-    withEntryStaging(spark, EmbedStagingConfKey, staging)(
-      embedHi768(spark, sfDir))
+    embedBucketedWithPlan(corpus, plan, EmbedHiThreshold, Some(staging),
+      EmbedHiDim, tag = "hi768")
   }
 
   /** (corpus, solved plan) for the hi family — what a corpus-ingest
@@ -1909,7 +1800,7 @@ object Dedup {
     val plan = solveLsh(n, EmbedDupThreshold,
       Some(sampledP1Cached(corpus, n, "base")))
     if (plan.work < allPairsWork(n) || n > AllPairsCutoff)
-      embedBucketedWithPlan(corpus, plan, EmbedDupThreshold)
+      embedBucketedWithPlan(corpus, plan, EmbedDupThreshold, None)
     else { requireAllPairsSafe(n); embedCosineUnguarded(spark, sfDir) }
   }
 
@@ -2651,7 +2542,7 @@ object Dedup {
     * with P ≈ 2e-4 and candidates are exact-verified.
     */
   def deltaDedup(spark: SparkSession, sfDir: String): DataFrame =
-    deltaFrom(cappedShingles(spark, sfDir).localCheckpoint(),
+    deltaFrom(cappedShingles(spark, sfDir, None).localCheckpoint(),
       c => c % DeltaModulus === DeltaResidue)
 
   /** Core over an arbitrary capped (doc_id, shingle) basis and batch
@@ -2673,7 +2564,7 @@ object Dedup {
   def deltaDedupStaged(spark: SparkSession, sfDir: String,
       stagingDir: String): DataFrame = {
     val isNew = (c: Column) => c % DeltaModulus === DeltaResidue
-    val sh = cappedShingles(spark, sfDir).localCheckpoint()
+    val sh = cappedShingles(spark, sfDir, None).localCheckpoint()
     val staged = s"$stagingDir/old_buckets.parquet"
     bandedBuckets(sh.filter(!isNew(col("doc_id"))), BandRows)
       .write.mode("overwrite").parquet(staged)
@@ -2863,7 +2754,7 @@ object Dedup {
   def deltaChain(spark: SparkSession, sfDir: String): DataFrame = {
     // Lazy: the seed-index write is the materializing action (one scan),
     // so the eager checkpoint's separate job is saved.
-    val sh = cappedShingles(spark, sfDir).localCheckpoint(eager = false)
+    val sh = cappedShingles(spark, sfDir, None).localCheckpoint(eager = false)
     val dir = java.nio.file.Files.createTempDirectory("graft_delta_chain")
     val m = DeltaModulus
     try {
@@ -3069,8 +2960,8 @@ object Dedup {
 
   /** Fingerprint sentinel for SELF-READ staging (the delta lifecycles
     * write a fresh tmp staging and read it by path within one call — the
-    * conf-dispatch fence is never consulted). Can never match a real
-    * corpus: [[stagedEmbedSigsFor]] compares against a 32-hex MD5.
+    * dispatch fence is never consulted). Can never match a real
+    * corpus: [[sharedEmbedSigs]] compares against a 32-hex MD5.
     */
   private val SelfStagedFp = "self-staged"
 

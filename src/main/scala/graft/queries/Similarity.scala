@@ -449,9 +449,13 @@ object Similarity {
     * fence) — IvfStagedSpec pins it, and ann_ivf_staged re-proves it
     * against this entry's own dynamic DuckDB oracle every round.
     */
-  def annIvf(spark: SparkSession, sfDir: String): DataFrame = {
+  def annIvf(spark: SparkSession, sfDir: String): DataFrame =
+    annIvfWith(spark, sfDir, None)
+
+  private[queries] def annIvfWith(spark: SparkSession, sfDir: String,
+      staging: Option[String]): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val s = sharedIvfServing(spark, emb)
+    val s = sharedIvfServing(spark, emb, staging)
     searchCells(probedCells(queries(emb), s.unit, s.ids, s.nprobe), s.assigned)
   }
 
@@ -476,7 +480,7 @@ object Similarity {
     * on the driver corpora) — the "nearest neighbors among docs with
     * lang='en'" shape real similarity queries carry.
     */
-  private val FilterLabel = 3
+  private[queries] val FilterLabel = 3
 
   /** The RARE stratum (~1% selectivity): the label equality conjoined
     * with an id residue — both conjuncts push to the parquet scan. This
@@ -532,7 +536,7 @@ object Similarity {
     * reports the number per round.
     */
   def annFiltered(spark: SparkSession, sfDir: String): DataFrame =
-    annFilteredWith(spark, sfDir, filterPred10(), s"label$FilterLabel")
+    annFilteredWith(spark, sfDir, filterPred10(), s"label$FilterLabel", None)
 
   /** ann_filtered_rare — the same production shape at the ~1% stratum:
     * identical corpus-wide index, identical machinery, but the probe
@@ -543,10 +547,10 @@ object Similarity {
     * re-calibration is an instrumented fact, not a comment).
     */
   def annFilteredRare(spark: SparkSession, sfDir: String): DataFrame =
-    annFilteredWith(spark, sfDir, filterPredRare(), "rare")
+    annFilteredWith(spark, sfDir, filterPredRare(), "rare", None)
 
   private[graft] def annFilteredWith(spark: SparkSession, sfDir: String,
-      pred: Column, tag: String): DataFrame = {
+      pred: Column, tag: String, staging: Option[String]): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
     val filtered = Tables.embeddings(spark, sfDir).filter(pred)
     // Coarse quantizer + stratum postings through the one staged-index
@@ -555,7 +559,8 @@ object Similarity {
     // per-execution assignment pass. Probe depth stays the per-stratum
     // calibrated value either way — it is predicate-dependent, so it is
     // not a stageable ingest product.
-    val (ids, unit, assigned) = sharedIvfFilteredPostings(spark, emb, filtered)
+    val (ids, unit, assigned) =
+      sharedIvfFilteredPostings(spark, emb, filtered, staging)
     val probed = probedCells(queries(emb), unit, ids,
       filteredNprobe(spark, sfDir, pred, tag))
     searchCells(probed, assigned)
@@ -647,7 +652,7 @@ object Similarity {
     if (autoPicksExact(spark, sfDir, pred, tag, budgetOverride))
       annFilteredExactWith(spark, sfDir, pred)
     else if (perStratumIvf) annFilteredStratumWith(spark, sfDir, pred, tag)
-    else annFilteredWith(spark, sfDir, pred, tag)
+    else annFilteredWith(spark, sfDir, pred, tag, None)
 
   /** Per-stratum coarse quantizer (round 16, VERDICT r15 #6): centroids
     * hash-sampled FROM THE STRATUM, k = ⌈√n_s⌉ from the stratum's own
@@ -874,12 +879,16 @@ object Similarity {
     * centroids — and hence the query output — are identical across
     * local[32] and multi-JVM cluster mode.
     */
-  def annIvfKmeans(spark: SparkSession, sfDir: String): DataFrame = {
+  def annIvfKmeans(spark: SparkSession, sfDir: String): DataFrame =
+    annIvfKmeansWith(spark, sfDir, None)
+
+  private[queries] def annIvfKmeansWith(spark: SparkSession, sfDir: String,
+      staging: Option[String]): DataFrame = {
     val raw = Tables.embeddings(spark, sfDir)
     // Model + postings + probe depth through the staged-index dispatch
     // (round 19): an ingest-staged fitted matrix serves in place of the
     // per-JVM driver Lloyd fit and the per-execution assignment pass.
-    val s = sharedKmeansServing(spark, raw)
+    val s = sharedKmeansServing(spark, raw, staging)
     searchCells(probedCells(queries(raw), s.unit, s.ids, s.nprobe), s.assigned)
   }
 
@@ -1138,7 +1147,11 @@ object Similarity {
     }).intValue()
   }
 
-  def annIvfPq(spark: SparkSession, sfDir: String): DataFrame = {
+  def annIvfPq(spark: SparkSession, sfDir: String): DataFrame =
+    annIvfPqWith(spark, sfDir, None)
+
+  private[queries] def annIvfPqWith(spark: SparkSession, sfDir: String,
+      staging: Option[String]): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
     // Coarse model, codebooks, encoded inverted file, and both
     // calibrated depths through the staged-index dispatch (round 19):
@@ -1146,7 +1159,7 @@ object Similarity {
     // encode corpus pass (one projection, but N·(√N·d + m·ksub·subDim)
     // arithmetic) with a scan of the 8-byte-code postings. Recompute
     // arm is the historical single-pass projection, unchanged.
-    val s = sharedPqServing(spark, emb)
+    val s = sharedPqServing(spark, emb, staging)
     val q = queries(emb)
     val probed = probedCells(q, s.unit, s.ids, s.nprobe)
     // ADC scan: rank candidates from the code alone (a per-query positive
@@ -1441,8 +1454,6 @@ object Similarity {
   // applied to the vector index. Reference discipline: materialize the
   // shuffle product once, read it many times (mr/worker.go:86-124).
 
-  private[graft] val IvfStagingConfKey = "spark.graft.ivfStaging"
-
   private def ivfServeCentsPath(dir: String): String = s"$dir/ivf_cents.parquet"
   private def ivfServePostingsPath(dir: String): String =
     s"$dir/ivf_postings.parquet"
@@ -1496,9 +1507,9 @@ object Similarity {
   }
 
   /** The IVF family's serving components behind the ONE dispatch site:
-    * staged postings + centroids + calibrated nprobe when the session
+    * staged postings + centroids + calibrated nprobe when the caller
     * names a staging whose provenance matches this corpus; the
-    * historical recompute arm otherwise. A stale or foreign conf
+    * historical recompute arm otherwise. A stale or foreign staging
     * degrades to recompute — slower, never wrong. The staged centroid
     * model shares the in-process "ivf" cache slot with the recompute
     * arm (both are the identical sorted collect, so a hit from either
@@ -1509,8 +1520,8 @@ object Similarity {
       unit: Array[Double], assigned: DataFrame, nprobe: Int)
 
   private[queries] def sharedIvfServing(spark: SparkSession,
-      emb: DataFrame): IvfServing =
-    stagedIvfFor(spark, emb) match {
+      emb: DataFrame, staging: Option[String]): IvfServing =
+    stagedIvfFor(spark, emb, staging) match {
       case Some((dir, nprobe)) =>
         val (ids, unit) = centModelCached("ivf", emb)(
           collectUnitCents(spark.read.parquet(ivfServeCentsPath(dir))))
@@ -1537,9 +1548,9 @@ object Similarity {
     * predicate, which an ingest-time staging cannot know.
     */
   private[queries] def sharedIvfFilteredPostings(spark: SparkSession,
-      emb: DataFrame, filtered: DataFrame)
+      emb: DataFrame, filtered: DataFrame, staging: Option[String])
       : (Array[Long], Array[Double], DataFrame) =
-    stagedIvfFor(spark, emb) match {
+    stagedIvfFor(spark, emb, staging) match {
       case Some((dir, _)) =>
         val (ids, unit) = centModelCached("ivf", emb)(
           collectUnitCents(spark.read.parquet(ivfServeCentsPath(dir))))
@@ -1552,11 +1563,18 @@ object Similarity {
         (ids, unit, assignedCells(normed(filtered), unit, ids))
     }
 
-  private def stagedIvfFor(spark: SparkSession,
-      emb: DataFrame): Option[(String, Int)] =
-    stagedProductFor(spark, emb, "ivf_meta.json", ivfManifestFields(emb),
-      Seq(ivfServeCentsPath _, ivfServePostingsPath _), Seq("nprobe"))
-      .map { case (dir, m) => (dir, m("nprobe").toInt) }
+  /** The coarse index's fence: both tables committed and
+    * `ivf_meta.json` matching this corpus; yields (dir, served nprobe).
+    * Like every staged product it is fenced on its own, so a partial
+    * ingest degrades only the products it did not commit.
+    */
+  private def stagedIvfFor(spark: SparkSession, emb: DataFrame,
+      staging: Option[String]): Option[(String, Int)] =
+    staging.flatMap { dir =>
+      graft.sources.Manifest.lookup(spark.sparkContext.hadoopConfiguration,
+        dir, "ivf_meta.json", Seq(ivfServeCentsPath(dir), ivfServePostingsPath(dir)),
+        ivfManifestFields(emb), Seq("nprobe")).map(m => (dir, m("nprobe").toInt))
+    }
 
   /** The recompute arm's posting relation alone — the assignment
     * subtree the staged index hoists to ingest, exposed for the
@@ -1571,25 +1589,24 @@ object Similarity {
 
   /** ann_ivf_staged — the IVF deployment form INSIDE the correctness
     * gate (the dd_minhash_staged promotion pattern): stage the serving
-    * index to a pid-scoped tmp location, open the guarded staging
-    * window, and run ann_ivf's own plan off the staged artifacts. Same
-    * dynamic DuckDB oracle as ann_ivf — staged ≡ recompute re-proven by
+    * index to a fresh tmp location, pass it to the dispatch, and run
+    * ann_ivf's own plan off the staged artifacts. Same dynamic DuckDB
+    * oracle as ann_ivf — staged ≡ recompute re-proven by
     * rows+schema+hash every round, not only by IvfStagedSpec. The entry
     * pays a full re-stage per execution by design (the bench prices the
     * ingest step honestly); the pure serve path's cost is the IVFSTAGED
     * probe's stagedRead/lap terms.
     */
   def annIvfStagedEntry(spark: SparkSession, sfDir: String): DataFrame = {
-    val staging = s"${Dedup.entryStagingDir(sfDir)}_ivf"
+    val staging = Dedup.entryStagingDir(sfDir)
     stageIvfIndex(spark, sfDir, staging)
-    Dedup.withEntryStaging(spark, IvfStagingConfKey, staging)(
-      annIvf(spark, sfDir))
+    annIvfWith(spark, sfDir, Some(staging))
   }
 
   // --- PQ + k-means staged serving products (round 19 follow-on) -------------
   //
   // The rest of the vector-index family behind the SAME one staging
-  // location (spark.graft.ivfStaging) and the same Manifest fence
+  // directory argument and the same Manifest fence
   // discipline, each product self-contained so a partial ingest degrades
   // per-family to recompute: ann_ivf_pq's serving product is the encoded
   // inverted file — (cell, vec_id, 8-byte code) — plus the per-subspace
@@ -1720,11 +1737,14 @@ object Similarity {
     * serves the other.
     */
   private[queries] def sharedPqServing(spark: SparkSession,
-      emb: DataFrame): PqServing = {
+      emb: DataFrame, staging: Option[String]): PqServing = {
     val n = corpusSize(emb)
-    stagedProductFor(spark, emb, "pq_meta.json", pqManifestFields(emb),
-      Seq(pqBooksPath _, pqPostingsPath _, ivfServeCentsPath _),
-      Seq("ksub", "shortK", "nprobe")) match {
+    staging.flatMap { dir =>
+      graft.sources.Manifest.lookup(spark.sparkContext.hadoopConfiguration,
+        dir, "pq_meta.json",
+        Seq(pqBooksPath(dir), pqPostingsPath(dir), ivfServeCentsPath(dir)),
+        pqManifestFields(emb), Seq("ksub", "shortK", "nprobe")).map((dir, _))
+    } match {
       case Some((dir, m)) =>
         val (ids, unit) = centModelCached("ivf", emb)(
           collectUnitCents(spark.read.parquet(ivfServeCentsPath(dir))))
@@ -1750,9 +1770,12 @@ object Similarity {
 
   /** ann_ivf_kmeans' serving components behind the staged dispatch. */
   private[queries] def sharedKmeansServing(spark: SparkSession,
-      emb: DataFrame): IvfServing =
-    stagedProductFor(spark, emb, "km_meta.json", kmManifestFields(emb),
-      Seq(kmCentsPath _, kmPostingsPath _), Seq("k", "nprobe")) match {
+      emb: DataFrame, staging: Option[String]): IvfServing =
+    staging.flatMap { dir =>
+      graft.sources.Manifest.lookup(spark.sparkContext.hadoopConfiguration,
+        dir, "km_meta.json", Seq(kmCentsPath(dir), kmPostingsPath(dir)),
+        kmManifestFields(emb), Seq("k", "nprobe")).map((dir, _))
+    } match {
       case Some((dir, m)) =>
         val (ids, unit) = centModelCached("kmeans", emb) {
           val flat = readFlatDoubles(spark, kmCentsPath(dir))
@@ -1767,41 +1790,6 @@ object Similarity {
         val (ids, unit) = kmeansModelOf(emb)
         IvfServing(ids, unit, assignedCells(normed(emb), unit, ids),
           calibratedNprobe(calibrationPairsCached(emb), unit, ids))
-    }
-
-  /** The generic per-product fence probe: the session's one staging
-    * location serves a product iff every named table committed
-    * (_SUCCESS) and the product's own manifest matches its required
-    * identity — a partial or foreign ingest degrades THIS product to
-    * recompute without touching the others. Returns the staged dir plus
-    * the full manifest (for served values; `servedKeys` must all be
-    * present, else the manifest is corrupt and the product recomputes).
-    */
-  private def stagedProductFor(spark: SparkSession, emb: DataFrame,
-      manifestName: String, required: Seq[(String, Any)],
-      tables: Seq[String => String], servedKeys: Seq[String])
-      : Option[(String, Map[String, String])] =
-    spark.conf.getOption(IvfStagingConfKey).flatMap { dir =>
-      try {
-        val conf = spark.sparkContext.hadoopConfiguration
-        val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-        val tablesOk = tables.forall(p => fs.exists(
-          new org.apache.hadoop.fs.Path(s"${p(dir)}/_SUCCESS")))
-        if (!tablesOk || CorpusCaches.corpusFpMd5(emb).isEmpty) None
-        else if (graft.sources.Manifest.matches(conf, dir, manifestName, required))
-          graft.sources.Manifest.read(conf, dir, manifestName)
-            .filter(m => servedKeys.forall(m.contains)).map((dir, _))
-        else {
-          System.err.println(s"[graft] $IvfStagingConfKey=$dir does not " +
-            s"match the current corpus content or index parameters " +
-            s"($manifestName) - recomputing")
-          None
-        }
-      } catch {
-        case e: Exception =>
-          System.err.println(s"[graft] staged-index probe failed ($e) - recomputing")
-          None
-      }
     }
 
   // -------------------------------------------------------------------

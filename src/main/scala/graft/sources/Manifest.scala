@@ -40,7 +40,7 @@ object Manifest {
   }
 
   /** Read `dir/name` back as key → canonical value string (integers keep
-    * their literal text, which is exactly what [[matches]] compares).
+    * their literal text, which is exactly what [[lookup]] compares).
     * None on a missing file, IO failure, or any parse deviation.
     */
   def read(conf: Configuration, dir: String, name: String): Option[Map[String, String]] =
@@ -57,17 +57,37 @@ object Manifest {
       }
     } catch { case _: Exception => None }
 
-  /** True iff the manifest exists, parses, and every required (key,
-    * value) matches its canonical string form. Extra manifest keys are
-    * ignored — a fence names what it NEEDS to hold; a richer manifest
-    * (e.g. one also carrying served parameters) still passes.
+  /** The one staged-product fence: `dir/name` serves iff every table in
+    * `tables` committed (`_SUCCESS`), the manifest parses, every required
+    * (key, value) matches its canonical string form and every `served`
+    * key is present. Returns the manifest, whose served values the caller
+    * reads. Extra manifest keys are ignored — a fence names what it NEEDS
+    * to hold. An empty required value never matches: it is the
+    * fingerprint of a corpus with no file lineage, whose identity cannot
+    * be proven. `required` is by-name, so a failure deriving the fence
+    * identity counts as an IO failure: any mismatch or IO failure
+    * returns None, and the caller recomputes (slower, never wrong).
     */
-  def matches(conf: Configuration, dir: String, name: String,
-      required: Seq[(String, Any)]): Boolean =
-    read(conf, dir, name) match {
-      case Some(m) =>
-        required.forall { case (k, v) => m.get(k).contains(canonical(v)) }
-      case None => false
+  def lookup(conf: Configuration, dir: String, name: String,
+      tables: Seq[String], required: => Seq[(String, Any)],
+      served: Seq[String] = Nil): Option[Map[String, String]] =
+    try {
+      val fs = new Path(dir).getFileSystem(conf)
+      if (!tables.forall(t => fs.exists(new Path(t, "_SUCCESS")))) None
+      else {
+        val m = read(conf, dir, name).filter(m =>
+          required.forall { case (k, v) =>
+            m.get(k).exists(got => got.nonEmpty && got == canonical(v))
+          } && served.forall(m.contains))
+        if (m.isEmpty)
+          System.err.println(s"[graft] staged $dir/$name does not match the " +
+            "requested corpus or parameters - recomputing")
+        m
+      }
+    } catch {
+      case e: Exception =>
+        System.err.println(s"[graft] staged $dir/$name lookup failed ($e) - recomputing")
+        None
     }
 
   private def canonical(v: Any): String = v match {

@@ -44,7 +44,7 @@ class BasisFloorSpec extends SparkSuite {
       // Precondition: the cap fired and left each cluster doc a 3-element
       // residue (2 boundary shingles + the tail), identical within a
       // group — the J = 1.0 explosion shape the floor exists for.
-      val sh = Dedup.cappedShingles(spark, dir.toString).localCheckpoint()
+      val sh = Dedup.cappedShingles(spark, dir.toString, None).localCheckpoint()
       val nsh = Dedup.minhashSigs(sh).filter(col("doc_id") < 1100L)
         .agg(min(col("nsh")), max(col("nsh"))).head()
       assert(nsh.getLong(0) == 3 && nsh.getLong(1) == 3,

@@ -43,7 +43,7 @@ object EmbedFenceProbe {
       def arm(cutFloor: Double): (Long, Double) = {
         var rows = 0L
         val t0 = System.nanoTime()
-        rows = Dedup.embedBucketedWithPlan(corpus, plan, 0.45,
+        rows = Dedup.embedBucketedWithPlan(corpus, plan, 0.45, None,
           cascadeCutFloor = cutFloor).count()
         (rows, (System.nanoTime() - t0) / 1e9)
       }

@@ -44,18 +44,18 @@ object EmbedStagedProbe {
     val lapPairs = sys.env.getOrElse("GRAFT_STAGED_LAPS", "2").toInt
     val spark = graft.GraftSession("embed-staged-probe")
 
-    // (name, dim, corpus+plan prep, whole query) per family. The prep
-    // is exactly what a corpus-ingest staging step would sign.
+    // (name, dim, corpus+plan prep) per family. The prep is exactly
+    // what a corpus-ingest staging step would sign, and the whole query
+    // (dd_embed_hi / dd_embed_hi768) is the prep plus the bucketed
+    // pipeline over that plan.
     val families: Seq[(String, Int,
-        (SparkSession, String) => (DataFrame, Dedup.LshPlan),
-        (SparkSession, String) => DataFrame)] =
+        (SparkSession, String) => (DataFrame, Dedup.LshPlan))] =
       Seq(
-        ("dd_embed_hi", 64, Dedup.hiCorpusAndPlan _, Dedup.embedHi _),
-        ("dd_embed_hi768", 768, Dedup.hi768CorpusAndPlan _,
-          Dedup.embedHi768 _))
+        ("dd_embed_hi", 64, Dedup.hiCorpusAndPlan _),
+        ("dd_embed_hi768", 768, Dedup.hi768CorpusAndPlan _))
 
     val points = for (sf <- dirs) yield {
-      val qJsons = for ((name, dim, prep, query) <- families) yield {
+      val qJsons = for ((name, dim, prep) <- families) yield {
         val tag = if (dim == 768) "hi768" else "hi"
         // Pid-scoped (ADVICE r18): two concurrent probe processes on one
         // host must never overwrite each other's staged table mid-read —
@@ -71,19 +71,19 @@ object EmbedStagedProbe {
           timed(noop(Dedup.computeEmbedSigs(corpus, plan, dim)))).min
         val stageWrite = timed(
           Dedup.stageEmbedSigs(spark, corpus, tag, plan, dim, staging))
-        spark.conf.set(Dedup.EmbedStagingConfKey, staging)
         val stagedRead = (1 to 3).map(_ =>
-          timed(noop(Dedup.sharedEmbedSigs(corpus, tag, plan, dim)))).min
-        spark.conf.unset(Dedup.EmbedStagingConfKey)
+          timed(noop(Dedup.sharedEmbedSigs(corpus, tag, plan, dim, Some(staging))))).min
 
         // Whole-query terms, alternating arms (host drift lands on
         // both); row identity asserted on the first pair — the probe
         // double-checks what EmbedStagedSpec pins at oracle scale.
         def lapRows(staged: Boolean): (Long, Double) = {
-          if (staged) spark.conf.set(Dedup.EmbedStagingConfKey, staging)
-          else spark.conf.unset(Dedup.EmbedStagingConfKey)
           var n = 0L
-          val w = timed { n = query(spark, sf).count() }
+          val w = timed {
+            val (c, p) = prep(spark, sf)
+            n = Dedup.embedBucketedWithPlan(c, p, Dedup.EmbedHiThreshold,
+              Some(staging).filter(_ => staged), dim, tag = tag).count()
+          }
           (n, w)
         }
         lapRows(staged = false) // warm-up
@@ -92,7 +92,6 @@ object EmbedStagedProbe {
           val (nSt, stW) = lapRows(staged = true)
           (nRe, reW, nSt, stW)
         }
-        spark.conf.unset(Dedup.EmbedStagingConfKey)
         val re = lapsRun.map(_._2).min
         val st = lapsRun.map(_._4).min
         val (nRe1, _, nSt1, _) = lapsRun.head

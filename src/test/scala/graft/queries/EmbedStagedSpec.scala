@@ -4,21 +4,15 @@ import graft.SparkSuite
 
 /** The embedding staged-signature dispatch differential (round 18,
   * VERDICT r17 #2 — sharedBasis symmetry): `sharedEmbedSigs` must serve
-  * the staged hyperplane-signature table when the session names one
+  * the staged hyperplane-signature table when the caller names one
   * staged from THIS corpus under THIS construction tag and THIS signing
   * plan, fall back to recompute on any mismatch, and be row-identical
-  * across the switch for the whole query. The oracle surface never sets
-  * the conf (the *_staged entry brackets its own), so these are the
-  * tests that exercise every fence arm — the StagedBasisSpec
-  * discipline applied to the embedding twin.
+  * across the switch for the whole query. Only the *_staged entry
+  * passes a staging directory, so these are the tests that exercise
+  * every fence arm — the StagedBasisSpec discipline applied to the
+  * embedding twin.
   */
 class EmbedStagedSpec extends SparkSuite {
-
-  private def withStaging[A](dir: String)(body: => A): A =
-    try {
-      spark.conf.set(Dedup.EmbedStagingConfKey, dir)
-      body
-    } finally spark.conf.unset(Dedup.EmbedStagingConfKey)
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -32,26 +26,19 @@ class EmbedStagedSpec extends SparkSuite {
     val recompute = rows(Dedup.embedHi(spark, sf))
     val (corpus, plan) = hiCorpusAndPlan(sf)
     Dedup.stageEmbedSigs(spark, corpus, "hi", plan, 64, staging)
-    withStaging(staging) {
-      val served = Dedup.sharedEmbedSigs(corpus, "hi", plan, 64)
-      assert(served.inputFiles.nonEmpty &&
-        served.inputFiles.forall(_.contains(staging)),
-        s"staged arm must scan $staging, got ${served.inputFiles.take(2).mkString(",")}")
-      assert(rows(Dedup.embedHi(spark, sf)) == recompute,
-        "dd_embed_hi must be row-identical across the staged-signature dispatch")
-    }
+    val served = Dedup.sharedEmbedSigs(corpus, "hi", plan, 64, Some(staging))
+    assert(served.inputFiles.nonEmpty &&
+      served.inputFiles.forall(_.contains(staging)),
+      s"staged arm must scan $staging, got ${served.inputFiles.take(2).mkString(",")}")
+    assert(rows(Dedup.embedBucketedWithPlan(corpus, plan, Dedup.EmbedHiThreshold,
+        Some(staging), 64, tag = "hi")) == recompute,
+      "dd_embed_hi must be row-identical across the staged-signature dispatch")
   }
 
-  test("dd_embed_hi768_staged entry equals dd_embed_hi768 and restores the conf") {
-    spark.conf.set(Dedup.EmbedStagingConfKey, "/tmp/some-preexisting-ingest")
-    try {
-      val staged = rows(Dedup.embedHi768StagedEntry(spark, sf))
-      assert(staged == rows(Dedup.embedHi768(spark, sf)),
-        "the staged entry must equal the recompute form row-for-row")
-      assert(spark.conf.getOption(Dedup.EmbedStagingConfKey)
-        .contains("/tmp/some-preexisting-ingest"),
-        "the entry must RESTORE the session's prior conf, not drop it")
-    } finally spark.conf.unset(Dedup.EmbedStagingConfKey)
+  test("dd_embed_hi768_staged entry equals dd_embed_hi768") {
+    val staged = rows(Dedup.embedHi768StagedEntry(spark, sf))
+    assert(staged == rows(Dedup.embedHi768(spark, sf)),
+      "the staged entry must equal the recompute form row-for-row")
   }
 
   test("provenance fence: signatures staged from another corpus are refused") {
@@ -59,38 +46,32 @@ class EmbedStagedSpec extends SparkSuite {
     val (foreign, fPlan) = hiCorpusAndPlan("/root/testdata/sf0.01")
     Dedup.stageEmbedSigs(spark, foreign, "hi", fPlan, 64, staging)
     val (corpus, plan) = hiCorpusAndPlan(sf)
-    withStaging(staging) {
-      val served = Dedup.sharedEmbedSigs(corpus, "hi", plan, 64)
-      assert(!served.inputFiles.exists(_.contains(staging)),
-        "a foreign-corpus staging must fall back to recompute")
-    }
+    val served = Dedup.sharedEmbedSigs(corpus, "hi", plan, 64, Some(staging))
+    assert(!served.inputFiles.exists(_.contains(staging)),
+      "a foreign-corpus staging must fall back to recompute")
   }
 
   test("plan and tag fences: a mismatched signing plan or construction tag is refused") {
     val staging = java.nio.file.Files.createTempDirectory("embed-planfence").toString
     val (corpus, plan) = hiCorpusAndPlan(sf)
     Dedup.stageEmbedSigs(spark, corpus, "hi", plan, 64, staging)
-    withStaging(staging) {
-      // Same corpus, different solved plan (τ = 0.45 widths differ).
-      val otherPlan = Dedup.solveLsh(1000, 0.45)
-      assume(otherPlan.bits != plan.bits || otherPlan.tables != plan.tables)
-      val servedPlan = Dedup.sharedEmbedSigs(corpus, "hi", otherPlan, 64)
-      assert(!servedPlan.inputFiles.exists(_.contains(staging)),
-        "signatures signed under a different (bits, tables) must recompute")
-      // Same corpus and plan, different construction tag.
-      val servedTag = Dedup.sharedEmbedSigs(corpus, "base", plan, 64)
-      assert(!servedTag.inputFiles.exists(_.contains(staging)),
-        "a different construction tag over the same files must recompute")
-    }
+    // Same corpus, different solved plan (τ = 0.45 widths differ).
+    val otherPlan = Dedup.solveLsh(1000, 0.45)
+    assume(otherPlan.bits != plan.bits || otherPlan.tables != plan.tables)
+    val servedPlan = Dedup.sharedEmbedSigs(corpus, "hi", otherPlan, 64, Some(staging))
+    assert(!servedPlan.inputFiles.exists(_.contains(staging)),
+      "signatures signed under a different (bits, tables) must recompute")
+    // Same corpus and plan, different construction tag.
+    val servedTag = Dedup.sharedEmbedSigs(corpus, "base", plan, 64, Some(staging))
+    assert(!servedTag.inputFiles.exists(_.contains(staging)),
+      "a different construction tag over the same files must recompute")
   }
 
   test("missing or half-written staging is refused") {
     val staging = java.nio.file.Files.createTempDirectory("embed-empty").toString
     val (corpus, plan) = hiCorpusAndPlan(sf)
-    withStaging(staging) {
-      val served = Dedup.sharedEmbedSigs(corpus, "hi", plan, 64)
-      assert(!served.inputFiles.exists(_.contains(staging)),
-        "a staging dir without table+sidecar must recompute")
-    }
+    val served = Dedup.sharedEmbedSigs(corpus, "hi", plan, 64, Some(staging))
+    assert(!served.inputFiles.exists(_.contains(staging)),
+      "a staging dir without table+sidecar must recompute")
   }
 }

@@ -42,7 +42,7 @@ object FuzzyCoarseCheck {
       // so the artifact records the mass the shipped threshold is read
       // against, plus the hot-bucket census that says how much of it the
       // coarse path re-keys.
-      val sh = Dedup.cappedShingles(spark, sf).localCheckpoint()
+      val sh = Dedup.cappedShingles(spark, sf, None).localCheckpoint()
       val sigs = Dedup.minhashSigs(sh)
         .filter(col("nsh") >= CorpusOps.MinCappedShingles)
         .select(col("doc_id"), col("sig"))
@@ -76,7 +76,7 @@ object FuzzyCoarseCheck {
       def rows(coarseMinMass: Long): (Array[String], Double) = {
         val t0 = System.nanoTime()
         val r = CorpusOps.decontaminateFuzzyCoarse(spark, sf,
-            CorpusOps.SketchCutMinMass, coarseMinMass)
+            CorpusOps.SketchCutMinMass, coarseMinMass, None)
           .collect().map(_.toString).sorted
         val wall = (System.nanoTime() - t0) / 1e9
         println(f"[fuzzycoarse] $sf coarseMinMass=$coarseMinMass rows=${r.length} wall=$wall%.1fs")

@@ -37,7 +37,7 @@ class FuzzyCoarseSpec extends SparkSuite {
       // The hot census the coarse path routes on: every cluster bucket
       // must genuinely exceed HotBucketOcc, or the forced-on lap would
       // vacuously take the cold path and this spec would pin nothing.
-      val sigs = Dedup.minhashSigs(Dedup.cappedShingles(spark, dir.toString))
+      val sigs = Dedup.minhashSigs(Dedup.cappedShingles(spark, dir.toString, None))
         .filter(col("nsh") >= CorpusOps.MinCappedShingles)
         .select(col("doc_id"), col("sig"))
       val occ = Dedup.bucketsFromSigs(sigs, CorpusOps.FuzzyBandRows)
@@ -62,7 +62,7 @@ class FuzzyCoarseSpec extends SparkSuite {
 
       def run(coarseMinMass: Long): Set[(Long, Long, Double)] =
         CorpusOps.decontaminateFuzzyCoarse(spark, dir.toString,
-            CorpusOps.SketchCutMinMass, coarseMinMass)
+            CorpusOps.SketchCutMinMass, coarseMinMass, None)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
       val coarseOn = run(0L)
@@ -168,7 +168,7 @@ class FuzzyCoarseSpec extends SparkSuite {
       docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
       // Hot-routing is a fact of the census, not an argument: every fine
       // bucket where E collides with a mutant must exceed HotBucketOcc.
-      val corpusSigs = Dedup.minhashSigs(Dedup.cappedShingles(spark, dir.toString))
+      val corpusSigs = Dedup.minhashSigs(Dedup.cappedShingles(spark, dir.toString, None))
         .filter(col("nsh") >= CorpusOps.MinCappedShingles)
         .select(col("doc_id"), col("sig")).localCheckpoint()
       val buckets = Dedup.bucketsFromSigs(corpusSigs, CorpusOps.FuzzyBandRows)
@@ -192,7 +192,7 @@ class FuzzyCoarseSpec extends SparkSuite {
       val mass = occ.filter(col("occ") > 1).count() // sanity only
       def run(coarseMinMass: Long): Set[(Long, Long)] =
         CorpusOps.decontaminateFuzzyCoarse(spark, dir.toString,
-            CorpusOps.SketchCutMinMass, coarseMinMass)
+            CorpusOps.SketchCutMinMass, coarseMinMass, None)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val fineOut = run(Long.MaxValue)
       val coarseOut = run(0L)
@@ -219,7 +219,7 @@ class FuzzyCoarseSpec extends SparkSuite {
     // pins that no verified corpus comes anywhere near EITHER arm of the
     // adaptive guard.
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
-      val sigs = Dedup.flooredSigs(Dedup.cappedShingles(spark, dir))
+      val sigs = Dedup.flooredSigs(Dedup.cappedShingles(spark, dir, None))
       val occ = Dedup.bucketsFromSigs(sigs, CorpusOps.FuzzyBandRows)
         .select(col("band"), col("bh"),
           (col("doc_id") % CorpusOps.EvalModulus === 0).as("is_eval"))

@@ -29,7 +29,7 @@ object FuzzyCutCheck {
     // measured raw count): the differential certifies the CUT MACHINERY
     // is lossless on this corpus's real candidate distribution, whether
     // or not the shipped 100k threshold happens to trip here.
-    val sh = Dedup.cappedShingles(spark, sf).localCheckpoint()
+    val sh = Dedup.cappedShingles(spark, sf, None).localCheckpoint()
     val sigs = Dedup.minhashSigs(sh)
       .filter(col("nsh") >= CorpusOps.MinCappedShingles)
       .select(col("doc_id"), col("sig"))

@@ -58,7 +58,7 @@ class FuzzyFloorSpec extends SparkSuite {
     // staged scale corpora grow from it.
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1")) {
-      val minNsh = Dedup.minhashSigs(Dedup.cappedShingles(spark, dir))
+      val minNsh = Dedup.minhashSigs(Dedup.cappedShingles(spark, dir, None))
         .agg(min(col("nsh"))).head().getLong(0)
       assert(minNsh >= CorpusOps.MinCappedShingles,
         s"$dir has a doc with $minNsh < ${CorpusOps.MinCappedShingles} " +

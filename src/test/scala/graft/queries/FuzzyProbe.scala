@@ -23,7 +23,7 @@ object FuzzyProbe {
       a
     }
     val sh = timed("shingles+cap+ckpt") {
-      val s = Dedup.cappedShingles(spark, sf).localCheckpoint()
+      val s = Dedup.cappedShingles(spark, sf, None).localCheckpoint()
       println(s"[fuzzyprobe]   shingle rows=${s.count()}")
       s
     }

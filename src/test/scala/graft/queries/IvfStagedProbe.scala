@@ -56,19 +56,17 @@ object IvfStagedProbe {
       val assignRecompute = (1 to 3).map(_ =>
         timed(noop(Similarity.ivfAssignRelation(spark, sf)))).min
       val stageWrite = timed(Similarity.stageIvfIndex(spark, sf, staging))
-      spark.conf.set(Similarity.IvfStagingConfKey, staging)
       val stagedRead = (1 to 3).map(_ =>
-        timed(noop(Similarity.sharedIvfServing(spark, emb).assigned))).min
-      spark.conf.unset(Similarity.IvfStagingConfKey)
+        timed(noop(Similarity.sharedIvfServing(spark, emb, Some(staging)).assigned))).min
 
       // Whole-query terms, alternating arms (host drift lands on both);
       // row identity asserted on the first pair — the probe double-checks
       // what IvfStagedSpec pins at oracle scale.
       def lapRows(staged: Boolean): (Long, Double) = {
-        if (staged) spark.conf.set(Similarity.IvfStagingConfKey, staging)
-        else spark.conf.unset(Similarity.IvfStagingConfKey)
         var n = 0L
-        val w = timed { n = Similarity.annIvf(spark, sf).count() }
+        val w = timed {
+          n = Similarity.annIvfWith(spark, sf, Some(staging).filter(_ => staged)).count()
+        }
         (n, w)
       }
       lapRows(staged = false) // warm-up
@@ -77,7 +75,6 @@ object IvfStagedProbe {
         val (nSt, stW) = lapRows(staged = true)
         (nRe, reW, nSt, stW)
       }
-      spark.conf.unset(Similarity.IvfStagingConfKey)
       val re = lapsRun.map(_._2).min
       val st = lapsRun.map(_._4).min
       val (nRe1, _, nSt1, _) = lapsRun.head
@@ -89,10 +86,11 @@ object IvfStagedProbe {
       // place of the per-execution stratum assignment — same alternating
       // protocol, row identity required on the first pair.
       def filteredLap(staged: Boolean): (Long, Double) = {
-        if (staged) spark.conf.set(Similarity.IvfStagingConfKey, staging)
-        else spark.conf.unset(Similarity.IvfStagingConfKey)
         var n = 0L
-        val w = timed { n = Similarity.annFiltered(spark, sf).count() }
+        val w = timed {
+          n = Similarity.annFilteredWith(spark, sf, Similarity.filterPred10(),
+            s"label${Similarity.FilterLabel}", Some(staging).filter(_ => staged)).count()
+        }
         (n, w)
       }
       filteredLap(staged = false) // warm-up (fills the stratum caches)
@@ -101,7 +99,6 @@ object IvfStagedProbe {
         val (fnSt, fStW) = filteredLap(staged = true)
         (fnRe, fReW, fnSt, fStW)
       }
-      spark.conf.unset(Similarity.IvfStagingConfKey)
       val fRe = fLaps.map(_._2).min
       val fSt = fLaps.map(_._4).min
       require(fLaps.head._1 == fLaps.head._3,

@@ -5,20 +5,14 @@ import graft.SparkSuite
 /** The staged IVF serving-index dispatch differential (round 19, VERDICT
   * r18 #1 — the sharedEmbedSigs discipline applied to the vector index):
   * `sharedIvfServing` must serve the staged postings + centroids +
-  * calibrated probe depth when the session names an index staged from
+  * calibrated probe depth when the caller names an index staged from
   * THIS corpus under THIS construction, fall back to recompute on any
-  * mismatch, and be row-identical across the switch. The oracle surface
-  * never sets the conf (the *_staged entry brackets its own guarded
-  * window), so these tests exercise every fence arm — the
-  * StagedBasisSpec/EmbedStagedSpec discipline applied to ann_ivf.
+  * mismatch, and be row-identical across the switch. Only the *_staged
+  * entry passes a staging directory, so these tests exercise every
+  * fence arm — the StagedBasisSpec/EmbedStagedSpec discipline applied
+  * to ann_ivf.
   */
 class IvfStagedSpec extends SparkSuite {
-
-  private def withStaging[A](dir: String)(body: => A): A =
-    try {
-      spark.conf.set(Similarity.IvfStagingConfKey, dir)
-      body
-    } finally spark.conf.unset(Similarity.IvfStagingConfKey)
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -27,30 +21,22 @@ class IvfStagedSpec extends SparkSuite {
     val staging = java.nio.file.Files.createTempDirectory("ivf-staging").toString
     val recompute = rows(Similarity.annIvf(spark, sf))
     Similarity.stageIvfIndex(spark, sf, staging)
-    withStaging(staging) {
-      // Engagement: the served posting relation must actually READ the
-      // staged parquet, not silently recompute.
-      val emb = graft.Tables.embeddings(spark, sf)
-      val serving = Similarity.sharedIvfServing(spark, emb)
-      assert(serving.assigned.inputFiles.nonEmpty &&
-        serving.assigned.inputFiles.forall(_.contains(staging)),
-        s"staged arm must scan $staging, got " +
-          serving.assigned.inputFiles.take(2).mkString(","))
-      assert(rows(Similarity.annIvf(spark, sf)) == recompute,
-        "ann_ivf must be row-identical across the staged-index dispatch")
-    }
+    // Engagement: the served posting relation must actually READ the
+    // staged parquet, not silently recompute.
+    val emb = graft.Tables.embeddings(spark, sf)
+    val serving = Similarity.sharedIvfServing(spark, emb, Some(staging))
+    assert(serving.assigned.inputFiles.nonEmpty &&
+      serving.assigned.inputFiles.forall(_.contains(staging)),
+      s"staged arm must scan $staging, got " +
+        serving.assigned.inputFiles.take(2).mkString(","))
+    assert(rows(Similarity.annIvfWith(spark, sf, Some(staging))) == recompute,
+      "ann_ivf must be row-identical across the staged-index dispatch")
   }
 
-  test("ann_ivf_staged entry equals ann_ivf and restores the conf") {
-    spark.conf.set(Similarity.IvfStagingConfKey, "/tmp/some-preexisting-ingest")
-    try {
-      val staged = rows(Similarity.annIvfStagedEntry(spark, sf))
-      assert(staged == rows(Similarity.annIvf(spark, sf)),
-        "the staged entry must equal the recompute form row-for-row")
-      assert(spark.conf.getOption(Similarity.IvfStagingConfKey)
-        .contains("/tmp/some-preexisting-ingest"),
-        "the entry must RESTORE the session's prior conf, not drop it")
-    } finally spark.conf.unset(Similarity.IvfStagingConfKey)
+  test("ann_ivf_staged entry equals ann_ivf") {
+    val staged = rows(Similarity.annIvfStagedEntry(spark, sf))
+    assert(staged == rows(Similarity.annIvf(spark, sf)),
+      "the staged entry must equal the recompute form row-for-row")
   }
 
   test("filtered family serves the staged postings via the stratum semi-join") {
@@ -63,18 +49,18 @@ class IvfStagedSpec extends SparkSuite {
     val recompute10 = rows(Similarity.annFiltered(spark, sf))
     val recompute1 = rows(Similarity.annFilteredRare(spark, sf))
     Similarity.stageIvfIndex(spark, sf, staging)
-    withStaging(staging) {
-      val emb = graft.Tables.embeddings(spark, sf)
-      val (_, _, assigned) = Similarity.sharedIvfFilteredPostings(
-        spark, emb, emb.filter(Similarity.filterPred10()))
-      assert(assigned.inputFiles.exists(_.contains(staging)),
-        "the staged arm must scan the persisted postings, got " +
-          assigned.inputFiles.take(2).mkString(","))
-      assert(rows(Similarity.annFiltered(spark, sf)) == recompute10,
-        "ann_filtered must be row-identical across the staged-postings dispatch")
-      assert(rows(Similarity.annFilteredRare(spark, sf)) == recompute1,
-        "ann_filtered_rare must be row-identical across the staged-postings dispatch")
-    }
+    val emb = graft.Tables.embeddings(spark, sf)
+    val (_, _, assigned) = Similarity.sharedIvfFilteredPostings(
+      spark, emb, emb.filter(Similarity.filterPred10()), Some(staging))
+    assert(assigned.inputFiles.exists(_.contains(staging)),
+      "the staged arm must scan the persisted postings, got " +
+        assigned.inputFiles.take(2).mkString(","))
+    assert(rows(Similarity.annFilteredWith(spark, sf, Similarity.filterPred10(),
+        s"label${Similarity.FilterLabel}", Some(staging))) == recompute10,
+      "ann_filtered must be row-identical across the staged-postings dispatch")
+    assert(rows(Similarity.annFilteredWith(spark, sf, Similarity.filterPredRare(),
+        "rare", Some(staging))) == recompute1,
+      "ann_filtered_rare must be row-identical across the staged-postings dispatch")
   }
 
   test("pq and kmeans families serve their staged products, row-identical") {
@@ -86,21 +72,19 @@ class IvfStagedSpec extends SparkSuite {
     val kmRecompute = rows(Similarity.annIvfKmeans(spark, sf))
     Similarity.stagePqIndex(spark, sf, staging)
     Similarity.stageKmeansIndex(spark, sf, staging)
-    withStaging(staging) {
-      val emb = graft.Tables.embeddings(spark, sf)
-      val pqS = Similarity.sharedPqServing(spark, emb)
-      assert(pqS.codes.inputFiles.nonEmpty &&
-        pqS.codes.inputFiles.forall(_.contains(staging)),
-        "the pq staged arm must scan the persisted code postings")
-      val kmS = Similarity.sharedKmeansServing(spark, emb)
-      assert(kmS.assigned.inputFiles.nonEmpty &&
-        kmS.assigned.inputFiles.forall(_.contains(staging)),
-        "the kmeans staged arm must scan the persisted postings")
-      assert(rows(Similarity.annIvfPq(spark, sf)) == pqRecompute,
-        "ann_ivf_pq must be row-identical across the staged dispatch")
-      assert(rows(Similarity.annIvfKmeans(spark, sf)) == kmRecompute,
-        "ann_ivf_kmeans must be row-identical across the staged dispatch")
-    }
+    val emb = graft.Tables.embeddings(spark, sf)
+    val pqS = Similarity.sharedPqServing(spark, emb, Some(staging))
+    assert(pqS.codes.inputFiles.nonEmpty &&
+      pqS.codes.inputFiles.forall(_.contains(staging)),
+      "the pq staged arm must scan the persisted code postings")
+    val kmS = Similarity.sharedKmeansServing(spark, emb, Some(staging))
+    assert(kmS.assigned.inputFiles.nonEmpty &&
+      kmS.assigned.inputFiles.forall(_.contains(staging)),
+      "the kmeans staged arm must scan the persisted postings")
+    assert(rows(Similarity.annIvfPqWith(spark, sf, Some(staging))) == pqRecompute,
+      "ann_ivf_pq must be row-identical across the staged dispatch")
+    assert(rows(Similarity.annIvfKmeansWith(spark, sf, Some(staging))) == kmRecompute,
+      "ann_ivf_kmeans must be row-identical across the staged dispatch")
   }
 
   test("a partial staging serves only its committed products") {
@@ -109,32 +93,28 @@ class IvfStagedSpec extends SparkSuite {
     // touching the served sibling.
     val staging = java.nio.file.Files.createTempDirectory("ivf-partial").toString
     Similarity.stageIvfIndex(spark, sf, staging)
-    withStaging(staging) {
-      val emb = graft.Tables.embeddings(spark, sf)
-      assert(Similarity.sharedIvfServing(spark, emb)
-        .assigned.inputFiles.exists(_.contains(staging)),
-        "the staged coarse index must serve")
-      assert(!Similarity.sharedPqServing(spark, emb)
-        .codes.inputFiles.exists(_.contains(staging)),
-        "pq must recompute when its product was not staged")
-      assert(!Similarity.sharedKmeansServing(spark, emb)
-        .assigned.inputFiles.exists(_.contains(staging)),
-        "kmeans must recompute when its product was not staged")
-    }
+    val emb = graft.Tables.embeddings(spark, sf)
+    assert(Similarity.sharedIvfServing(spark, emb, Some(staging))
+      .assigned.inputFiles.exists(_.contains(staging)),
+      "the staged coarse index must serve")
+    assert(!Similarity.sharedPqServing(spark, emb, Some(staging))
+      .codes.inputFiles.exists(_.contains(staging)),
+      "pq must recompute when its product was not staged")
+    assert(!Similarity.sharedKmeansServing(spark, emb, Some(staging))
+      .assigned.inputFiles.exists(_.contains(staging)),
+      "kmeans must recompute when its product was not staged")
   }
 
   test("provenance fence: an index staged from another corpus is refused") {
     val staging = java.nio.file.Files.createTempDirectory("ivf-foreign").toString
     Similarity.stageIvfIndex(spark, "/root/testdata/sf0.01", staging)
-    withStaging(staging) {
-      val emb = graft.Tables.embeddings(spark, sf)
-      val serving = Similarity.sharedIvfServing(spark, emb)
-      assert(!serving.assigned.inputFiles.exists(_.contains(staging)),
-        "a foreign-corpus staging must fall back to recompute")
-      // And the output still equals the recompute form.
-      assert(rows(Similarity.annIvf(spark, sf)) ==
-        rows(withoutConf(Similarity.annIvf(spark, sf))))
-    }
+    val emb = graft.Tables.embeddings(spark, sf)
+    val serving = Similarity.sharedIvfServing(spark, emb, Some(staging))
+    assert(!serving.assigned.inputFiles.exists(_.contains(staging)),
+      "a foreign-corpus staging must fall back to recompute")
+    // And the output still equals the recompute form.
+    assert(rows(Similarity.annIvfWith(spark, sf, Some(staging))) ==
+      rows(Similarity.annIvf(spark, sf)))
   }
 
   test("params fence: an index staged under different parameters is refused") {
@@ -148,48 +128,17 @@ class IvfStagedSpec extends SparkSuite {
       m.toSeq.map { case (k, v) =>
         if (k == "cellReplicas") (k, (v.toInt + 1).toString) else (k, v)
       })
-    withStaging(staging) {
-      val emb = graft.Tables.embeddings(spark, sf)
-      val serving = Similarity.sharedIvfServing(spark, emb)
-      assert(!serving.assigned.inputFiles.exists(_.contains(staging)),
-        "an index staged under different parameters must recompute")
-    }
+    val emb = graft.Tables.embeddings(spark, sf)
+    val serving = Similarity.sharedIvfServing(spark, emb, Some(staging))
+    assert(!serving.assigned.inputFiles.exists(_.contains(staging)),
+      "an index staged under different parameters must recompute")
   }
 
   test("missing or half-written staging is refused") {
     val staging = java.nio.file.Files.createTempDirectory("ivf-empty").toString
-    withStaging(staging) {
-      val emb = graft.Tables.embeddings(spark, sf)
-      val serving = Similarity.sharedIvfServing(spark, emb)
-      assert(!serving.assigned.inputFiles.exists(_.contains(staging)),
-        "a staging dir without tables+manifest must recompute")
-    }
-  }
-
-  test("runtime guard: a concurrent *_staged window fails loudly") {
-    // VERDICT r18 #6: the serial-driver contract is an invariant now —
-    // while one entry's staging window is open, a second entrant (any
-    // thread, any staging key) must throw, never race the session conf.
-    val staging = java.nio.file.Files.createTempDirectory("ivf-guard").toString
-    Dedup.withEntryStaging(spark, Similarity.IvfStagingConfKey, staging) {
-      val e = intercept[IllegalStateException] {
-        Dedup.withEntryStaging(spark, Dedup.StagingConfKey, staging)(())
-      }
-      assert(e.getMessage.contains("concurrent *_staged entries"))
-    }
-    // The gate must release on exit: a fresh window opens fine.
-    Dedup.withEntryStaging(spark, Similarity.IvfStagingConfKey, staging)(())
-    assert(spark.conf.getOption(Similarity.IvfStagingConfKey).isEmpty,
-      "the window must restore (here: unset) the prior conf on exit")
-  }
-
-  /** Evaluate under a guaranteed-unset conf (the fence tests run inside
-    * withStaging, so "the recompute arm" needs explicit scoping).
-    */
-  private def withoutConf[A](body: => A): A = {
-    val prev = spark.conf.getOption(Similarity.IvfStagingConfKey)
-    spark.conf.unset(Similarity.IvfStagingConfKey)
-    try body
-    finally prev.foreach(spark.conf.set(Similarity.IvfStagingConfKey, _))
+    val emb = graft.Tables.embeddings(spark, sf)
+    val serving = Similarity.sharedIvfServing(spark, emb, Some(staging))
+    assert(!serving.assigned.inputFiles.exists(_.contains(staging)),
+      "a staging dir without tables+manifest must recompute")
   }
 }

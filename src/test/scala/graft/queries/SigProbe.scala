@@ -19,7 +19,7 @@ object SigProbe {
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession("sig-probe")
     val sf = args.headOption.getOrElse("/tmp/graft_scale/sf10")
-    val sh = Dedup.cappedShingles(spark, sf).localCheckpoint()
+    val sh = Dedup.cappedShingles(spark, sf, None).localCheckpoint()
     println(s"[sigprobe] shingle rows=${sh.count()} parts=${sh.rdd.getNumPartitions}")
     def lap(tag: String): Unit = {
       val t0 = System.nanoTime()

@@ -56,9 +56,13 @@ object StagedBasisProbe {
     val wanted = sys.env.get("GRAFT_STAGED_QUERIES")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     val lapPairs = sys.env.getOrElse("GRAFT_STAGED_LAPS", "2").toInt
-    val queries: Seq[(String, (org.apache.spark.sql.SparkSession, String) => DataFrame)] =
-      Seq("dd_minhash" -> (Dedup.minhash _),
-        "dd_decontaminate_fuzzy" -> (CorpusOps.decontaminateFuzzy _))
+    // Each query over an optional staging directory (None = recompute).
+    val queries: Seq[(String, (String, Option[String]) => DataFrame)] =
+      Seq[(String, (String, Option[String]) => DataFrame)](
+        "dd_minhash" -> ((sf, st) =>
+          Dedup.minhashFrom(Dedup.sharedBasis(spark, sf, st))),
+        "dd_decontaminate_fuzzy" -> ((sf, st) => CorpusOps.decontaminateFuzzyCoarse(
+          spark, sf, CorpusOps.SketchCutMinMass, -1L, st)))
         .filter { case (n, _) => wanted.forall(_.contains(n)) }
 
     val points = for (sf <- dirs) yield {
@@ -69,14 +73,12 @@ object StagedBasisProbe {
       // Basis-subtree terms. Warm-up first: the fresh-JVM first lap of
       // anything at staged scale carries tens of seconds of JIT (the
       // FuzzyCoarseCheck lap-protocol note).
-      noop(Dedup.sharedBasis(spark, sf)) // warm-up (conf unset → recompute)
+      noop(Dedup.sharedBasis(spark, sf, None)) // warm-up (recompute)
       val basisRecompute = (1 to 3).map(_ =>
-        timed(noop(Dedup.sharedBasis(spark, sf)))).min
+        timed(noop(Dedup.sharedBasis(spark, sf, None)))).min
       val stageWrite = timed(Dedup.stageBasis(spark, sf, staging))
-      spark.conf.set(Dedup.StagingConfKey, staging)
       val stagedRead = (1 to 3).map(_ =>
-        timed(noop(Dedup.sharedBasis(spark, sf)))).min
-      spark.conf.unset(Dedup.StagingConfKey)
+        timed(noop(Dedup.sharedBasis(spark, sf, Some(staging))))).min
 
       // Whole-query terms, alternating arms (host drift lands on both),
       // min-of-2 warm each; row identity asserted on the first pair —
@@ -84,10 +86,8 @@ object StagedBasisProbe {
       // scale, here at staged scale.
       val qJsons = for ((name, q) <- queries) yield {
         def lapRows(staged: Boolean): (Long, Double) = {
-          if (staged) spark.conf.set(Dedup.StagingConfKey, staging)
-          else spark.conf.unset(Dedup.StagingConfKey)
           var n = 0L
-          val w = timed { n = q(spark, sf).count() }
+          val w = timed { n = q(sf, Some(staging).filter(_ => staged)).count() }
           (n, w)
         }
         lapRows(staged = false) // warm-up
@@ -96,7 +96,6 @@ object StagedBasisProbe {
           val (nSt, stW) = lapRows(staged = true)
           (nRe, reW, nSt, stW)
         }
-        spark.conf.unset(Dedup.StagingConfKey)
         val re = lapsRun.map(_._2).min
         val st = lapsRun.map(_._4).min
         val (nRe1, _, nSt1, _) = lapsRun.head

@@ -4,20 +4,17 @@ import graft.SparkSuite
 
 /** The staged-basis dispatch differential (round 17, VERDICT r16 #1):
   * `sharedBasis` must serve the staged compacted-shingle table when the
-  * session names one staged from THIS corpus, fall back to recompute on
+  * caller names one staged from THIS corpus, fall back to recompute on
   * any mismatch, and be row-identical across the switch for every
-  * signature-family consumer. The oracle surface never sets the conf,
-  * so these are the only tests that exercise the staged arm — the
+  * signature-family consumer. Only the *_staged entries pass a staging
+  * directory, so these tests exercise every fence arm — the
   * FuzzyCoarseCheck discipline: both regimes proven equal where the
   * dispatch lives, inert where the oracles run.
   */
 class StagedBasisSpec extends SparkSuite {
 
-  private def withStaging[A](dir: String)(body: => A): A =
-    try {
-      spark.conf.set(Dedup.StagingConfKey, dir)
-      body
-    } finally spark.conf.unset(Dedup.StagingConfKey)
+  private def minhash(staging: Option[String]) =
+    Dedup.minhashFrom(Dedup.sharedBasis(spark, sf, staging))
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -29,25 +26,26 @@ class StagedBasisSpec extends SparkSuite {
     val recomputeDelta = rows(Dedup.deltaDedup(spark, sf))
 
     Dedup.stageBasis(spark, sf, staging)
-    withStaging(staging) {
-      // Engagement: the dispatch must actually READ the staged parquet,
-      // not silently recompute — inputFiles of the served relation sit
-      // under the staging dir.
-      val served = Dedup.sharedBasis(spark, sf)
-      assert(served.inputFiles.nonEmpty &&
-        served.inputFiles.forall(_.contains(staging)),
-        s"staged arm must scan $staging, got ${served.inputFiles.take(2).mkString(",")}")
-      assert(served.schema("shingle").dataType ==
-        org.apache.spark.sql.types.LongType,
-        "staged basis must be the COMPACTED (long) form")
+    val dir = Some(staging)
+    // Engagement: the dispatch must actually READ the staged parquet,
+    // not silently recompute — inputFiles of the served relation sit
+    // under the staging dir.
+    val served = Dedup.sharedBasis(spark, sf, dir)
+    assert(served.inputFiles.nonEmpty &&
+      served.inputFiles.forall(_.contains(staging)),
+      s"staged arm must scan $staging, got ${served.inputFiles.take(2).mkString(",")}")
+    assert(served.schema("shingle").dataType ==
+      org.apache.spark.sql.types.LongType,
+      "staged basis must be the COMPACTED (long) form")
 
-      assert(rows(Dedup.minhash(spark, sf)) == recomputeMinhash,
-        "dd_minhash must be row-identical across the staged-basis dispatch")
-      assert(rows(CorpusOps.decontaminateFuzzy(spark, sf)) == recomputeFuzzy,
-        "dd_decontaminate_fuzzy must be row-identical across the dispatch")
-      assert(rows(Dedup.deltaDedup(spark, sf)) == recomputeDelta,
-        "dd_delta must be row-identical across the dispatch")
-    }
+    assert(rows(minhash(dir)) == recomputeMinhash,
+      "dd_minhash must be row-identical across the staged-basis dispatch")
+    assert(rows(CorpusOps.decontaminateFuzzyCoarse(spark, sf,
+        CorpusOps.SketchCutMinMass, -1L, dir)) == recomputeFuzzy,
+      "dd_decontaminate_fuzzy must be row-identical across the dispatch")
+    assert(rows(Dedup.deltaFrom(Dedup.cappedShingles(spark, sf, dir).localCheckpoint(),
+        c => c % Dedup.DeltaModulus === Dedup.DeltaResidue)) == recomputeDelta,
+      "dd_delta must be row-identical across the dispatch")
   }
 
   test("provenance fence: a basis staged from another corpus is refused") {
@@ -56,14 +54,11 @@ class StagedBasisSpec extends SparkSuite {
     // must force the recompute arm (wrong-corpus rows would otherwise
     // flow straight into signatures).
     Dedup.stageBasis(spark, "/root/testdata/sf0.01", staging)
-    withStaging(staging) {
-      val served = Dedup.sharedBasis(spark, sf)
-      assert(served.inputFiles.exists(_.contains("sf0.001")),
-        "mismatched staging must fall back to recomputing from the corpus")
-      // And the unstaged-equality still holds end-to-end.
-      assert(rows(Dedup.minhash(spark, sf)) ==
-        rows(withoutConf(Dedup.minhash(spark, sf))))
-    }
+    val served = Dedup.sharedBasis(spark, sf, Some(staging))
+    assert(served.inputFiles.exists(_.contains("sf0.001")),
+      "mismatched staging must fall back to recomputing from the corpus")
+    // And the unstaged-equality still holds end-to-end.
+    assert(rows(minhash(Some(staging))) == rows(minhash(None)))
   }
 
   test("generation fence: a basis staged from a regenerated corpus is refused") {
@@ -85,40 +80,24 @@ class StagedBasisSpec extends SparkSuite {
     val corpus = corpusDir.toString
     val staging = java.nio.file.Files.createTempDirectory("basis-gen-staging").toString
     Dedup.stageBasis(spark, corpus, staging)
-    withStaging(staging) {
-      val served = Dedup.sharedBasis(spark, corpus)
-      assert(served.inputFiles.forall(_.contains(staging)),
-        "fresh staging of the tmp corpus must be served")
-    }
+    assert(Dedup.sharedBasis(spark, corpus, Some(staging))
+      .inputFiles.forall(_.contains(staging)),
+      "fresh staging of the tmp corpus must be served")
     // "Regenerate" in place: same path, same bytes, new mtimes.
     val dataFiles =
       if (dstDocs.toFile.isDirectory)
         dstDocs.toFile.listFiles().filter(_.isFile).toSeq
       else Seq(dstDocs.toFile)
     dataFiles.foreach(f => assert(f.setLastModified(f.lastModified() + 5000)))
-    withStaging(staging) {
-      val served = Dedup.sharedBasis(spark, corpus)
-      assert(served.inputFiles.exists(_.contains(corpus)),
-        "a basis staged from a previous corpus generation must recompute")
-    }
+    assert(Dedup.sharedBasis(spark, corpus, Some(staging))
+      .inputFiles.exists(_.contains(corpus)),
+      "a basis staged from a previous corpus generation must recompute")
   }
 
   test("missing or half-written staging is refused") {
     val staging = java.nio.file.Files.createTempDirectory("basis-empty").toString
-    withStaging(staging) {
-      val served = Dedup.sharedBasis(spark, sf)
-      assert(served.inputFiles.exists(_.contains("sf0.001")),
-        "a staging dir without table+sidecar must recompute")
-    }
-  }
-
-  /** Evaluate under a guaranteed-unset conf (the fence tests run inside
-    * withStaging, so "the recompute arm" needs explicit scoping).
-    */
-  private def withoutConf[A](body: => A): A = {
-    val prev = spark.conf.getOption(Dedup.StagingConfKey)
-    spark.conf.unset(Dedup.StagingConfKey)
-    try body
-    finally prev.foreach(spark.conf.set(Dedup.StagingConfKey, _))
+    val served = Dedup.sharedBasis(spark, sf, Some(staging))
+    assert(served.inputFiles.exists(_.contains("sf0.001")),
+      "a staging dir without table+sidecar must recompute")
   }
 }
