@@ -80,8 +80,8 @@ object Manifest {
             m.get(k).exists(got => got.nonEmpty && got == canonical(v))
           } && served.forall(m.contains))
         if (m.isEmpty)
-          System.err.println(s"[graft] staged $dir/$name does not match the " +
-            "requested corpus or parameters - recomputing")
+          System.err.println(s"[graft] staged $dir/$name is missing or does not " +
+            "match the requested corpus or parameters - recomputing")
         m
       }
     } catch {
