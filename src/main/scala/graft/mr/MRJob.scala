@@ -1,6 +1,6 @@
 package graft.mr
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference engine's single datum type: a schema-less string pair
@@ -20,16 +20,25 @@ case class KV(key: String, value: String)
   * execution with exactly-once output (worker.go:84-94), and the sort-based
   * shuffle replaces the nMap×nReduce JSON intermediate files (worker.go:86).
   *
+  * The reduce side is the reference's reduce task, step for step
+  * (worker.go:116-154): one exchange partitions the KVs by key into
+  * `nReduce` buckets, each bucket is sorted by key, and a loop groups
+  * adjacent equal keys and calls `reducef` once per run. That is one
+  * shuffle per job, and exactly `nReduce` reduce tasks: AQE never
+  * coalesces a repartition to an explicit count.
+  *
   * Scale notes: `mapf` sees a whole file as one string — that is the
   * reference's semantic contract (worker.go:54-60), so per-file memory is
   * inherent to the API; `reducef` sees all values of a key, so a skewed key
   * materializes its value list exactly like the reference (worker.go:142-145).
+  * Only one key's values are held at a time; the sort spills to disk where
+  * the reference's in-memory sort would not.
   * The relational/query layer (graft.queries) never uses this API — it uses
   * algebraic aggregates that stream and combine map-side.
   */
 object MRJob {
 
-  /** flatMap(file → KVs) → shuffle by key → reduce(key, values) → KVs. */
+  /** flatMap(file → KVs) → partition by key → sort → reduce(key, values). */
   def run(spark: SparkSession,
           inputPaths: Seq[String],
           nReduce: Int,
@@ -45,20 +54,39 @@ object MRJob {
     val mapped: Dataset[KV] = files.flatMap { case (path, contents) =>
       mapf(fileName(path), contents)
     }
-    // groupByKey shuffles on key hash — the reference's fnv32a%nReduce
-    // partitioning is semantically equivalent (SURVEY.md §1.3): the test
-    // contract is per-key grouping, not bucket assignment.
-    val reduced = mapped
-      .groupByKey(_.key)
-      .mapGroups { (k, it) => KV(k, reducef(k, it.map(_.value).toSeq)) }
-    // nReduce controls output-partition (and thus sink-file) count parity.
-    reduced.repartition(nReduce, col("key"))
+    // Bucket r holds the keys hashing to r, like the reference's
+    // ihash(key)%nReduce (worker.go:21-25). Spark's hash differs, which is
+    // immaterial (SURVEY.md §1.3): the contract is per-key grouping, and
+    // bucket r is reduce task r, the one that writes mr-out-<r>.
+    mapped
+      .repartition(nReduce, col("key"))
+      .sortWithinPartitions(col("key"))
+      .mapPartitions(reduceSorted(_, reducef))
+  }
+
+  /** The reference's reduce loop over a key-sorted bucket
+    * (worker.go:135-154): gather each run of equal keys, call `reducef`
+    * once per run. Holds one key's values at a time.
+    */
+  private def reduceSorted(rows: Iterator[KV],
+                           reducef: (String, Seq[String]) => String): Iterator[KV] = {
+    val sorted = rows.buffered
+    new Iterator[KV] {
+      def hasNext: Boolean = sorted.hasNext
+      def next(): KV = {
+        val key = sorted.head.key
+        val values = Vector.newBuilder[String]
+        while (sorted.hasNext && sorted.head.key == key) values += sorted.next().value
+        KV(key, reducef(key, values.result()))
+      }
+    }
   }
 
   /** Text sink with the reference's exact `"key value\n"` line format
     * (worker.go:151) — one part file per reduce partition mirrors
-    * mr-out-<r>. Spark's FileCommitProtocol provides the same
-    * temp-file + rename idempotent commit as worker.go:156-164.
+    * mr-out-<r> (Spark writes none for an empty partition). Spark's
+    * FileCommitProtocol provides the same temp-file + rename idempotent
+    * commit as worker.go:156-164.
     */
   def runToText(spark: SparkSession,
                 inputPaths: Seq[String],
@@ -70,8 +98,14 @@ object MRJob {
       .select(concat_ws(" ", col("key"), col("value")))
       .write.mode("overwrite").text(outDir)
 
-  private def fileName(path: String): String =
-    path.substring(path.lastIndexOf('/') + 1)
+  /** The raw base name of an `input_file_name()` path. Spark returns the
+    * path URL-encoded (`my%20file.txt`); the reference and the sequential
+    * oracle name a document by its file name as it is on disk.
+    */
+  private def fileName(path: String): String = {
+    val decoded = new java.net.URI(path).getPath
+    decoded.substring(decoded.lastIndexOf('/') + 1)
+  }
 }
 
 /** The two real applications shipped with the reference, re-expressed as

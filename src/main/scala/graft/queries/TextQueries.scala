@@ -31,23 +31,28 @@ object TextQueries {
          |) t WHERE word <> '' GROUP BY word""".stripMargin
 
   /** indexer — per-doc distinct terms → posting list + document frequency.
+    * The per-document distinct is row-local, as in the reference's map
+    * (mrapps/indexer.go:20-31): `array_distinct` over one document's tokens,
+    * so the only shuffle is the `groupBy(word)`. The df is the size of the
+    * `collect_set` of doc_ids, not a row count, so two rows that share a
+    * doc_id still count as one document (the oracle's `SELECT DISTINCT
+    * doc_id, word`).
     * Posting lists sort numerically by doc_id, rendered as a CSV string so
     * the oracle hash compare is representation-stable across engines.
     * A skewed (stop-word-like) term concentrates its posting list on one
-    * reducer, same as the reference (SURVEY.md §7 risk note); at scale the
-    * df computation itself stays algebraic (count), only the list is held.
+    * reducer, same as the reference (SURVEY.md §7 risk note).
     */
   def invertedIndex(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
-      .select(col("doc_id"), explode(split(col("text"), MRApps.TokenPattern)).as("word"))
+      .select(col("doc_id"),
+        explode(array_distinct(split(col("text"), MRApps.TokenPattern))).as("word"))
       .filter(length(col("word")) > 0)
-      .distinct()
       .groupBy(col("word"))
-      .agg(
-        count(lit(1)).as("df"),
-        array_join(
-          transform(sort_array(collect_set(col("doc_id"))), _.cast("string")),
-          ",").as("docs"))
+      .agg(collect_set(col("doc_id")).as("ids"))
+      .select(
+        col("word"),
+        size(col("ids")).cast("long").as("df"),
+        array_join(transform(sort_array(col("ids")), _.cast("string")), ",").as("docs"))
 
   val invertedIndexSql: String =
     raw"""SELECT word, count(*) AS df,

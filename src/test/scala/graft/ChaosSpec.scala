@@ -77,19 +77,10 @@ class ChaosSpec extends SparkSuite {
       try { Thread.sleep(150); MRApps.wcReduce(k, vs) }
       finally ParallelismProbe.redCur.decrementAndGet()
     }
-    // AQE would coalesce the tiny shuffle to ONE reduce task and mask the
-    // parallelism under test; pin it off for this job only (restoring the
-    // caller's value, not a hard-coded one).
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prevCoalesce = spark.conf.getOption(coalesceKey)
-    spark.conf.set(coalesceKey, "false")
-    val out =
-      try MRJob.run(spark, Seq(dir.toString + "/*.txt"), 3, mapf, reducef)
-        .collect().map(kv => kv.key -> kv.value).toMap
-      finally prevCoalesce match {
-        case Some(v) => spark.conf.set(coalesceKey, v)
-        case None => spark.conf.unset(coalesceKey)
-      }
+    // nReduce = 3 reduce tasks: AQE never coalesces a repartition to an
+    // explicit count.
+    val out = MRJob.run(spark, Seq(dir.toString + "/*.txt"), 3, mapf, reducef)
+      .collect().map(kv => kv.key -> kv.value).toMap
     // Output must still be the sequential oracle's (mtiming also checks
     // correctness, mtiming.go:72-78).
     assert(out("common") == "8" && out("uniqd") == "1")

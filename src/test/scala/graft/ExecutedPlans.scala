@@ -30,4 +30,10 @@ object ExecutedPlans {
     * joins never executed.
     */
   def finalSection(plan: String): String = plan.split("== Initial Plan ==")(0)
+
+  /** Shuffle exchanges that ran in `plans`: `Exchange` nodes of each
+    * final section, not `BroadcastExchange` or `ReusedExchange`.
+    */
+  def exchanges(plans: Seq[String]): Int =
+    plans.map(p => "\\bExchange\\b".r.findAllMatchIn(finalSection(p)).size).sum
 }

@@ -76,6 +76,15 @@ class PlanSpec extends SparkSuite {
       s"no partial aggregation:\n$p")
   }
 
+  test("wc_inverted_index: one shuffle, the per-document distinct is row-local") {
+    // The reference de-duplicates a document's words inside its map
+    // (mrapps/indexer.go:20-31); a distinct() over (doc_id, word) pairs
+    // would add a second Exchange.
+    val plans = ExecutedPlans.of(spark)(SparkEntry.queries("wc_inverted_index")(spark, sf).collect())
+    val exchanges = ExecutedPlans.exchanges(plans)
+    assert(exchanges == 1, s"expected one shuffle, got $exchanges:\n${plans.mkString("\n")}")
+  }
+
   test("pipeline_clean_corpus: no cartesian/nested-loop anywhere in the chain") {
     val p = plan("pipeline_clean_corpus")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),

@@ -1,7 +1,7 @@
 package graft.mr
 
-import graft.SparkSuite
-import java.nio.file.{Files, Paths}
+import graft.{ExecutedPlans, SparkSuite}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Differential golden tests, the port of the reference's test-mr.sh scheme
@@ -38,6 +38,13 @@ class MRJobSpec extends SparkSuite {
                           reducef: (String, Seq[String]) => String): Seq[(String, String)] =
     MRJob.run(spark, corpus, 10, mapf, reducef)
       .collect().toSeq.map(kv => (kv.key, kv.value))
+
+  /** Part files of a `runToText` output directory. */
+  private def partFiles(out: String): Seq[Path] =
+    Files.list(Paths.get(out)).iterator().asScala.toSeq.filter { p =>
+      val f = p.getFileName.toString
+      f.startsWith("part-") && !f.endsWith(".crc")
+    }
 
   test("corpus present") { assert(corpus.size == 8) }
 
@@ -93,22 +100,60 @@ class MRJobSpec extends SparkSuite {
   }
 
   test("nReduce controls output partition count (mr-out-<r> parity)") {
-    import scala.jdk.CollectionConverters._
     val out = Files.createTempDirectory("mrout-n").toString
     MRJob.runToText(spark, corpus.take(2), 10, MRApps.wcMap, MRApps.wcReduce, out)
-    val parts = Files.list(Paths.get(out)).iterator().asScala
-      .map(_.getFileName.toString)
-      .count(f => f.startsWith("part-") && !f.endsWith(".crc"))
+    val parts = partFiles(out).size
     assert(parts == 10, s"expected 10 output partitions (nReduce), got $parts")
+  }
+
+  test("reduce loop: few keys over many buckets, each key reduced exactly once") {
+    // 3 keys, each in every file, nReduce 10: every key's values arrive
+    // from every map task, and 7 of the 10 buckets get no key at all.
+    val dir = Files.createTempDirectory("mr-fewkeys")
+    val files = (0 until 4).map { i =>
+      val text = (Seq.fill(i + 1)("alpha") ++ Seq.fill(2 * i + 1)("beta") ++ Seq("gamma"))
+        .mkString(" ")
+      Files.write(dir.resolve(s"f$i.txt"), text.getBytes("UTF-8")).toString
+    }
+    val out = Files.createTempDirectory("mrout-fewkeys").toString
+    MRJob.runToText(spark, files, 10, MRApps.wcMap, MRApps.wcReduce, out)
+    val lines = partFiles(out).flatMap(p => Files.readAllLines(p).asScala)
+    val got = lines.map { l => val Array(k, v) = l.split(" "); k -> v }
+    assert(got.map(_._1).sorted == Seq("alpha", "beta", "gamma"),
+      s"each key must appear exactly once: $lines")
+    assert(got.sorted == sequential(files, MRApps.wcMap, MRApps.wcReduce).sorted)
+    // Spark writes no part file for an empty bucket: count the buckets.
+    val run = MRJob.run(spark, files, 10, MRApps.wcMap, MRApps.wcReduce)
+    assert(run.rdd.getNumPartitions == 10, "one reduce task per mr-out-<r>")
+  }
+
+  test("document names are the raw file names, not URL-encoded") {
+    // input_file_name() is URL-encoded: a space reads back as %20. The
+    // reference and the oracle name a document by its file name on disk.
+    val dir = Files.createTempDirectory("mr-names")
+    val file = Files.write(dir.resolve("my fil\u00e9.txt"),
+      "alpha beta alpha".getBytes("UTF-8")).toString
+    val got = MRJob.run(spark, Seq(file), 3, MRApps.indexerMap, MRApps.indexerReduce)
+      .collect().toSeq.map(kv => (kv.key, kv.value)).sorted
+    val want = sequential(Seq(file), MRApps.indexerMap, MRApps.indexerReduce).sorted
+    assert(want.contains("alpha" -> "1 my fil\u00e9.txt"))
+    assert(got == want)
+  }
+
+  test("one shuffle per job: the executed plan has exactly one Exchange") {
+    // Partition by key, sort within the bucket, reduce adjacent keys — the
+    // reference's single reduce-side pass (worker.go:116-154).
+    val plans = ExecutedPlans.of(spark) {
+      MRJob.run(spark, corpus, 10, MRApps.wcMap, MRApps.wcReduce).collect()
+    }
+    val exchanges = ExecutedPlans.exchanges(plans)
+    assert(exchanges == 1, s"expected one shuffle, got $exchanges:\n${plans.mkString("\n")}")
   }
 
   test("runToText writes reference line format 'key value'") {
     val out = Files.createTempDirectory("mrout").toString
     MRJob.runToText(spark, corpus.take(1), 3, MRApps.wcMap, MRApps.wcReduce, out)
-    val lines = Files.list(Paths.get(out)).iterator().asScala
-      .filter(p => p.getFileName.toString.startsWith("part-")
-        && !p.getFileName.toString.endsWith(".crc"))
-      .flatMap(p => Files.readAllLines(p).asScala).toSeq
+    val lines = partFiles(out).flatMap(p => Files.readAllLines(p).asScala)
     assert(lines.nonEmpty)
     assert(lines.forall(_.matches("\\S+ \\S+")))
   }
