@@ -1,7 +1,15 @@
 package graft.mr
 
+import java.io.IOException
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.TaskContext
+import org.apache.spark.graftbridge.OutputMetricsBridge
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** The reference engine's single datum type: a schema-less string pair
   * (reference: mr/worker.go:15-18). Typed `Dataset[KV]` keeps the generic
@@ -16,9 +24,10 @@ case class KV(key: String, value: String)
   *
   * The coordinator/worker/RPC/S3 plumbing of the reference collapses into
   * Spark internals: DAGScheduler gives the map-before-reduce barrier
-  * (coordinator.go:105), task retry + FileCommitProtocol give at-least-once
-  * execution with exactly-once output (worker.go:84-94), and the sort-based
-  * shuffle replaces the nMap×nReduce JSON intermediate files (worker.go:86).
+  * (coordinator.go:105), task retry gives at-least-once execution, and the
+  * sort-based shuffle replaces the nMap×nReduce JSON intermediate files
+  * (worker.go:86). Exactly-once output is the reference's own commit, a
+  * temp file renamed per bucket (worker.go:156-164), see [[runToText]].
   *
   * The reduce side is the reference's reduce task, step for step
   * (worker.go:116-154): one exchange partitions the KVs by key into
@@ -45,8 +54,12 @@ object MRJob {
           mapf: (String, String) => Seq[KV],
           reducef: (String, Seq[String]) => String): Dataset[KV] = {
     import spark.implicits._
-    // Whole-file input: one record per file, exactly the reference's split
-    // granularity (one map task per file, worker.go:41-60).
+    // Whole-file input: one record per file, and `mapf` is called once per
+    // file, like the reference's map task (worker.go:41-60). Spark packs
+    // whole files into map tasks: each costs its length plus
+    // spark.sql.files.openCostInBytes (4 MiB), and a task takes files up to
+    // max(that cost, total / default parallelism), so small files share a
+    // task (16 small files at local[4]: 4 map tasks).
     val files: Dataset[(String, String)] =
       spark.read.option("wholetext", "true").text(inputPaths: _*)
         .select(input_file_name().as("path"), col("value"))
@@ -83,20 +96,89 @@ object MRJob {
   }
 
   /** Text sink with the reference's exact `"key value\n"` line format
-    * (worker.go:151) — one part file per reduce partition mirrors
-    * mr-out-<r> (Spark writes none for an empty partition). Spark's
-    * FileCommitProtocol provides the same temp-file + rename idempotent
-    * commit as worker.go:156-164.
+    * (worker.go:151) and the reference's commit (worker.go:129-164): reduce
+    * task r writes bucket r to a temp file and renames it to `part-<r>`, so
+    * there is one file per bucket, an empty bucket included (mr-out-<r>).
+    * A retried or speculative attempt renames the same bytes over it. The
+    * renamed files wait under `_temporary` until the job succeeds; the
+    * driver then moves them into `outDir` and writes `_SUCCESS`, so output
+    * is visible only once every bucket is done. A failed job leaves no part
+    * file. Like `mode("overwrite")`, the old `outDir` is deleted first.
+    *
+    * Spark's file writer ships the Hadoop conf inside every write task,
+    * and each reduce task would deserialize it again; here it is broadcast
+    * once per job. Files still go through Hadoop's `FileSystem`, so HDFS
+    * and `s3a://` directories work.
     */
   def runToText(spark: SparkSession,
                 inputPaths: Seq[String],
                 nReduce: Int,
                 mapf: (String, String) => Seq[KV],
                 reducef: (String, Seq[String]) => String,
-                outDir: String): Unit =
-    run(spark, inputPaths, nReduce, mapf, reducef)
-      .select(concat_ws(" ", col("key"), col("value")))
-      .write.mode("overwrite").text(outDir)
+                outDir: String): Unit = {
+    val out = new Path(outDir)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = out.getFileSystem(conf)
+    val staging = new Path(out, "_temporary")
+    fs.delete(out, true)
+    fs.mkdirs(staging)
+    val bc = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
+    try {
+      run(spark, inputPaths, nReduce, mapf, reducef)
+        .foreachPartition((bucket: Iterator[KV]) => writeBucket(bc.value.value, staging, bucket))
+      (0 until nReduce).foreach { r =>
+        val name = partName(r)
+        if (!fs.rename(new Path(staging, name), new Path(out, name)))
+          throw new IOException(s"job commit: cannot move ${new Path(staging, name)} into $out")
+      }
+      fs.delete(staging, true)
+      fs.create(new Path(out, "_SUCCESS"), true).close()
+    } catch {
+      case e: Throwable =>
+        fs.delete(staging, true)
+        throw e
+    } finally bc.destroy()
+  }
+
+  private def partName(r: Int): String = f"part-$r%05d"
+
+  /** Reduce task r's half of the commit: write bucket r to a temp file
+    * named for this attempt, then rename it to `staging/part-<r>`. Bytes
+    * and lines go to the task's output metrics, as Spark's writers report.
+    */
+  private def writeBucket(conf: Configuration, staging: Path, bucket: Iterator[KV]): Unit = {
+    val tc = TaskContext.get()
+    val r = tc.partitionId()
+    val part = new Path(staging, partName(r))
+    val tmp = new Path(staging, s".${partName(r)}.${tc.taskAttemptId()}.tmp")
+    val fs = staging.getFileSystem(conf)
+    val os = fs.create(tmp, true)
+    var bytes = 0L
+    var records = 0L
+    try {
+      try bucket.foreach { kv =>
+        if (kv.key == null || kv.value == null)
+          throw new IllegalArgumentException(
+            s"bucket $r: null ${if (kv.key == null) "key" else s"value for key '${kv.key}'"}; " +
+              "MR keys and values are strings, never null")
+        val line = s"${kv.key} ${kv.value}\n".getBytes(StandardCharsets.UTF_8)
+        os.write(line)
+        bytes += line.length
+        records += 1
+      } finally os.close()
+    } catch {
+      case e: Throwable =>
+        fs.delete(tmp, false)
+        throw e
+    }
+    // A target left by another attempt holds the same bytes; HDFS-style
+    // stores refuse to rename over it, so delete it and rename again.
+    if (!fs.rename(tmp, part) && !(fs.delete(part, false) && fs.rename(tmp, part)))
+      throw new IOException(s"bucket $r: cannot rename $tmp to $part")
+    val metrics = tc.taskMetrics().outputMetrics
+    OutputMetricsBridge.setBytesWritten(metrics, bytes)
+    OutputMetricsBridge.setRecordsWritten(metrics, records)
+  }
 
   /** The raw base name of an `input_file_name()` path. Spark returns the
     * path URL-encoded (`my%20file.txt`); the reference and the sequential

@@ -59,8 +59,9 @@ class ChaosSpec extends SparkSuite {
     import java.nio.file.Files
     import graft.mr.{KV, MRApps, MRJob}
     ParallelismProbe.reset()
-    // 8 tiny files → 8 map tasks (wholetext packs ~1 file per partition at
-    // the 4 MB open cost); test session runs local[4], so 4 slots.
+    // 8 tiny files → 4 map tasks of 2 files: wholetext packs whole files,
+    // each costing the 4 MiB open cost, into splits of total / 4 cores =
+    // 8 MiB. The test session runs local[4], so 4 slots.
     val dir = Files.createTempDirectory("graft-mtiming")
     (0 until 8).foreach { i =>
       // letter-only words: the wc tokenizer splits on non-letters

@@ -2,7 +2,19 @@ package graft.mr
 
 import graft.{ExecutedPlans, SparkSuite}
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.TaskContext
 import scala.jdk.CollectionConverters._
+
+/** Reduce calls per task attempt, shared by the local-mode tasks of a test. */
+object ReduceAttempts {
+  val calls = new ConcurrentHashMap[Long, AtomicInteger]()
+  val injected = new AtomicInteger(0)
+  def call(attemptId: Long): Int =
+    calls.computeIfAbsent(attemptId, _ => new AtomicInteger(0)).incrementAndGet()
+  def reset(): Unit = { calls.clear(); injected.set(0) }
+}
 
 /** Differential golden tests, the port of the reference's test-mr.sh scheme
   * (main/test-mr.sh:64-131): the distributed result must equal a
@@ -26,7 +38,7 @@ class MRJobSpec extends SparkSuite {
   }
 
   /** Eight frozen prose files (test resources `mr/`): mixed case,
-    * punctuation and non-ASCII letters, one map task per file.
+    * punctuation and non-ASCII letters; `mapf` sees each file whole.
     */
   private val corpus: Seq[String] = {
     val dir = Paths.get(getClass.getResource("/mr").toURI)
@@ -45,6 +57,30 @@ class MRJobSpec extends SparkSuite {
       val f = p.getFileName.toString
       f.startsWith("part-") && !f.endsWith(".crc")
     }
+
+  /** Names in an output directory, none if it does not exist. */
+  private def listing(out: String): Set[String] =
+    if (!Files.isDirectory(Paths.get(out))) Set.empty
+    else Files.list(Paths.get(out)).iterator().asScala.map(_.getFileName.toString).toSet
+
+  /** The state after job commit: exactly `nReduce` part files, nothing
+    * left under `_temporary`, `_SUCCESS` present. */
+  private def assertCommitted(out: String, nReduce: Int): Unit = {
+    val names = listing(out)
+    assert(partFiles(out).size == nReduce, s"expected $nReduce part files: $names")
+    assert(!names.contains("_temporary"), s"_temporary left behind: $names")
+    assert(names.contains("_SUCCESS"), s"no _SUCCESS: $names")
+  }
+
+  /** Sorted `"key value"` lines of an output directory against the oracle's. */
+  private def assertOracleLines(out: String, files: Seq[String],
+                                mapf: (String, String) => Seq[KV],
+                                reducef: (String, Seq[String]) => String): Unit = {
+    val got = partFiles(out).flatMap(p => Files.readAllLines(p).asScala).sorted
+    val want = sequential(files, mapf, reducef).map { case (k, v) => s"$k $v" }.sorted
+    assert(got.size == want.size)
+    assert(got == want)
+  }
 
   test("corpus present") { assert(corpus.size == 8) }
 
@@ -108,7 +144,7 @@ class MRJobSpec extends SparkSuite {
 
   test("reduce loop: few keys over many buckets, each key reduced exactly once") {
     // 3 keys, each in every file, nReduce 10: every key's values arrive
-    // from every map task, and 7 of the 10 buckets get no key at all.
+    // from every map task, and most of the 10 buckets get no key at all.
     val dir = Files.createTempDirectory("mr-fewkeys")
     val files = (0 until 4).map { i =>
       val text = (Seq.fill(i + 1)("alpha") ++ Seq.fill(2 * i + 1)("beta") ++ Seq("gamma"))
@@ -122,9 +158,74 @@ class MRJobSpec extends SparkSuite {
     assert(got.map(_._1).sorted == Seq("alpha", "beta", "gamma"),
       s"each key must appear exactly once: $lines")
     assert(got.sorted == sequential(files, MRApps.wcMap, MRApps.wcReduce).sorted)
-    // Spark writes no part file for an empty bucket: count the buckets.
-    val run = MRJob.run(spark, files, 10, MRApps.wcMap, MRApps.wcReduce)
-    assert(run.rdd.getNumPartitions == 10, "one reduce task per mr-out-<r>")
+    // Every bucket writes its file, an empty one included (mr-out-<r>),
+    // and part-<r> holds the keys of bucket r: pmod(hash(key), nReduce),
+    // the exchange's partition expression.
+    val parts = partFiles(out)
+    assert(parts.size == 10, s"one part file per bucket: $parts")
+    val bucketOf = Seq("alpha", "beta", "gamma").map { k =>
+      k -> spark.sql(s"SELECT pmod(hash('$k'), 10)").head().getInt(0)
+    }.toMap
+    val keysIn = parts.map { p =>
+      p.getFileName.toString.stripPrefix("part-").toInt ->
+        Files.readAllLines(p).asScala.map(_.split(" ")(0)).toSet
+    }.toMap
+    assert(keysIn == (0 until 10).map(r => r -> bucketOf.filter(_._2 == r).keySet).toMap,
+      s"buckets $bucketOf")
+    // beta and gamma share bucket 1, alpha is in 8: 8 part files are empty.
+    assert(parts.count(Files.size(_) == 0) == 8, s"buckets $bucketOf")
+  }
+
+  test("runToText commit: a reduce attempt that dies mid-bucket is retried, output once") {
+    // Every reduce task's first attempt throws on its second key, after
+    // its first line went to the temp file; local[4,2] retries it.
+    ReduceAttempts.reset()
+    val reducef: (String, Seq[String]) => String = (k, vs) => {
+      val tc = TaskContext.get()
+      if (tc.attemptNumber() == 0 && ReduceAttempts.call(tc.taskAttemptId()) == 2) {
+        ReduceAttempts.injected.incrementAndGet()
+        throw new RuntimeException("injected reduce crash after one written line")
+      }
+      MRApps.wcReduce(k, vs)
+    }
+    val out = Files.createTempDirectory("mrout-retry").toString
+    MRJob.runToText(spark, corpus, 10, MRApps.wcMap, reducef, out)
+    assert(ReduceAttempts.injected.get() == 10, "every reduce task's first attempt died")
+    assertCommitted(out, 10)
+    assert(listing(out).forall(n => !n.endsWith(".tmp")), s"temp file left: ${listing(out)}")
+    assertOracleLines(out, corpus, MRApps.wcMap, MRApps.wcReduce)
+  }
+
+  test("runToText commit: a failed job leaves no part file and no _SUCCESS") {
+    // Output is visible only at job commit (the reference's early_exit
+    // contract): a job whose reduce always throws publishes nothing.
+    val boom: (String, Seq[String]) => String = (_, _) => throw new RuntimeException("reduce fails")
+    val out = Files.createTempDirectory("mrout-fail").toString
+    intercept[Exception](MRJob.runToText(spark, corpus.take(2), 4, MRApps.wcMap, boom, out))
+    val names = listing(out)
+    assert(!names.exists(_.startsWith("part-")), s"part file published by a failed job: $names")
+    assert(!names.contains("_SUCCESS"), s"_SUCCESS written by a failed job: $names")
+  }
+
+  test("runToText commit: a rerun overwrites the directory, nReduce 10 then 3") {
+    val out = Files.createTempDirectory("mrout-over").toString
+    MRJob.runToText(spark, corpus.take(2), 10, MRApps.wcMap, MRApps.wcReduce, out)
+    assertCommitted(out, 10)
+    MRJob.runToText(spark, corpus.take(2), 3, MRApps.wcMap, MRApps.wcReduce, out)
+    assertCommitted(out, 3)
+    assertOracleLines(out, corpus.take(2), MRApps.wcMap, MRApps.wcReduce)
+  }
+
+  test("runToText fails fast on a null value, naming the bucket") {
+    // Reference strings cannot be nil; a null must not print as "key ".
+    val nullBeta: (String, Seq[String]) => String =
+      (k, vs) => if (k == "beta") null else MRApps.wcReduce(k, vs)
+    val dir = Files.createTempDirectory("mr-null")
+    val file = Files.write(dir.resolve("f.txt"), "alpha beta gamma".getBytes("UTF-8")).toString
+    val out = Files.createTempDirectory("mrout-null").toString
+    val e = intercept[Exception](MRJob.runToText(spark, Seq(file), 3, MRApps.wcMap, nullBeta, out))
+    assert(e.getMessage.matches("(?s).*bucket \\d+: null value for key 'beta'.*"), e.getMessage)
+    assert(!listing(out).exists(_.startsWith("part-")))
   }
 
   test("document names are the raw file names, not URL-encoded") {
