@@ -283,18 +283,19 @@ object CorpusOps {
 
   /** dd_decontaminate_fuzzy_staged — the staged-basis deployment form
     * as a correctness-gated entry (round 17, the dd_minhash_staged
-    * rationale): stage the compacted basis to a fresh directory, pass it
-    * to the `sharedBasis` dispatch, and run the same query. Same oracle
-    * as dd_decontaminate_fuzzy. This is the family where staging wins
+    * rationale): stage the compacted basis to a directory scoped to this
+    * call ([[graft.sources.Staging.scoped]]), pass it to the `sharedBasis`
+    * dispatch, and run the same query. Same oracle as
+    * dd_decontaminate_fuzzy. This is the family where staging wins
     * robustly (STAGED_r17: 26.9 → 18.8 s at the 100× staging, R* = 1
     * in both measured sessions) — the entry benches the form a real
     * ingest pipeline would run.
     */
-  def decontaminateFuzzyStaged(spark: SparkSession, sfDir: String): DataFrame = {
-    val staging = Dedup.entryStagingDir(sfDir)
-    Dedup.stageBasis(spark, sfDir, staging)
-    decontaminateFuzzyCoarse(spark, sfDir, SketchCutMinMass, -1L, Some(staging))
-  }
+  def decontaminateFuzzyStaged(spark: SparkSession, sfDir: String): DataFrame =
+    graft.sources.Staging.scoped("graft_fuzzy_staged") { staging =>
+      Dedup.stageBasis(spark, sfDir, staging)
+      decontaminateFuzzyCoarse(spark, sfDir, SketchCutMinMass, -1L, Some(staging))
+    }
 
   /** Core with the sketch-cut threshold injectable so the spec can force
     * both regimes on the same corpus (cut-on ≡ cut-off row identity —

@@ -230,97 +230,23 @@ object Dedup {
     minhashFrom(spark.read.parquet(stageBasis(spark, sfDir, stagingDir)))
 
   /** dd_minhash_staged — the deployment form INSIDE the correctness
-    * gate (round 17): stage the compacted basis to a fresh tmp
-    * location, then run the signature pipeline off the staged table.
-    * Same DuckDB oracle as dd_minhash — the dispatch differential
-    * (StagedBasisSpec) promoted to a driver-verified rows+schema+hash
-    * check, so "staged ≡ recompute" is re-proven by the oracle gate
-    * every round rather than only by a spec.
+    * gate (round 17): stage the compacted basis to a directory scoped
+    * to this call ([[graft.sources.Staging.scoped]]), then run the
+    * signature pipeline off the staged table. Same DuckDB oracle as
+    * dd_minhash — the dispatch differential (StagedBasisSpec) promoted
+    * to an oracle-verified rows+schema+hash check, so "staged ≡
+    * recompute" is re-proven by the oracle gate every round rather than
+    * only by a spec.
     *
     * The entry stages and then immediately reads ITS OWN staging
-    * output (no dispatch, so no fence is needed for staleness), and
-    * [[entryStagingDir]] is unique per invocation, so no concurrent
-    * run — in this process or another — writes under this read.
+    * output (no dispatch, so no fence is needed for staleness). Every
+    * call gets its own temp directory, so no concurrent run writes
+    * under this read, and the directory is deleted once the result is
+    * checkpointed.
     */
   def minhashStagedEntry(spark: SparkSession, sfDir: String): DataFrame =
-    minhashStaged(spark, sfDir, entryStagingDir(sfDir))
-
-  /** A fresh staging location for one *_staged invocation (tmp-dir
-    * scoped, so the entry is self-contained like every other `queries()`
-    * member). Keyed on the corpus basename plus an MD5 digest of the
-    * full path (ADVICE r17: String.hashCode can collide across corpora),
-    * the JVM pid, and a per-process invocation number, so no two runs —
-    * concurrent entries in one session or two bench/verify processes on
-    * one host — ever write the same staged table.
-    */
-  private[queries] def entryStagingDir(sfDir: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val base = new java.io.File(sfDir).getName
-    val pid = ProcessHandle.current().pid()
-    sweepDeadEntryStaging()
-    entryStagingCleanupHook
-    s"${System.getProperty("java.io.tmpdir")}/graft_entry_staging_" +
-      s"${base}_${digest}_p${pid}_${entryStagingSeq.incrementAndGet()}"
-  }
-
-  private val entryStagingSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Orphan control for the pid-scoped entry staging dirs (ADVICE r18):
-    * every bench/verify PROCESS mints fresh `graft_entry_staging_*_p<pid>`
-    * dirs, and before this round nothing deleted them — unbounded tmp
-    * growth on long-lived hosts. Two mechanisms, both driver-side only:
-    * a JVM shutdown hook deletes THIS process's dirs (prefix + `_p<pid>`
-    * plus the per-invocation `_<n>` suffix — the *_staged entries' own
-    * staging products), and
-    * [[sweepDeadEntryStaging]] reaps dirs whose embedded pid is no
-    * longer alive (a crashed or SIGKILLed run never reaches its hook).
-    * Live foreign pids are never touched — their staged tables may be
-    * mid-read.
-    */
-  private lazy val entryStagingCleanupHook: Unit = {
-    val pid = ProcessHandle.current().pid()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-      Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.startsWith("graft_entry_staging_")
-          // `_p<pid>` after the 12-hex digest, at the end or followed by
-          // the invocation suffix — a bare contains("_p12") would also
-          // match a live pid 123's dir.
-          && f.getName.matches(s".*_[0-9a-f]{12}_p$pid(_.*)?"))
-        .foreach(deleteRecursively)
-    }, "graft-entry-staging-cleanup"))
-  }
-
-  /** Reap entry-staging dirs left by DEAD processes (at most once per
-    * JVM — a listFiles over tmp is cheap but not free per query).
-    */
-  private lazy val sweptDeadEntryStaging: Unit = {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    val mine = ProcessHandle.current().pid()
-    Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("graft_entry_staging_"))
-      .foreach { f =>
-        // The pid rides the dir name as `_p<digits>` right after the
-        // 12-hex path digest (followed by the `_<n>` invocation suffix
-        // — never another `_p<digits>`).
-        val m = "_[0-9a-f]{12}_p(\\d+)".r.findFirstMatchIn(f.getName)
-        val deadOwner = m.exists { mm =>
-          val pid = mm.group(1).toLong
-          pid != mine && !ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)
-        }
-        if (deadOwner) deleteRecursively(f)
-      }
-  }
-
-  private def sweepDeadEntryStaging(): Unit = sweptDeadEntryStaging
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-        .foreach(deleteRecursively)
-    f.delete()
-  }
+    graft.sources.Staging.scoped("graft_minhash_staged")(
+      minhashStaged(spark, sfDir, _))
 
   /** Corpus-ingest staging step: write the COMPACTED shingle basis
     * (8 B xxhash64 longs per distinct (doc, shingle) — see
@@ -826,7 +752,7 @@ object Dedup {
   // the cheapest feasible width per (N, τ) under the miss bound.
   private val EmbedMaxBits = 26
   private val EmbedMaxTables = 256
-  private val EmbedDim = 64
+  private[queries] val EmbedDim = 64
   private val EmbedMissBound = 1e-3
 
   /** Seeded hyperplane tensors, one per embedding dimension (round 12:
@@ -917,7 +843,7 @@ object Dedup {
     * default (ADVICE r12): an untagged caller on a derived corpus would
     * silently share the selectivity cache with any other untagged corpus
     * over the same files. Caveat: a corpus with no file lineage (e.g.
-    * localCheckpoint'd, as in deltaEmbedStaged) yields an EMPTY corpusKey
+    * localCheckpoint'd) yields an EMPTY corpusKey
     * and bypasses the cache entirely — the sample is re-collected per
     * call, correct but unshared, even under the "hi" tag that file-backed
     * callers pool.
@@ -1684,8 +1610,11 @@ object Dedup {
   /** dd_embed_hi768_staged — the embedding deployment form INSIDE the
     * correctness gate (round 18, VERDICT r17 #2 — the dd_minhash_staged
     * rationale applied to the signature symmetry): stage the hyperplane
-    * signature relation at production dimension to a fresh directory,
-    * pass it to the dispatch, and run the same query. Same DuckDB oracle
+    * signature relation at production dimension to a directory scoped
+    * to this call, pass it to the dispatch, and run the same query (the
+    * result is checkpointed before the directory is deleted — one
+    * re-stage per call by design, the bench prices the ingest step
+    * honestly). Same DuckDB oracle
     * as dd_embed_hi768, so staged ≡ recompute is re-proven by
     * rows+schema+hash every round. Signing is the dominant hi768 stage
     * (~50 s/pass at the 100× staging), so this entry benches the form a
@@ -1696,10 +1625,11 @@ object Dedup {
     // plan embedHi768 solves (same corpus, cached selectivity sample,
     // deterministic minimizer), so the manifest fence matches.
     val (corpus, plan) = hi768CorpusAndPlan(spark, sfDir)
-    val staging = entryStagingDir(sfDir)
-    stageEmbedSigs(spark, corpus, "hi768", plan, EmbedHiDim, staging)
-    embedBucketedWithPlan(corpus, plan, EmbedHiThreshold, Some(staging),
-      EmbedHiDim, tag = "hi768")
+    graft.sources.Staging.scoped("graft_hi768_staged") { staging =>
+      stageEmbedSigs(spark, corpus, "hi768", plan, EmbedHiDim, staging)
+      embedBucketedWithPlan(corpus, plan, EmbedHiThreshold, Some(staging),
+        EmbedHiDim, tag = "hi768")
+    }
   }
 
   /** (corpus, solved plan) for the hi family — what a corpus-ingest
@@ -2529,8 +2459,8 @@ object Dedup {
     * Reuse of index products: signatures are per-document (groupBy
     * doc_id), so the old corpus's banded buckets are computable once at
     * ingest time and STAGED — the delta pass signs only the batch and
-    * probes staged ∪ fresh ([[deltaDedupStaged]], output-identical,
-    * asserted in DedupSpec). The df cap stays incrementally
+    * probes staged ∪ fresh ([[seedDeltaIndex]] + [[deltaIngestStep]],
+    * output-identical, asserted in DedupSpec). The df cap stays incrementally
     * maintainable too: per-shingle doc counts are additive under batch
     * arrival. The in-query form here recomputes both (the test corpus
     * re-stages per query); at 100 TB the staged form is the deployment
@@ -2552,25 +2482,6 @@ object Dedup {
     val buckets = bandedBuckets(sh, BandRows)
     val newB = buckets.filter(isNew(col("doc_id")))
     deltaVerify(sh, deltaCandidates(newB, buckets), isNew, 0.8)
-  }
-
-  /** The staged deployment shape: the old corpus's banded buckets are
-    * written once (at ingest time — the per-corpus index product), and
-    * the delta pass computes signatures ONLY for the batch, probing
-    * staged ∪ fresh. Output-identical to [[deltaDedup]] because
-    * signatures are per-document: filtering before signing ≡ signing
-    * then filtering (DedupSpec asserts equality).
-    */
-  def deltaDedupStaged(spark: SparkSession, sfDir: String,
-      stagingDir: String): DataFrame = {
-    val isNew = (c: Column) => c % DeltaModulus === DeltaResidue
-    val sh = cappedShingles(spark, sfDir, None).localCheckpoint()
-    val staged = s"$stagingDir/old_buckets.parquet"
-    bandedBuckets(sh.filter(!isNew(col("doc_id"))), BandRows)
-      .write.mode("overwrite").parquet(staged)
-    val oldB = spark.read.parquet(staged)
-    val newB = bandedBuckets(sh.filter(isNew(col("doc_id"))), BandRows)
-    deltaVerify(sh, deltaCandidates(newB, oldB.unionByName(newB)), isNew, 0.8)
   }
 
   /** Candidate pairs from a one-sided band-bucket join: every candidate
@@ -2747,17 +2658,15 @@ object Dedup {
     * tagged by step. B1's pairs are emitted at step 1 and MUST NOT
     * reappear at step 2 (B1 is "old" by then — the probe side is B2
     * alone), and old×old pairs never appear at all. The staging directory
-    * is fresh per call and deleted after the (checkpointed) result
-    * materializes, so the entry is idempotent under re-runs and
-    * cross-mode fingerprinting.
+    * is scoped to the call ([[graft.sources.Staging.scoped]]), so the
+    * entry is idempotent under re-runs and cross-mode fingerprinting.
     */
   def deltaChain(spark: SparkSession, sfDir: String): DataFrame = {
     // Lazy: the seed-index write is the materializing action (one scan),
     // so the eager checkpoint's separate job is saved.
     val sh = cappedShingles(spark, sfDir, None).localCheckpoint(eager = false)
-    val dir = java.nio.file.Files.createTempDirectory("graft_delta_chain")
     val m = DeltaModulus
-    try {
+    graft.sources.Staging.scoped("graft_delta_chain") { dir =>
       val seed = s"$dir/seed.parquet"
       val b1 = s"$dir/b1.parquet"
       val b2 = s"$dir/b2.parquet"
@@ -2770,19 +2679,12 @@ object Dedup {
       // ONE eager materialization for the whole chain (round 19 fusion):
       // nothing staged is ever mutated, so neither step needs its own
       // checkpoint barrier — the union job computes both verify subtrees
-      // concurrently, and the checkpoint lands the rows before the
-      // staging dir is deleted below.
+      // concurrently, and scoped's eager checkpoint lands the rows before
+      // the staging dir is deleted.
       s1.withColumn("step", lit(1))
         .unionByName(s2.withColumn("step", lit(2)))
         .select(col("step"), col("doc_a"), col("doc_b"), col("jaccard"))
-        .localCheckpoint()
-    } finally deleteDir(dir)
-  }
-
-  private[queries] def deleteDir(dir: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-      .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    }
   }
 
   /** Oracle: the same exact quadratic bipartite form as dd_delta, once
@@ -2856,10 +2758,10 @@ object Dedup {
     * per-table base keys — the per-corpus staged signature product —
     * and the df-style work is batch·corpus, not corpus². The in-query
     * form signs everything (the test corpus re-stages per query);
-    * [[deltaEmbedStaged]] is the deployment shape: old base keys read
-    * from parquet, ONLY the batch signed fresh, output-identical
-    * (DedupSpec asserts equality — signatures are per-vector, so
-    * sign-then-filter ≡ filter-then-sign).
+    * [[seedEmbedDeltaIndex]] + [[deltaEmbedIngestStep]] is the
+    * deployment shape: old base keys read from parquet, ONLY the batch
+    * signed fresh, output-identical (DedupSpec asserts equality —
+    * signatures are per-vector, so sign-then-filter ≡ filter-then-sign).
     *
     * Oracle: exact quadratic bipartite form over the same deterministic
     * hi corpus (embedHiSql's CTEs restricted to pairs touching the
@@ -2929,33 +2831,6 @@ object Dedup {
       .select(least(col("vec_a"), col("vec_b")).as("vec_a"),
         greatest(col("vec_a"), col("vec_b")).as("vec_b"))
     cascadeVerify(corpus, cands, threshold, dim, preSketches = preSketches)
-  }
-
-  /** The staged deployment shape: the old corpus's base bucket keys are
-    * written once (the per-corpus index product), and the delta pass
-    * signs ONLY the batch, probing staged ∪ fresh. Output-identical to
-    * [[deltaEmbed]] because signatures are per-vector (DedupSpec asserts
-    * equality).
-    */
-  def deltaEmbedStaged(spark: SparkSession, sfDir: String,
-      stagingDir: String): DataFrame = {
-    val nBase = Tables.embeddings(spark, sfDir).count()
-    val corpus = embedHiCorpus(spark, sfDir).localCheckpoint()
-    val n = nBase + nBase / 10
-    val plan = solveLsh(n, EmbedHiThreshold,
-      Some(sampledP1Cached(corpus, n, "hi")))
-    // The staged product is the SIGNATURE relation — exactly what
-    // stageEmbedSigs persists (round 19, VERDICT r18 #2: one persistence
-    // idiom for the embedding families); bucket keys are a cheap derived
-    // projection (posexplode), never a second staged format.
-    stageEmbedSigsAt(spark, corpus.filter(!deltaEmbedIsNew(col("vec_id"))),
-      "delta-old", plan, EmbedDim, stagingDir, SelfStagedFp)
-    val sigsNew = computeEmbedSigs(
-      corpus.filter(deltaEmbedIsNew(col("vec_id"))), plan, EmbedDim)
-    deltaEmbedVerify(corpus,
-      keyedBuckets(spark.read.parquet(embedSigsPath(stagingDir)))
-        .unionByName(keyedBuckets(sigsNew)),
-      sigsNew, plan, EmbedHiThreshold, EmbedDim)
   }
 
   /** Fingerprint sentinel for SELF-READ staging (the delta lifecycles
@@ -3077,9 +2952,8 @@ object Dedup {
     * B1's pairs emitted at step 1 only. Plan solving and selectivity
     * sampling happen ONCE at seed (pooled with the "hi" family cache
     * before the execution checkpoint), the frozen plan rides with the
-    * index. Fresh staging per call, deleted after the checkpointed
-    * results materialize — idempotent under re-runs and cross-mode
-    * fingerprinting.
+    * index. Staging is scoped to the call ([[graft.sources.Staging.scoped]])
+    * — idempotent under re-runs and cross-mode fingerprinting.
     */
   def deltaEmbedChain(spark: SparkSession, sfDir: String): DataFrame = {
     val nBase = Tables.embeddings(spark, sfDir).count()
@@ -3090,11 +2964,10 @@ object Dedup {
     // five execution consumers.
     val plan = solveLsh(n, EmbedHiThreshold, Some(sampledP1Cached(corpusL, n, "hi")))
     val corpus = corpusL.localCheckpoint()
-    val dir = java.nio.file.Files.createTempDirectory("graft_embed_chain")
-    try {
+    graft.sources.Staging.scoped("graft_embed_chain") { dir =>
       seedEmbedDeltaIndex(spark, corpus,
-        c => !(embedChainB1(c) || embedChainB2(c)), plan, EmbedDim, dir.toString)
-      val seed = embedSigsPath(dir.toString)
+        c => !(embedChainB1(c) || embedChainB2(c)), plan, EmbedDim, dir)
+      val seed = embedSigsPath(dir)
       val b1 = s"$dir/b1_sigs.parquet"
       val b2 = s"$dir/b2_sigs.parquet"
       // ONE verify-sketch signing for both steps (the corpus is the same
@@ -3106,18 +2979,17 @@ object Dedup {
           Some(verifySketchesOf(corpus, EmbedDim))
         else None
       val s1 = deltaEmbedIngestStep(spark, corpus, embedChainB1,
-        EmbedHiThreshold, dir.toString, Seq(seed), b1, pre)
+        EmbedHiThreshold, dir, Seq(seed), b1, pre)
       val s2 = deltaEmbedIngestStep(spark, corpus, embedChainB2,
-        EmbedHiThreshold, dir.toString, Seq(seed, b1), b2, pre)
+        EmbedHiThreshold, dir, Seq(seed, b1), b2, pre)
       // ONE eager materialization for the whole chain (the deltaChain
       // fusion note): nothing staged is mutated, both verify subtrees
-      // compute in the union job, and the rows land before the staging
-      // dir is deleted below.
+      // compute in the union job, and scoped's checkpoint lands the rows
+      // before the staging dir is deleted.
       s1.withColumn("step", lit(1))
         .unionByName(s2.withColumn("step", lit(2)))
         .select(col("step"), col("vec_a"), col("vec_b"), col("cs"))
-        .localCheckpoint()
-    } finally deleteDir(dir)
+    }
   }
 
   /** Oracle: deltaEmbedSql's deterministic corpus CTEs, quadratic

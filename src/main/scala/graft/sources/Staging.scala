@@ -1,6 +1,9 @@
 package graft.sources
 
 import java.io.File
+import java.nio.file.{Files, Path}
+
+import org.apache.spark.sql.DataFrame
 
 /** Staging directories for artifacts derived once per corpus (synthesized
   * media payloads, watermark sentinels). The key is the pair
@@ -19,6 +22,9 @@ import java.io.File
   * wrong. Superseded stages of the same source are deleted when the new
   * fingerprint is first staged, so /tmp holds at most one generation per
   * (prefix, source).
+  *
+  * [[scoped]] is the other lifecycle: staging that lives inside one call
+  * and is deleted when the call returns.
   */
 object Staging {
 
@@ -56,13 +62,27 @@ object Staging {
       .filter(f => f.isDirectory
         && f.getName.startsWith(s"${prefix}_${pathKey}_")
         && f.getName != name)
-    stale.foreach(deleteRecursively)
+    stale.foreach(f => deleteRecursively(f.toPath))
     new File(tmp, name)
   }
 
-  private def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(deleteRecursively)
-    f.delete()
+  /** Run `body` against a fresh temp directory that lives for this call
+    * only. The result is materialized with an eager `localCheckpoint()`
+    * BEFORE the directory is deleted, so it no longer reads any file
+    * `body` staged there; the directory is deleted whether `body`
+    * returns or throws.
+    */
+  def scoped(prefix: String)(body: String => DataFrame): DataFrame = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir.toString).localCheckpoint()
+    finally deleteRecursively(dir)
+  }
+
+  /** Delete `root` and everything under it (children first). */
+  def deleteRecursively(root: Path): Unit = {
+    val ls = Files.walk(root)
+    try ls.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.deleteIfExists(p))
+    finally ls.close()
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -29,13 +29,6 @@ object StreamingQueries {
   private val sinkCounter = new java.util.concurrent.atomic.AtomicLong(0)
   private def freshSink(prefix: String): String =
     s"${prefix}_${sinkCounter.incrementAndGet()}"
-
-  private def deleteRecursively(root: Path): Unit = {
-    val ls = Files.walk(root)
-    try ls.sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(p => Files.deleteIfExists(p))
-    finally ls.close()
-  }
 
   /** Run `start` with the bounded-replay streaming confs applied and the
     * session values restored after the stream is CONSTRUCTED (both confs
@@ -175,7 +168,7 @@ object StreamingQueries {
           Files.move(file, sentinelDir.resolve(s"s$n.parquet"),
             java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         } finally ls.close()
-        deleteRecursively(part)
+        graft.sources.Staging.deleteRecursively(part)
       }
       writeSentinel(1, -1L, maxTs.plusSeconds(12 * 3600))
       Files.write(sentinelDir.resolve("_STAGED"), Array.emptyByteArray)

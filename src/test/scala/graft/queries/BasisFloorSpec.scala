@@ -64,7 +64,7 @@ class BasisFloorSpec extends SparkSuite {
         s"sub-floor docs must emit no pairs; got ${pairs.filter(p => p._1 < 1100L).take(5)}")
       assert(pairs.contains((2000001L, 2000002L)),
         s"comparable near-dup pair lost by the floor; got $pairs")
-    } finally Dedup.deleteDir(dir)
+    } finally graft.sources.Staging.deleteRecursively(dir)
   }
 
   test("dd_winnow: sub-floor fingerprint sets are incomparable; comparable pairs found") {
@@ -100,7 +100,7 @@ class BasisFloorSpec extends SparkSuite {
         s"sub-floor docs must emit no pairs; got ${pairs.filter(p => p._1 < 1100L).take(5)}")
       assert(pairs.contains((2000001L, 2000002L)),
         s"comparable near-dup pair lost by the floor; got $pairs")
-    } finally Dedup.deleteDir(dir)
+    } finally graft.sources.Staging.deleteRecursively(dir)
   }
 
   test("hash compaction is collision-free on every driver-verified corpus (sentinel)") {

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSuite {
@@ -608,13 +609,20 @@ class DedupSpec extends SparkSuite {
   }
 
   test("staged delta (old buckets from parquet, batch signed fresh) equals in-query") {
+    // The chain's own functions with a single batch: seed the index from
+    // the old corpus, then one ingest step for the dd_delta batch.
     val staging = java.nio.file.Files.createTempDirectory("graft-delta").toString
     val inQuery = Dedup.deltaDedup(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val staged = Dedup.deltaDedupStaged(spark, sf, staging)
+    val isNew = (c: Column) => c % Dedup.DeltaModulus === Dedup.DeltaResidue
+    val sh = Dedup.cappedShingles(spark, sf, None).localCheckpoint()
+    val seed = s"$staging/seed.parquet"
+    Dedup.seedDeltaIndex(sh, c => !isNew(c), seed)
+    val staged = Dedup.deltaIngestStep(spark, sh, isNew, Seq(seed),
+        s"$staging/b1.parquet")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(staged == inQuery)
-    assert(new java.io.File(s"$staging/old_buckets.parquet").exists,
+    assert(new java.io.File(seed).exists,
       "old-corpus bucket table must be materialized")
   }
 
@@ -655,10 +663,18 @@ class DedupSpec extends SparkSuite {
   }
 
   test("staged delta-embed (old keys from parquet, batch signed fresh) equals in-query") {
+    // The embed chain's own functions with a single batch, on the plan
+    // dd_delta_embed solves (same corpus, same cached selectivity).
     val staging = java.nio.file.Files.createTempDirectory("graft-delta-emb").toString
     val inQuery = Dedup.deltaEmbed(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val staged = Dedup.deltaEmbedStaged(spark, sf, staging)
+    val (corpusL, plan) = Dedup.hiCorpusAndPlan(spark, sf)
+    val corpus = corpusL.localCheckpoint()
+    Dedup.seedEmbedDeltaIndex(spark, corpus, c => !Dedup.deltaEmbedIsNew(c),
+      plan, Dedup.EmbedDim, staging)
+    val staged = Dedup.deltaEmbedIngestStep(spark, corpus, Dedup.deltaEmbedIsNew,
+        Dedup.EmbedHiThreshold, staging, Seq(Dedup.embedSigsPath(staging)),
+        s"$staging/b1_sigs.parquet")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(staged == inQuery)
     assert(new java.io.File(s"$staging/embed_sigs.parquet").exists,

@@ -58,8 +58,9 @@ object EmbedStagedProbe {
       val qJsons = for ((name, dim, prep) <- families) yield {
         val tag = if (dim == 768) "hi768" else "hi"
         // Pid-scoped (ADVICE r18): two concurrent probe processes on one
-        // host must never overwrite each other's staged table mid-read —
-        // the same rule as Dedup.entryStagingDir.
+        // host must never overwrite each other's staged table mid-read.
+        // Not Staging.scoped: the probe times the staging write and the
+        // staged read apart, so the directory outlives any one call.
         val staging = s"/tmp/graft_embed_staging/" +
           s"${new java.io.File(sf).getName}_${name}_p" +
           ProcessHandle.current().pid()

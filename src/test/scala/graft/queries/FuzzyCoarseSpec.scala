@@ -80,7 +80,7 @@ class FuzzyCoarseSpec extends SparkSuite {
       // The cold near-dup pair must be untouched by hot routing.
       assert(coarseOn.exists { case (t, e, _) => t == 7001L && e == 7000L },
         s"cold near-dup pair lost: ${coarseOn.filter(_._1 > 1000L)}")
-    } finally Dedup.deleteDir(dir)
+    } finally graft.sources.Staging.deleteRecursively(dir)
   }
 
   test("borderline-J pair routed entirely through hot buckets: coarse survival AND the documented miss are both pinned") {
@@ -210,7 +210,7 @@ class FuzzyCoarseSpec extends SparkSuite {
       assert(coarseOut.count(p => p._1 % 7 == 1 && p._2 == 700L) == 80,
         s"cluster pairs lost: ${coarseOut.size}")
       assert(mass >= 0) // census materialized
-    } finally Dedup.deleteDir(dir)
+    } finally graft.sources.Staging.deleteRecursively(dir)
   }
 
   test("coarse guard is inert on every driver-verified corpus (sentinel)") {

@@ -40,7 +40,7 @@ class FuzzyFloorSpec extends SparkSuite {
       assert(!out.exists(p => p._1 == 141L || p._2 == 140L),
         s"sub-floor docs (3 shingles < ${CorpusOps.MinCappedShingles}) must " +
           s"be incomparable; got $out")
-    } finally Dedup.deleteDir(dir)
+    } finally graft.sources.Staging.deleteRecursively(dir)
   }
 
   test("floor is inert on every driver-verified corpus (oracle-divergence sentinel)") {

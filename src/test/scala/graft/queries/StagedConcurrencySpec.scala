@@ -10,11 +10,13 @@ import org.apache.spark.sql.DataFrame
 
 /** The *_staged entries take their staging directory as an argument, so
   * several of them — and two runs of the same one — can run at once in
-  * one session. Each staged invocation writes its own directory, so the
-  * two dd_minhash_staged runs never read each other's half-written
-  * table, and no entry mutates a session conf another one reads. The
-  * streaming entry rides along because it is the one entry that still
-  * sets (and restores) a session conf around its start.
+  * one session. Each call stages into its own temp directory
+  * (`Staging.scoped`), so the two dd_minhash_staged runs never read each
+  * other's half-written table, and the directory is deleted before the
+  * call returns: no run leaves anything behind in `java.io.tmpdir`. No
+  * entry mutates a session conf another one reads. The streaming entry
+  * rides along because it is the one entry that still sets (and
+  * restores) a session conf around its start.
   */
 class StagedConcurrencySpec extends SparkSuite {
 
@@ -30,8 +32,15 @@ class StagedConcurrencySpec extends SparkSuite {
 
   private def run(name: String): String = rowHash(SparkEntry.queries(name)(spark, sf))
 
+  private def tmpEntries(): Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+      .map(_.toSet).getOrElse(Set.empty)
+
   test("staged entries run concurrently in one session, each equal to its serial run") {
     val serial = entries.distinct.map(n => n -> run(n)).toMap
+    // After the serial runs, so the content-keyed stages that live
+    // across calls (the streaming sentinel) already exist.
+    val tmpBefore = tmpEntries()
     val partitions = spark.conf.get("spark.sql.shuffle.partitions")
     val pool = Executors.newFixedThreadPool(entries.size)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
@@ -52,5 +61,8 @@ class StagedConcurrencySpec extends SparkSuite {
         .mkString("; "))
     assert(spark.conf.get("spark.sql.shuffle.partitions") == partitions,
       "the session's shuffle partitions must be back at their prior value")
+    val left = tmpEntries() -- tmpBefore
+    assert(left.isEmpty,
+      s"staging outlived its call: ${left.toSeq.sorted.mkString(", ")}")
   }
 }

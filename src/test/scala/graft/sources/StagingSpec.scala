@@ -91,4 +91,31 @@ class StagingSpec extends SparkSuite {
     assert(!d1.exists(), "superseded stage not cleaned up")
     assert(dOther.exists(), "unrelated corpus's stage was deleted")
   }
+
+  test("scoped: a body that throws leaves no directory") {
+    var seen: Option[String] = None
+    val e = intercept[IllegalStateException] {
+      Staging.scoped("graft-scoped-throw") { dir =>
+        seen = Some(dir)
+        spark.range(10).write.parquet(s"$dir/t.parquet")
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(e.getMessage == "boom")
+    assert(seen.nonEmpty, "the body never ran")
+    assert(!Files.exists(Path.of(seen.get)),
+      s"${seen.get} outlived a throwing body")
+  }
+
+  test("scoped: the result still collects after its directory is gone") {
+    var seen: Option[String] = None
+    val df = Staging.scoped("graft-scoped-read") { dir =>
+      seen = Some(dir)
+      spark.range(100).toDF("id").write.parquet(s"$dir/t.parquet")
+      spark.read.parquet(s"$dir/t.parquet").filter(col("id") % 2 === 0)
+    }
+    assert(!Files.exists(Path.of(seen.get)),
+      s"${seen.get} outlived the call")
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq == (0L until 100L by 2))
+  }
 }
