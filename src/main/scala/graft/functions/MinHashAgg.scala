@@ -95,9 +95,8 @@ object MinHashAgg {
   * replacing a `zip_with` + `aggregate` chain: Spark's higher-order
   * functions evaluate their lambda INTERPRETED per element, and the
   * sketch cut's agreement scan was measured at 12.6 s for 11.5M
-  * candidate pairs × 64 positions at the 100× staging (round 16,
-  * SigProbe/FuzzyProbe decomposition) — the single largest warm term of
-  * dd_decontaminate_fuzzy after the floor. One branch-light loop inside
+  * candidate pairs × 64 positions at the 100× staging (round 16) — the
+  * single largest warm term of dd_decontaminate_fuzzy after the floor. One branch-light loop inside
   * whole-stage codegen does the same scan in a fraction of that.
   */
 case class SigAgree(left: Expression, right: Expression)

@@ -392,7 +392,7 @@ object CorpusOps {
     // candidate semi-join, and verification sizes all branch off it.
     // Lazy (round 19): the occ-totals aggregate below is the
     // materializing action — a single scan of this relation — so the
-    // eager checkpoint's separate job is saved (the minhashFrom note).
+    // eager checkpoint's separate job is saved.
     val sh = Dedup.cappedShingles(spark, sfDir, staging).localCheckpoint(eager = false)
     // Signatures are materialized ONCE and serve twice: band keys for
     // candidate generation, and the per-pair Jaccard sketch that prunes
@@ -400,8 +400,8 @@ object CorpusOps {
     // deliberately unselective (banding miss (1−τ²)³² ≈ 1e-4), which at
     // 30× staged scale admitted ~1M candidate pairs covering 83% of the
     // corpus — the downstream bipartite shingle join was doing
-    // near-all-corpus work for 57 true pairs (FuzzyProbe decomposition:
-    // 15.9 s of a 31.9 s wall). The sketch cut dismisses the low-J
+    // near-all-corpus work for 57 true pairs (15.9 s of a 31.9 s wall,
+    // round 14). The sketch cut dismisses the low-J
     // candidate mass on signature agreement before any shingle re-join.
     // LAZY checkpoint: the signature blocks materialize as a side effect
     // of the candidate job (buckets consume sigs), so the small-corpus
@@ -507,9 +507,9 @@ object CorpusOps {
     // NOT checkpointed since round 20: the distinct's exchange is
     // computed once for all three consumers via ReuseExchange/AQE stage
     // reuse, and AQE picks the pair joins' regime from the MEASURED
-    // stage size. NOTE the asymmetry with minhashFrom, which
-    // re-gained its candidates checkpoint (plan truncation only, lazy,
-    // un-counted) later in round 20: re-adding the same lazy checkpoint
+    // stage size. NOTE the asymmetry with Dedup.lshFunnel, which keeps
+    // a candidates checkpoint (plan truncation only, lazy, un-counted,
+    // round 20): re-adding the same lazy checkpoint
     // HERE was measured 2.66 → 3.6–3.9 s (alternating isolation arms,
     // both directions) — this subtree is small (sigs and sh are already
     // checkpointed leaves, so planning is cheap) and the checkpoint
@@ -530,7 +530,6 @@ object CorpusOps {
     // 2 × SketchCutMinMass docs, above it the cut's survivors (60 pairs
     // at the 100× staging).
     val shCand = sh.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-    val sizes = shCand.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val evalSh = shCand.filter(col("doc_id") % EvalModulus === 0)
       .select(col("doc_id").as("eval_doc"), col("shingle"))
     val trainSh = shCand.filter(col("doc_id") % EvalModulus =!= 0)
@@ -539,16 +538,7 @@ object CorpusOps {
       .groupBy(col("train_doc"), col("eval_doc"))
       .agg(count(lit(1)).as("c"))
       .join(candidates, Seq("train_doc", "eval_doc"), "left_semi")
-    common
-      .join(sizes.select(col("doc_id").as("train_doc"), col("n").as("nt")),
-        Seq("train_doc"))
-      .join(sizes.select(col("doc_id").as("eval_doc"), col("n").as("ne")),
-        Seq("eval_doc"))
-      .withColumn("jaccard",
-        col("c").cast("double") / (col("nt") + col("ne") - col("c")).cast("double"))
-      .filter(col("jaccard") >= FuzzyTau)
-      .select(col("train_doc"), col("eval_doc"),
-        round(col("jaccard"), 6).as("jaccard"))
+    Dedup.scoreJaccard(common, shCand, FuzzyTau, "train_doc", "eval_doc")
   }
 
   val decontaminateFuzzySql: String =

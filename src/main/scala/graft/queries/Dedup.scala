@@ -52,26 +52,19 @@ object Dedup {
           .as("shingle"))
       .distinct()
 
-  /** The hash-compacted basis with the compaction applied BEFORE the
-    * distinct (round 19, guide §2.3 "shuffle fewer bytes"): the old
-    * `hashCompact(shingles(...))` form ran the distinct's partial
-    * aggregate, exchange, and final aggregate over (doc_id, STRING)
-    * rows — ~25-45 B shingle strings hashed, compared, and shuffled —
-    * and only then compacted to longs; every signature-family consumer
-    * immediately compacts anyway, so the string never needs to cross
-    * the exchange at all. Hashing per EXPLODED row costs one extra
-    * xxhash64 per within-doc repeat (codegen'd, ~1 ns/B) and buys an
-    * 8 B aggregate key end-to-end. Set-identity with the old form:
-    * distinct∘hash ≡ hash∘distinct exactly when no two distinct
-    * shingles of one doc collide — BasisFloorSpec's collision sentinel
-    * pins zero xxhash64 collisions corpus-wide on every driver-verified
-    * corpus, and at 100 TB a collision merges a basis element for BOTH
-    * forms identically (the hashCompact exactness note). The string
-    * form stays the exact family's anchor ([[shingles]]).
+  /** The one shingle-basis builder: word 3-grams of `docs.text`, hashed
+    * to xxhash64 BEFORE the distinct (round 19, guide §2.3 "shuffle fewer
+    * bytes"), so the distinct's exchange and aggregate carry 8 B longs
+    * instead of ~25-45 B shingle strings — every signature-family
+    * consumer compacts anyway ([[hashCompact]]). Set-identity with the
+    * string form: distinct∘hash ≡ hash∘distinct exactly when no two
+    * distinct shingles of one doc collide — BasisFloorSpec's collision
+    * sentinel pins zero xxhash64 collisions corpus-wide on every
+    * driver-verified corpus. dd_minhash and the staged basis read it over
+    * `documents`, Pipeline's stage 3 over its survivor table.
     */
-  private def hashedShingles(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"),
+  private[queries] def hashedShingles(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
         explode(graft.functions.WordShingles.wordShingles(col("text"), 3))
           .as("s"))
       .select(col("doc_id"), xxhash64(col("s")).as("shingle"))
@@ -101,47 +94,29 @@ object Dedup {
       .filter(col("df") > ShingleDfCap)
       .select(col("shingle"))
 
-  /** Cap + self-join over a raw shingle set. A caller verifying a SUBSET
-    * of a larger corpus must NOT come through here (df over the subset
-    * would diverge from the corpus df exactly when the cap fires) — it
-    * caps over the full basis upfront and calls jaccardPairsCapped, as
-    * minhashFrom does.
+  /** The one df-cap site: hash-compact, then drop every shingle above
+    * ShingleDfCap. A caller verifying a SUBSET of a larger corpus caps
+    * the full basis here first and narrows afterwards (df over the subset
+    * would diverge from the corpus df exactly when the cap fires).
+    */
+  private[queries] def dfCapped(shRaw: DataFrame): DataFrame = {
+    val sh = hashCompact(shRaw)
+    sh.join(broadcast(hotShingles(sh)), Seq("shingle"), "left_anti")
+  }
+
+  /** Exact capped Jaccard pairs over a raw shingle set, every document
+    * probing — dd_ngram_jaccard, the reference the LSH funnel is compared
+    * against (CapBindingSpec, PipelineEquivalenceSpec).
     */
   private[queries] def jaccardPairs(shRaw: DataFrame, threshold: Double): DataFrame =
     // Eagerly checkpointed (round 19 re-measurement of the round-2 "no
-    // checkpoint" decision): jaccardPairsCapped reads the capped basis
-    // from FOUR subtrees (sizes, both self-join sides, plus the cap's
-    // own df aggregate above the raw basis) — with the basis re-derived
-    // per consumer that was 4 replays of scan+explode+distinct; one
-    // materialization now feeds them all (dd_ngram_jaccard isolation
-    // measured below). Eager, not lazy: the first consumer is the
-    // multi-stage self-join — concurrent first-materialization would
-    // re-duplicate exactly the work the checkpoint removes.
-    jaccardPairsCapped(
-      shRaw.join(broadcast(hotShingles(shRaw)), Seq("shingle"), "left_anti")
-        .localCheckpoint(), threshold)
-
-  /** The self-join core, input ALREADY df-capped — callers that cap once
-    * upstream (minhashFrom) come here directly instead of paying a no-op
-    * re-cap aggregation over the full shingle table (measured ~1.5 s per
-    * consumer at sf0.1).
-    */
-  private[queries] def jaccardPairsCapped(sh: DataFrame, threshold: Double): DataFrame = {
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val a = sh.select(col("doc_id").as("doc_a"), col("shingle"))
-    val b = sh.select(col("doc_id").as("doc_b"), col("shingle"))
-    val common = a.join(b, Seq("shingle"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("c"))
-    common
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), Seq("doc_b"))
-      .withColumn("jaccard",
-        col("c").cast("double") / (col("na") + col("nb") - col("c")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
-  }
+    // checkpoint" decision): the verify join reads the capped basis from
+    // several subtrees (sizes, both join sides, plus the cap's own df
+    // aggregate above the raw basis) — one materialization feeds them
+    // all. Eager, not lazy: the first consumer is the multi-stage
+    // self-join, and concurrent first-materialization would re-duplicate
+    // exactly the work the checkpoint removes.
+    verifyPairs(dfCapped(shRaw).localCheckpoint(), AllDocs, threshold)
 
   /** dd_ngram_jaccard — exact near-dup pairs at Jaccard ≥ 0.8. Quadratic in
     * docs sharing a shingle; kept as the semantic oracle. dd_minhash is the
@@ -260,7 +235,7 @@ object Dedup {
     */
   def stageBasis(spark: SparkSession, sfDir: String, stagingDir: String): String = {
     val staged = s"$stagingDir/shingles.parquet"
-    hashedShingles(spark, sfDir).write.mode("overwrite").parquet(staged)
+    hashedShingles(Tables.documents(spark, sfDir)).write.mode("overwrite").parquet(staged)
     graft.sources.Manifest.write(spark.sparkContext.hadoopConfiguration,
       stagingDir, "basis_meta.json", basisManifestFields(spark, sfDir))
     staged
@@ -339,7 +314,7 @@ object Dedup {
       graft.sources.Manifest.lookup(spark.sparkContext.hadoopConfiguration,
         dir, "basis_meta.json", Seq(table), basisManifestFields(spark, sfDir))
         .map(_ => spark.read.parquet(table))
-    }.getOrElse(hashedShingles(spark, sfDir))
+    }.getOrElse(hashedShingles(Tables.documents(spark, sfDir)))
 
   /** Hash-compacted shingle basis (round 16, the r17 lead landed
     * early): the signature families carry `xxhash64(shingle)` — 8-byte
@@ -361,9 +336,9 @@ object Dedup {
     * is exactly ZERO: BasisFloorSpec's collision sentinel asserts
     * countDistinct(string) == countDistinct(hash) on every
     * driver-verified corpus, the same staging-time discipline as the
-    * floor and coarse-guard sentinels. The EXACT family
-    * (dd_ngram_jaccard / jaccardPairs) keeps strings — it is the
-    * oracle anchor and proves the string semantics.
+    * floor and coarse-guard sentinels. The exact family
+    * (dd_ngram_jaccard / jaccardPairs) compacts at the same df-cap site
+    * ([[dfCapped]]); its DuckDB oracle states the string form.
     * Idempotent: a caller handing an already-compacted (long) basis —
     * the staged table, a spec fixture — passes through unchanged.
     */
@@ -380,13 +355,11 @@ object Dedup {
     * argument on minhashFrom). Hash-compacted (see [[hashCompact]]).
     */
   private[queries] def cappedShingles(spark: SparkSession, sfDir: String,
-      staging: Option[String]): DataFrame = {
+      staging: Option[String]): DataFrame =
     // sharedBasis (round 17): the staged compacted basis when the
-    // caller names one, hashCompact(shingles) otherwise — the fuzzy
-    // and delta families inherit the deployment form through this site.
-    val shRaw = sharedBasis(spark, sfDir, staging)
-    shRaw.join(broadcast(hotShingles(shRaw)), Seq("shingle"), "left_anti")
-  }
+    // caller names one, hashedShingles otherwise — the fuzzy and delta
+    // families inherit the deployment form through this site.
+    dfCapped(sharedBasis(spark, sfDir, staging))
 
   /** Minimum surviving basis elements (shingles for the MinHash family,
     * fingerprints for dd_winnow) for a doc to be COMPARABLE — the
@@ -518,54 +491,116 @@ object Dedup {
     // fires at test SFs; CapBindingSpec drives it with a planted df>cap
     // corpus). Capping first makes banding and verification score the
     // same quantity, restoring the bound.
-    // The CAPPED shingle set is localCheckpoint'ed: three consumers branch
-    // off it (signatures, candidate semi-join, verification sizes), and
-    // unlike the raw `shingles` subtree (where recompute measured 2.5×
-    // faster than a checkpoint barrier in round 2), the capped subtree
-    // carries an aggregation + broadcast anti-join per recompute —
-    // measured at sf0.1, checkpointing here is ~1.4× faster end-to-end
-    // (dd_minhash 3.1 → 2.2 s). At 100 TB this materialization IS the
-    // staged-shingle table minhashStaged writes explicitly.
-    // Re-measured round 4 for the single-consumer downstream callers
-    // (dd_editdist consumes the pair output once): checkpoint still wins
-    // there too — 1.95 s vs 2.54 s without at sf0.1 — because the three
-    // consumers are INTERNAL to this method regardless of how many times
-    // the caller reads the final pairs. The r3→r3 bench blip on
-    // dd_editdist (2.81→3.28) was lap noise: steady-state min-of-4 is
-    // 1.89 s with the checkpoint in place.
-    // Hash-compacted first (round 16, idempotent — see the hashCompact
-    // note): the cap aggregation, the checkpoint blocks, and both
-    // verify-side joins below all move 8 B longs instead of shingle
-    // strings; signatures are bit-identical either way.
-    val shC = hashCompact(shRaw)
-    // Eager: the first job after this reads sh from several stages at
-    // once (signatures and the candidate-doc semi-join), and a lazy
-    // checkpoint would be first-materialized by each of them.
-    val sh = shC.join(broadcast(hotShingles(shC)), Seq("shingle"), "left_anti")
-      .localCheckpoint()
+    // The CAPPED shingle set is localCheckpoint'ed: signatures, the
+    // candidate-doc semi-join and verification all branch off it, and the
+    // capped subtree carries an aggregation + broadcast anti-join per
+    // recompute — measured at sf0.1, checkpointing here is ~1.4× faster
+    // end-to-end (dd_minhash 3.1 → 2.2 s), and still wins for the
+    // single-consumer callers (dd_editdist 1.95 vs 2.54 s, round 4). At
+    // 100 TB this materialization IS the staged-shingle table
+    // minhashStaged writes explicitly. Eager: the first job after this
+    // reads sh from several stages at once (signatures and the
+    // candidate-doc semi-join), and a lazy checkpoint would be
+    // first-materialized by each of them.
+    val sh = dfCapped(shRaw).localCheckpoint()
     val buckets = bandedBuckets(sh, BandRows)
-    val candA = buckets.select(col("band"), col("bh"), col("doc_id").as("doc_a"))
-    val candB = buckets.select(col("band"), col("bh"), col("doc_id").as("doc_b"))
+    lshFunnel(sh, buckets, buckets, AllDocs, 0.8)
+  }
+
+  // --- The MinHash LSH funnel ---------------------------------------------
+  //
+  // One candidate-and-verify chain for the Jaccard family. The closed
+  // corpus is the incremental case where every document is on the probe
+  // side: dd_minhash runs it with AllDocs, dd_delta with its batch
+  // predicate, each dd_delta_chain step against the staged index ∪ batch.
+
+  /** The probe predicate under which every document probes. */
+  private[queries] val AllDocs: Column => Column = _ => lit(true)
+
+  /** Candidate pairs (doc_a < doc_b) from the (band, bh) join of the
+    * probe buckets against the index buckets. A pair is kept in its probe
+    * orientation only: doc_n probes, and when doc_o probes too the pair
+    * appears twice, so the ascending copy is kept. With AllDocs that is
+    * the closed-corpus `doc_a < doc_b` self-join; with a batch predicate
+    * no old×old pair can form a row, since the probe side IS the batch.
+    * No checkpoint here: [[lshFunnel]] places it, and DedupSpec pins the
+    * ingest-step plan property on this lazy form.
+    */
+  private[queries] def lshCandidates(probeB: DataFrame, indexB: DataFrame,
+      inProbe: Column => Column): DataFrame =
+    probeB.select(col("band"), col("bh"), col("doc_id").as("doc_n"))
+      .join(indexB.select(col("band"), col("bh"), col("doc_id").as("doc_o")),
+        Seq("band", "bh"))
+      .filter(col("doc_n") =!= col("doc_o") &&
+        (!inProbe(col("doc_o")) || col("doc_n") < col("doc_o")))
+      // One orientation per pair survives the filter, so the distinct
+      // can run on the plain columns and keep the probe side's doc_id
+      // partitioning (no exchange of its own).
+      .select(col("doc_n"), col("doc_o")).distinct()
+      .select(least(col("doc_n"), col("doc_o")).as("doc_a"),
+        greatest(col("doc_n"), col("doc_o")).as("doc_b"))
+
+  /** Exact Jaccard ≥ `threshold` of every pair over `sh` (capped) with at
+    * least one probe-side document: the probe side joins all of `sh` on
+    * shingles under the same orientation rule as [[lshCandidates]], so
+    * no pair of two non-probe documents ever materializes a join row.
+    * With AllDocs it is the exact shingle self-join.
+    */
+  private[queries] def verifyPairs(sh: DataFrame, inProbe: Column => Column,
+      threshold: Double): DataFrame = {
+    val probe = sh.filter(inProbe(col("doc_id")))
+      .select(col("doc_id").as("doc_n"), col("shingle"))
+    // The orientation test runs after the join, so with AllDocs both
+    // sides are the same projection of `sh` and share one exchange.
+    val all = sh.select(col("doc_id").as("doc_o"), col("shingle"))
+    val common = probe.join(all, Seq("shingle"))
+      .filter(col("doc_n") =!= col("doc_o") &&
+        (!inProbe(col("doc_o")) || col("doc_n") < col("doc_o")))
+      // One orientation per pair, as in lshCandidates.
+      .groupBy(col("doc_n"), col("doc_o"))
+      .agg(count(lit(1)).as("c"))
+      .select(least(col("doc_n"), col("doc_o")).as("doc_a"),
+        greatest(col("doc_n"), col("doc_o")).as("doc_b"), col("c"))
+    scoreJaccard(common, sh, threshold, "doc_a", "doc_b")
+  }
+
+  /** The one Jaccard scorer: attach both documents' basis sizes (counted
+    * over `sh`, the basis the shared counts `c` were taken over), admit on
+    * the UNROUNDED ratio, emit it rounded to 6 places — the oracles'
+    * `round(c / (na + nb - c), 6)` with the unrounded `>=` filter.
+    */
+  private[queries] def scoreJaccard(common: DataFrame, sh: DataFrame,
+      threshold: Double, aCol: String, bCol: String): DataFrame = {
+    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    common
+      .join(sizes.select(col("doc_id").as(aCol), col("n").as("na")), Seq(aCol))
+      .join(sizes.select(col("doc_id").as(bCol), col("n").as("nb")), Seq(bCol))
+      .withColumn("jaccard",
+        col("c").cast("double") / (col("na") + col("nb") - col("c")).cast("double"))
+      .filter(col("jaccard") >= threshold)
+      .select(col(aCol), col(bCol), round(col("jaccard"), 6).as("jaccard"))
+  }
+
+  /** The funnel: LSH candidates of the probe buckets against the index
+    * buckets, exact verification over the candidate documents only, and
+    * the candidate gate on the verified pairs. `sh` is the capped basis
+    * of every document the index holds.
+    */
+  private[queries] def lshFunnel(sh: DataFrame, probeB: DataFrame,
+      indexB: DataFrame, inProbe: Column => Column,
+      threshold: Double): DataFrame = {
     // The LAZY checkpoint is for the plan, not the blocks: three
     // consumers inline this subtree (candidate-doc union ×2 + final pair
-    // gate), and dropping the checkpoint entirely was measured in round
-    // 20 at +0.5–1.5 s of DRIVER time per entry (guide §3.3's
-    // planning-cost trap — max inter-job gap 0.4–1.6 s vs ≤0.2 s with
-    // the plan truncated; AQE re-optimizes the full logical plan per
-    // stage completion). No count: the first consumer stage
-    // materializes the blocks.
-    val candidates = candA.join(candB, Seq("band", "bh"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
+    // gate), and dropping the checkpoint was measured in round 20 at
+    // +0.5–1.5 s of DRIVER time per entry (guide §3.3's planning-cost
+    // trap — AQE re-optimizes the full logical plan per stage
+    // completion). No count: the first consumer stage materializes the
+    // blocks.
+    val candidates = lshCandidates(probeB, indexB, inProbe)
       .localCheckpoint(eager = false)
-    // Exact verification restricted to candidate docs only.
     val candDocs = candidates.select(col("doc_a").as("doc_id"))
       .union(candidates.select(col("doc_b").as("doc_id"))).distinct()
-    val shCand = sh.join(candDocs, Seq("doc_id"), "left_semi")
-    // sh is already capped over the full corpus basis (top of this
-    // method), so cap decisions are identical to ngramJaccard's and the
-    // capped core applies directly — no re-cap pass.
-    jaccardPairsCapped(shCand, 0.8)
+    verifyPairs(sh.join(candDocs, Seq("doc_id"), "left_semi"), inProbe, threshold)
       .join(candidates, Seq("doc_a", "doc_b"), "left_semi")
   }
 
@@ -2172,11 +2207,7 @@ object Dedup {
     val buckets = docSets.select(col("doc_id"),
       posexplode(graft.functions.BandedMinHash.bandedMinHash(col("set"), 96, 3))
         .as(Seq("band", "bh")))
-    val candidates = buckets.select(col("band"), col("bh"), col("doc_id").as("doc_a"))
-      .join(buckets.select(col("band"), col("bh"), col("doc_id").as("doc_b")),
-        Seq("band", "bh"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
+    val candidates = lshCandidates(buckets, buckets, AllDocs)
     val c = graft.functions.SortedLongIntersect
       .sortedIntersectCount(col("set_a"), col("set_b"))
     candidates
@@ -2476,69 +2507,12 @@ object Dedup {
       c => c % DeltaModulus === DeltaResidue)
 
   /** Core over an arbitrary capped (doc_id, shingle) basis and batch
-    * predicate — DedupSpec drives it with planted old×old topologies.
+    * predicate — the funnel with the batch probing. DedupSpec drives it
+    * with planted old×old topologies.
     */
   private[queries] def deltaFrom(sh: DataFrame, isNew: Column => Column): DataFrame = {
     val buckets = bandedBuckets(sh, BandRows)
-    val newB = buckets.filter(isNew(col("doc_id")))
-    deltaVerify(sh, deltaCandidates(newB, buckets), isNew, 0.8)
-  }
-
-  /** Candidate pairs from a one-sided band-bucket join: every candidate
-    * touches the batch because the probe side IS the batch. The LAZY form
-    * exists so DedupSpec can pin the ingest-step plan property (reads the
-    * staged product, never re-signs it) before the checkpoint hides it.
-    */
-  private[queries] def deltaCandidatesLazy(newB: DataFrame, allB: DataFrame): DataFrame =
-    newB.select(col("band"), col("bh"), col("doc_id").as("doc_n"))
-      .join(allB.select(col("band"), col("bh"), col("doc_id").as("doc_o")),
-        Seq("band", "bh"))
-      .filter(col("doc_n") =!= col("doc_o"))
-      .select(least(col("doc_n"), col("doc_o")).as("doc_a"),
-        greatest(col("doc_n"), col("doc_o")).as("doc_b"))
-      .distinct()
-
-  private[queries] def deltaCandidates(newB: DataFrame, allB: DataFrame): DataFrame =
-    // No count: the first consumer stage materializes the blocks. The
-    // LAZY checkpoint is for the plan (not the blocks):
-    // deltaVerify inlines this subtree ~7× (candidate-doc union ×2,
-    // final gate, and the shCand semi-join fans it into sizes/shNew/
-    // shAll), and dd_delta measured ~1 s of per-action driver planning
-    // without the truncation (guide §3.3).
-    deltaCandidatesLazy(newB, allB).localCheckpoint(eager = false)
-
-  /** Bipartite exact verification over the candidate docs only — the
-    * probe side is always the batch, so no old×old shingle-join rows
-    * ever materialize.
-    */
-  private[queries] def deltaVerify(sh: DataFrame, candidates: DataFrame,
-      isNew: Column => Column, threshold: Double): DataFrame = {
-    val candDocs = candidates.select(col("doc_a").as("doc_id"))
-      .union(candidates.select(col("doc_b").as("doc_id"))).distinct()
-    val shCand = sh.join(candDocs, Seq("doc_id"), "left_semi")
-    val sizes = shCand.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val shNew = shCand.filter(isNew(col("doc_id")))
-      .select(col("doc_id").as("doc_n"), col("shingle"))
-    val shAll = shCand
-      .select(col("doc_id").as("doc_o"), col("shingle"),
-        isNew(col("doc_id")).as("o_new"))
-    val common = shNew.join(shAll, Seq("shingle"))
-      .filter(col("doc_n") =!= col("doc_o"))
-      // count each pair once: new×old only ever probes from the new
-      // side; new×new appears in both orientations — keep the ascending
-      // one.
-      .filter(!col("o_new") || col("doc_n") < col("doc_o"))
-      .groupBy(least(col("doc_n"), col("doc_o")).as("doc_a"),
-        greatest(col("doc_n"), col("doc_o")).as("doc_b"))
-      .agg(count(lit(1)).as("c"))
-      .join(candidates, Seq("doc_a", "doc_b"), "left_semi")
-    common
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), Seq("doc_b"))
-      .withColumn("jaccard",
-        col("c").cast("double") / (col("na") + col("nb") - col("c")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
+    lshFunnel(sh, buckets.filter(isNew(col("doc_id"))), buckets, isNew, 0.8)
   }
 
   /** Oracle: exact quadratic form restricted to pairs touching the
@@ -2649,7 +2623,7 @@ object Dedup {
     def readB(p: String): DataFrame = spark.read.schema(BucketSchema).parquet(p)
     val newB = readB(batchPath)
     val allB = (indexPaths.map(readB) :+ newB).reduce(_.unionByName(_))
-    deltaVerify(sh, deltaCandidates(newB, allB), isBatch, 0.8)
+    lshFunnel(sh, newB, allB, isBatch, 0.8)
   }
 
   /** dd_delta_chain — the multi-batch lifecycle end-to-end: seed the

@@ -80,10 +80,10 @@ object Pipeline {
     // dd_editdist), but candidate generation stays hash-join-shaped at
     // corpus scale instead of quadratic in shingle-sharing docs. The
     // oracle states the exact form, so the equivalence is hash-checked
-    // end-to-end every round, and PipelineEquivalenceSpec re-proves
-    // minhashFrom ≡ jaccardPairs on THIS survivor set (not just the raw
-    // corpus) so threshold-adjacent drift in the survivors can't silently
-    // void the reroute argument.
+    // end-to-end every round, and PipelineEquivalenceSpec re-proves the
+    // funnel ≡ the exact verify join on THIS survivor set (not just the
+    // raw corpus) so threshold-adjacent drift in the survivors can't
+    // silently void the reroute argument.
     //
     // Pair orientation alone can't express keep-best (the best member of
     // a chain may sit mid-id), so the pairs close into components via
@@ -92,7 +92,7 @@ object Pipeline {
     // only #clusters rows cross the exchange, never a window over the
     // clustered rows. Quality rides in from the checkpointed survivor
     // table (computed once at stage 1 — no second documents scan).
-    val pairs = Dedup.minhashFrom(shinglesOf(kept))
+    val pairs = Dedup.minhashFrom(Dedup.hashedShingles(kept))
       .select(col("doc_a"), col("doc_b"))
     // No checkpoint over the propagation output (round 20, the keepBest
     // rationale): the small arm returns a LocalRelation, and the loop
@@ -242,26 +242,11 @@ object Pipeline {
       .drop("bst")
   }
 
-  /** Distinct word-3-gram shingles of a survivor table — the stage-3
-    * dedup basis, parameterized on the table so cleanCorpus feeds it the
-    * checkpointed survivors instead of recomputing them.
-    */
-  private[graft] def shinglesOf(kept: DataFrame): DataFrame =
-    // Hash-compacted BEFORE the distinct (round 19, the hashedShingles
-    // rationale): the basis exchange and aggregate carry 8 B longs, not
-    // shingle strings — minhashFrom compacts anyway, so the string form
-    // never needs to exist past the projection. Set-identical absent
-    // xxhash64 collisions (BasisFloorSpec's sentinel).
-    kept.select(col("doc_id"),
-        explode(graft.functions.WordShingles.wordShingles(col("text"), 3)).as("s"))
-      .select(col("doc_id"), xxhash64(col("s")).as("shingle"))
-      .distinct()
-
   /** The stage-3 dedup basis from scratch — used by the equivalence spec,
     * which needs the survivor shingles without the checkpoint boundary.
     */
   private[queries] def survivorShingles(spark: SparkSession, sfDir: String): DataFrame =
-    shinglesOf(exactKept(spark, sfDir))
+    Dedup.hashedShingles(exactKept(spark, sfDir))
 
   /** The stage-0–3 CTE chain, shared by both pipeline oracles (the
     * `survivors` CTE is cleanSurvivorsFrom restated).

@@ -62,48 +62,51 @@ class ChaosSpec extends SparkSuite {
     // 8 tiny files → 4 map tasks of 2 files: wholetext packs whole files,
     // each costing the 4 MiB open cost, into splits of total / 4 cores =
     // 8 MiB. The test session runs local[4], so 4 slots.
-    val dir = Files.createTempDirectory("graft-mtiming")
-    (0 until 8).foreach { i =>
-      // letter-only words: the wc tokenizer splits on non-letters
-      Files.write(dir.resolve(s"f$i.txt"),
-        s"uniq${('a' + i).toChar} shared common words".getBytes("UTF-8"))
+    withTempDir("graft-mtiming") { dir =>
+      (0 until 8).foreach { i =>
+        // letter-only words: the wc tokenizer splits on non-letters
+        Files.write(dir.resolve(s"f$i.txt"),
+          s"uniq${('a' + i).toChar} shared common words".getBytes("UTF-8"))
+      }
+      val mapf: (String, String) => Seq[KV] = (doc, contents) => {
+        ParallelismProbe.enter(ParallelismProbe.mapCur, ParallelismProbe.mapMax)
+        try { Thread.sleep(400); MRApps.wcMap(doc, contents) }
+        finally ParallelismProbe.mapCur.decrementAndGet()
+      }
+      val reducef: (String, Seq[String]) => String = (k, vs) => {
+        ParallelismProbe.enter(ParallelismProbe.redCur, ParallelismProbe.redMax)
+        try { Thread.sleep(150); MRApps.wcReduce(k, vs) }
+        finally ParallelismProbe.redCur.decrementAndGet()
+      }
+      // nReduce = 3 reduce tasks: AQE never coalesces a repartition to an
+      // explicit count.
+      val out = MRJob.run(spark, Seq(dir.toString + "/*.txt"), 3, mapf, reducef)
+        .collect().map(kv => kv.key -> kv.value).toMap
+      // Output must still be the sequential oracle's (mtiming also checks
+      // correctness, mtiming.go:72-78).
+      assert(out("common") == "8" && out("uniqd") == "1")
+      assert(ParallelismProbe.mapMax.get() >= 2,
+        s"map stage never ran ≥2 tasks concurrently (max=${ParallelismProbe.mapMax.get()})")
+      assert(ParallelismProbe.redMax.get() >= 2,
+        s"reduce stage never ran ≥2 tasks concurrently (max=${ParallelismProbe.redMax.get()})")
     }
-    val mapf: (String, String) => Seq[KV] = (doc, contents) => {
-      ParallelismProbe.enter(ParallelismProbe.mapCur, ParallelismProbe.mapMax)
-      try { Thread.sleep(400); MRApps.wcMap(doc, contents) }
-      finally ParallelismProbe.mapCur.decrementAndGet()
-    }
-    val reducef: (String, Seq[String]) => String = (k, vs) => {
-      ParallelismProbe.enter(ParallelismProbe.redCur, ParallelismProbe.redMax)
-      try { Thread.sleep(150); MRApps.wcReduce(k, vs) }
-      finally ParallelismProbe.redCur.decrementAndGet()
-    }
-    // nReduce = 3 reduce tasks: AQE never coalesces a repartition to an
-    // explicit count.
-    val out = MRJob.run(spark, Seq(dir.toString + "/*.txt"), 3, mapf, reducef)
-      .collect().map(kv => kv.key -> kv.value).toMap
-    // Output must still be the sequential oracle's (mtiming also checks
-    // correctness, mtiming.go:72-78).
-    assert(out("common") == "8" && out("uniqd") == "1")
-    assert(ParallelismProbe.mapMax.get() >= 2,
-      s"map stage never ran ≥2 tasks concurrently (max=${ParallelismProbe.mapMax.get()})")
-    assert(ParallelismProbe.redMax.get() >= 2,
-      s"reduce stage never ran ≥2 tasks concurrently (max=${ParallelismProbe.redMax.get()})")
   }
 
   test("early exit: output is published atomically at job commit") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val out = Files.createTempDirectory("graft-commit").toString
-    graft.Tables.documents(spark, sf)
-      .select(col("doc_id"), col("n_chars"))
-      .repartition(4)
-      .write.mode("overwrite").parquet(out)
-    val files = Files.list(Paths.get(out)).iterator().asScala.map(_.getFileName.toString).toSeq
-    assert(files.contains("_SUCCESS"), "job commit marker must exist")
-    // No task-attempt temp dirs may survive commit.
-    assert(!files.exists(_.startsWith("_temporary")), s"uncommitted temp data left: $files")
-    val n = spark.read.parquet(out).count()
-    assert(n == graft.Tables.documents(spark, sf).count())
+    withTempDir("graft-commit") { outPath =>
+      val out = outPath.toString
+      graft.Tables.documents(spark, sf)
+        .select(col("doc_id"), col("n_chars"))
+        .repartition(4)
+        .write.mode("overwrite").parquet(out)
+      val files = Files.list(Paths.get(out)).iterator().asScala.map(_.getFileName.toString).toSeq
+      assert(files.contains("_SUCCESS"), "job commit marker must exist")
+      // No task-attempt temp dirs may survive commit.
+      assert(!files.exists(_.startsWith("_temporary")), s"uncommitted temp data left: $files")
+      val n = spark.read.parquet(out).count()
+      assert(n == graft.Tables.documents(spark, sf).count())
+    }
   }
 }

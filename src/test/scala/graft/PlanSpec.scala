@@ -517,8 +517,7 @@ class PlanSpec extends SparkSuite {
     // here would mean the step re-derives something from the accumulated
     // corpus and its cost would grow with index size.
     val emb = Tables.embeddings(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_append_plan")
-    try {
+    withTempDir("graft_ivf_append_plan") { dir =>
       graft.queries.Similarity.seedIvfIndex(spark, emb,
         graft.queries.Similarity.ivfAppendIsOld _, dir.toString)
       val p = graft.queries.Similarity.ivfAppendAssignments(spark, emb,
@@ -528,10 +527,6 @@ class PlanSpec extends SparkSuite {
       assert(!p.toLowerCase.contains("aggregate"),
         s"append step aggregates over the corpus:\n$p")
       assert(!p.contains("Exchange"), s"append step shuffles:\n$p")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
     }
   }
 }

@@ -9,6 +9,15 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` on a fresh temp directory and deletes it afterwards,
+    * whether the body returns or throws.
+    */
+  def withTempDir[A](prefix: String)(body: java.nio.file.Path => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir)
+    finally graft.sources.Staging.deleteRecursively(dir)
+  }
 }
 
 object SparkSuite {

@@ -71,8 +71,9 @@ object ClusterChaosMain {
       if (doc == "f0.txt" && tc.attemptNumber() == 0) Runtime.getRuntime.halt(17)
       MRApps.wcMap(doc, contents)
     }
-    val out = MRJob.run(spark, Seq(dir.toString + "/*.txt"), 2, mapf, MRApps.wcReduce)
+    val out = try MRJob.run(spark, Seq(dir.toString + "/*.txt"), 2, mapf, MRApps.wcReduce)
       .collect().map(kv => kv.key -> kv.value).toMap
+    finally graft.sources.Staging.deleteRecursively(dir)
     require(out == oracle,
       s"post-executor-death output differs from oracle: $out vs $oracle")
     println(s"[clusterchaos] kill OK: ${out.size} keys match oracle after executor death")

@@ -136,44 +136,49 @@ class MRJobSpec extends SparkSuite {
   }
 
   test("nReduce controls output partition count (mr-out-<r> parity)") {
-    val out = Files.createTempDirectory("mrout-n").toString
-    MRJob.runToText(spark, corpus.take(2), 10, MRApps.wcMap, MRApps.wcReduce, out)
-    val parts = partFiles(out).size
-    assert(parts == 10, s"expected 10 output partitions (nReduce), got $parts")
+    withTempDir("mrout-n") { outPath =>
+      val out = outPath.toString
+      MRJob.runToText(spark, corpus.take(2), 10, MRApps.wcMap, MRApps.wcReduce, out)
+      val parts = partFiles(out).size
+      assert(parts == 10, s"expected 10 output partitions (nReduce), got $parts")
+    }
   }
 
   test("reduce loop: few keys over many buckets, each key reduced exactly once") {
     // 3 keys, each in every file, nReduce 10: every key's values arrive
     // from every map task, and most of the 10 buckets get no key at all.
-    val dir = Files.createTempDirectory("mr-fewkeys")
-    val files = (0 until 4).map { i =>
-      val text = (Seq.fill(i + 1)("alpha") ++ Seq.fill(2 * i + 1)("beta") ++ Seq("gamma"))
-        .mkString(" ")
-      Files.write(dir.resolve(s"f$i.txt"), text.getBytes("UTF-8")).toString
+    withTempDir("mr-fewkeys") { dir =>
+      val files = (0 until 4).map { i =>
+        val text = (Seq.fill(i + 1)("alpha") ++ Seq.fill(2 * i + 1)("beta") ++ Seq("gamma"))
+          .mkString(" ")
+        Files.write(dir.resolve(s"f$i.txt"), text.getBytes("UTF-8")).toString
+      }
+      withTempDir("mrout-fewkeys") { outPath =>
+        val out = outPath.toString
+        MRJob.runToText(spark, files, 10, MRApps.wcMap, MRApps.wcReduce, out)
+        val lines = partFiles(out).flatMap(p => Files.readAllLines(p).asScala)
+        val got = lines.map { l => val Array(k, v) = l.split(" "); k -> v }
+        assert(got.map(_._1).sorted == Seq("alpha", "beta", "gamma"),
+          s"each key must appear exactly once: $lines")
+        assert(got.sorted == sequential(files, MRApps.wcMap, MRApps.wcReduce).sorted)
+        // Every bucket writes its file, an empty one included (mr-out-<r>),
+        // and part-<r> holds the keys of bucket r: pmod(hash(key), nReduce),
+        // the exchange's partition expression.
+        val parts = partFiles(out)
+        assert(parts.size == 10, s"one part file per bucket: $parts")
+        val bucketOf = Seq("alpha", "beta", "gamma").map { k =>
+          k -> spark.sql(s"SELECT pmod(hash('$k'), 10)").head().getInt(0)
+        }.toMap
+        val keysIn = parts.map { p =>
+          p.getFileName.toString.stripPrefix("part-").toInt ->
+            Files.readAllLines(p).asScala.map(_.split(" ")(0)).toSet
+        }.toMap
+        assert(keysIn == (0 until 10).map(r => r -> bucketOf.filter(_._2 == r).keySet).toMap,
+          s"buckets $bucketOf")
+        // beta and gamma share bucket 1, alpha is in 8: 8 part files are empty.
+        assert(parts.count(Files.size(_) == 0) == 8, s"buckets $bucketOf")
+      }
     }
-    val out = Files.createTempDirectory("mrout-fewkeys").toString
-    MRJob.runToText(spark, files, 10, MRApps.wcMap, MRApps.wcReduce, out)
-    val lines = partFiles(out).flatMap(p => Files.readAllLines(p).asScala)
-    val got = lines.map { l => val Array(k, v) = l.split(" "); k -> v }
-    assert(got.map(_._1).sorted == Seq("alpha", "beta", "gamma"),
-      s"each key must appear exactly once: $lines")
-    assert(got.sorted == sequential(files, MRApps.wcMap, MRApps.wcReduce).sorted)
-    // Every bucket writes its file, an empty one included (mr-out-<r>),
-    // and part-<r> holds the keys of bucket r: pmod(hash(key), nReduce),
-    // the exchange's partition expression.
-    val parts = partFiles(out)
-    assert(parts.size == 10, s"one part file per bucket: $parts")
-    val bucketOf = Seq("alpha", "beta", "gamma").map { k =>
-      k -> spark.sql(s"SELECT pmod(hash('$k'), 10)").head().getInt(0)
-    }.toMap
-    val keysIn = parts.map { p =>
-      p.getFileName.toString.stripPrefix("part-").toInt ->
-        Files.readAllLines(p).asScala.map(_.split(" ")(0)).toSet
-    }.toMap
-    assert(keysIn == (0 until 10).map(r => r -> bucketOf.filter(_._2 == r).keySet).toMap,
-      s"buckets $bucketOf")
-    // beta and gamma share bucket 1, alpha is in 8: 8 part files are empty.
-    assert(parts.count(Files.size(_) == 0) == 8, s"buckets $bucketOf")
   }
 
   test("runToText commit: a reduce attempt that dies mid-bucket is retried, output once") {
@@ -188,57 +193,67 @@ class MRJobSpec extends SparkSuite {
       }
       MRApps.wcReduce(k, vs)
     }
-    val out = Files.createTempDirectory("mrout-retry").toString
-    MRJob.runToText(spark, corpus, 10, MRApps.wcMap, reducef, out)
-    assert(ReduceAttempts.injected.get() == 10, "every reduce task's first attempt died")
-    assertCommitted(out, 10)
-    assert(listing(out).forall(n => !n.endsWith(".tmp")), s"temp file left: ${listing(out)}")
-    assertOracleLines(out, corpus, MRApps.wcMap, MRApps.wcReduce)
+    withTempDir("mrout-retry") { outPath =>
+      val out = outPath.toString
+      MRJob.runToText(spark, corpus, 10, MRApps.wcMap, reducef, out)
+      assert(ReduceAttempts.injected.get() == 10, "every reduce task's first attempt died")
+      assertCommitted(out, 10)
+      assert(listing(out).forall(n => !n.endsWith(".tmp")), s"temp file left: ${listing(out)}")
+      assertOracleLines(out, corpus, MRApps.wcMap, MRApps.wcReduce)
+    }
   }
 
   test("runToText commit: a failed job leaves no part file and no _SUCCESS") {
     // Output is visible only at job commit (the reference's early_exit
     // contract): a job whose reduce always throws publishes nothing.
     val boom: (String, Seq[String]) => String = (_, _) => throw new RuntimeException("reduce fails")
-    val out = Files.createTempDirectory("mrout-fail").toString
-    intercept[Exception](MRJob.runToText(spark, corpus.take(2), 4, MRApps.wcMap, boom, out))
-    val names = listing(out)
-    assert(!names.exists(_.startsWith("part-")), s"part file published by a failed job: $names")
-    assert(!names.contains("_SUCCESS"), s"_SUCCESS written by a failed job: $names")
+    withTempDir("mrout-fail") { outPath =>
+      val out = outPath.toString
+      intercept[Exception](MRJob.runToText(spark, corpus.take(2), 4, MRApps.wcMap, boom, out))
+      val names = listing(out)
+      assert(!names.exists(_.startsWith("part-")), s"part file published by a failed job: $names")
+      assert(!names.contains("_SUCCESS"), s"_SUCCESS written by a failed job: $names")
+    }
   }
 
   test("runToText commit: a rerun overwrites the directory, nReduce 10 then 3") {
-    val out = Files.createTempDirectory("mrout-over").toString
-    MRJob.runToText(spark, corpus.take(2), 10, MRApps.wcMap, MRApps.wcReduce, out)
-    assertCommitted(out, 10)
-    MRJob.runToText(spark, corpus.take(2), 3, MRApps.wcMap, MRApps.wcReduce, out)
-    assertCommitted(out, 3)
-    assertOracleLines(out, corpus.take(2), MRApps.wcMap, MRApps.wcReduce)
+    withTempDir("mrout-over") { outPath =>
+      val out = outPath.toString
+      MRJob.runToText(spark, corpus.take(2), 10, MRApps.wcMap, MRApps.wcReduce, out)
+      assertCommitted(out, 10)
+      MRJob.runToText(spark, corpus.take(2), 3, MRApps.wcMap, MRApps.wcReduce, out)
+      assertCommitted(out, 3)
+      assertOracleLines(out, corpus.take(2), MRApps.wcMap, MRApps.wcReduce)
+    }
   }
 
   test("runToText fails fast on a null value, naming the bucket") {
     // Reference strings cannot be nil; a null must not print as "key ".
     val nullBeta: (String, Seq[String]) => String =
       (k, vs) => if (k == "beta") null else MRApps.wcReduce(k, vs)
-    val dir = Files.createTempDirectory("mr-null")
-    val file = Files.write(dir.resolve("f.txt"), "alpha beta gamma".getBytes("UTF-8")).toString
-    val out = Files.createTempDirectory("mrout-null").toString
-    val e = intercept[Exception](MRJob.runToText(spark, Seq(file), 3, MRApps.wcMap, nullBeta, out))
-    assert(e.getMessage.matches("(?s).*bucket \\d+: null value for key 'beta'.*"), e.getMessage)
-    assert(!listing(out).exists(_.startsWith("part-")))
+    withTempDir("mr-null") { dir =>
+      val file = Files.write(dir.resolve("f.txt"), "alpha beta gamma".getBytes("UTF-8")).toString
+      withTempDir("mrout-null") { outPath =>
+        val out = outPath.toString
+        val e = intercept[Exception](MRJob.runToText(spark, Seq(file), 3, MRApps.wcMap, nullBeta, out))
+        assert(e.getMessage.matches("(?s).*bucket \\d+: null value for key 'beta'.*"), e.getMessage)
+        assert(!listing(out).exists(_.startsWith("part-")))
+      }
+    }
   }
 
   test("document names are the raw file names, not URL-encoded") {
     // input_file_name() is URL-encoded: a space reads back as %20. The
     // reference and the oracle name a document by its file name on disk.
-    val dir = Files.createTempDirectory("mr-names")
-    val file = Files.write(dir.resolve("my fil\u00e9.txt"),
-      "alpha beta alpha".getBytes("UTF-8")).toString
-    val got = MRJob.run(spark, Seq(file), 3, MRApps.indexerMap, MRApps.indexerReduce)
-      .collect().toSeq.map(kv => (kv.key, kv.value)).sorted
-    val want = sequential(Seq(file), MRApps.indexerMap, MRApps.indexerReduce).sorted
-    assert(want.contains("alpha" -> "1 my fil\u00e9.txt"))
-    assert(got == want)
+    withTempDir("mr-names") { dir =>
+      val file = Files.write(dir.resolve("my fil\u00e9.txt"),
+        "alpha beta alpha".getBytes("UTF-8")).toString
+      val got = MRJob.run(spark, Seq(file), 3, MRApps.indexerMap, MRApps.indexerReduce)
+        .collect().toSeq.map(kv => (kv.key, kv.value)).sorted
+      val want = sequential(Seq(file), MRApps.indexerMap, MRApps.indexerReduce).sorted
+      assert(want.contains("alpha" -> "1 my fil\u00e9.txt"))
+      assert(got == want)
+    }
   }
 
   test("one shuffle per job: the executed plan has exactly one Exchange") {
@@ -252,10 +267,12 @@ class MRJobSpec extends SparkSuite {
   }
 
   test("runToText writes reference line format 'key value'") {
-    val out = Files.createTempDirectory("mrout").toString
-    MRJob.runToText(spark, corpus.take(1), 3, MRApps.wcMap, MRApps.wcReduce, out)
-    val lines = partFiles(out).flatMap(p => Files.readAllLines(p).asScala)
-    assert(lines.nonEmpty)
-    assert(lines.forall(_.matches("\\S+ \\S+")))
+    withTempDir("mrout") { outPath =>
+      val out = outPath.toString
+      MRJob.runToText(spark, corpus.take(1), 3, MRApps.wcMap, MRApps.wcReduce, out)
+      val lines = partFiles(out).flatMap(p => Files.readAllLines(p).asScala)
+      assert(lines.nonEmpty)
+      assert(lines.forall(_.matches("\\S+ \\S+")))
+    }
   }
 }

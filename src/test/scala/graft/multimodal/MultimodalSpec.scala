@@ -20,23 +20,24 @@ class MultimodalSpec extends SparkSuite {
     // exercise that actual source: payload bytes round-trip exactly and
     // the pathGlobFilter prunes non-media files before any byte is read.
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-media")
-    val payloads = (0 until 5).map { i =>
-      val bytes = Array.tabulate[Byte](100 + i * 37)(j => ((i * 31 + j) % 251).toByte)
-      Files.write(dir.resolve(s"clip$i.bin"), bytes)
-      s"clip$i.bin" -> bytes.toSeq
-    }.toMap
-    Files.write(dir.resolve("ignore.txt"), "not media".getBytes)
-    val df = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.bin")
-      .load(dir.toString)
-      .select(col("path"), col("length"), col("content"))
-    val got = df.collect().map { r =>
-      val name = r.getString(0).substring(r.getString(0).lastIndexOf('/') + 1)
-      name -> r.getAs[Array[Byte]]("content").toSeq
-    }.toMap
-    assert(got == payloads, "binary payloads must round-trip byte-exact")
-    assert(!got.contains("ignore.txt"))
+    withTempDir("graft-media") { dir =>
+      val payloads = (0 until 5).map { i =>
+        val bytes = Array.tabulate[Byte](100 + i * 37)(j => ((i * 31 + j) % 251).toByte)
+        Files.write(dir.resolve(s"clip$i.bin"), bytes)
+        s"clip$i.bin" -> bytes.toSeq
+      }.toMap
+      Files.write(dir.resolve("ignore.txt"), "not media".getBytes)
+      val df = spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.bin")
+        .load(dir.toString)
+        .select(col("path"), col("length"), col("content"))
+      val got = df.collect().map { r =>
+        val name = r.getString(0).substring(r.getString(0).lastIndexOf('/') + 1)
+        name -> r.getAs[Array[Byte]]("content").toSeq
+      }.toMap
+      assert(got == payloads, "binary payloads must round-trip byte-exact")
+      assert(!got.contains("ignore.txt"))
+    }
   }
 
   test("feature extraction is deterministic and batch-shaped") {

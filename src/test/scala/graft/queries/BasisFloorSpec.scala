@@ -18,15 +18,13 @@ import org.apache.spark.sql.functions._
   */
 class BasisFloorSpec extends SparkSuite {
 
-  private def writeDocs(rows: Seq[(Long, String)]): java.nio.file.Path = {
+  private def writeDocs(dir: java.nio.file.Path, rows: Seq[(Long, String)]): Unit = {
     val sess = spark
     import sess.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_basis_floor")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("web"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir
   }
 
   test("dd_minhash: sub-floor residue groups are incomparable; comparable pairs found") {
@@ -39,8 +37,8 @@ class BasisFloorSpec extends SparkSuite {
     // 27 of 29 shingles shared, J = 0.931 ≥ 0.8.
     val base = (1 to 30).map(i => s"u$i").mkString(" ")
     val edited = (1 to 29).map(i => s"u$i").mkString(" ") + " u30x"
-    val dir = writeDocs(cluster ++ Seq((2000001L, base), (2000002L, edited)))
-    try {
+    withTempDir("graft_basis_floor") { dir =>
+      writeDocs(dir, cluster ++ Seq((2000001L, base), (2000002L, edited)))
       // Precondition: the cap fired and left each cluster doc a 3-element
       // residue (2 boundary shingles + the tail), identical within a
       // group — the J = 1.0 explosion shape the floor exists for.
@@ -64,7 +62,7 @@ class BasisFloorSpec extends SparkSuite {
         s"sub-floor docs must emit no pairs; got ${pairs.filter(p => p._1 < 1100L).take(5)}")
       assert(pairs.contains((2000001L, 2000002L)),
         s"comparable near-dup pair lost by the floor; got $pairs")
-    } finally graft.sources.Staging.deleteRecursively(dir)
+    }
   }
 
   test("dd_winnow: sub-floor fingerprint sets are incomparable; comparable pairs found") {
@@ -80,8 +78,8 @@ class BasisFloorSpec extends SparkSuite {
       "and columnar storage formats for training data pipelines"
     val editText = "completely unrelated prose about distributed query engines " +
       "and columnar storage formats for training data pipeline!"
-    val dir = writeDocs(cluster ++ Seq((2000001L, baseText), (2000002L, editText)))
-    try {
+    withTempDir("graft_basis_floor") { dir =>
+      writeDocs(dir, cluster ++ Seq((2000001L, baseText), (2000002L, editText)))
       // Precondition: the winnow residue is genuinely sub-floor and
       // identical within a group.
       val sets = Dedup.winnowDocSets(spark, dir.toString).localCheckpoint()
@@ -100,7 +98,7 @@ class BasisFloorSpec extends SparkSuite {
         s"sub-floor docs must emit no pairs; got ${pairs.filter(p => p._1 < 1100L).take(5)}")
       assert(pairs.contains((2000001L, 2000002L)),
         s"comparable near-dup pair lost by the floor; got $pairs")
-    } finally graft.sources.Staging.deleteRecursively(dir)
+    }
   }
 
   test("hash compaction is collision-free on every driver-verified corpus (sentinel)") {

@@ -46,14 +46,16 @@ class DedupSpec extends SparkSuite {
   }
 
   test("staged minhash (materialized shingles) equals the lazy pipeline") {
-    val staging = java.nio.file.Files.createTempDirectory("graft-staging").toString
-    val lazyPairs = Dedup.minhash(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val stagedPairs = Dedup.minhashStaged(spark, sf, staging)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(stagedPairs == lazyPairs)
-    assert(new java.io.File(s"$staging/shingles.parquet").exists,
-      "staging table must be materialized")
+    withTempDir("graft-staging") { stagingPath =>
+      val staging = stagingPath.toString
+      val lazyPairs = Dedup.minhash(spark, sf)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val stagedPairs = Dedup.minhashStaged(spark, sf, staging)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(stagedPairs == lazyPairs)
+      assert(new java.io.File(s"$staging/shingles.parquet").exists,
+        "staging table must be materialized")
+    }
   }
 
   test("WordShingles expression matches the HOF split+transform formulation") {
@@ -414,14 +416,16 @@ class DedupSpec extends SparkSuite {
     // can be 30,001 one-float vectors — content is never evaluated.
     val sess = spark
     import sess.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("embed-guard").toString
-    spark.range(30001)
-      .select(col("id").as("vec_id"),
-        array(lit(0.1f)).as("embedding"))
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val e = intercept[IllegalArgumentException] { Dedup.embedCosine(spark, dir) }
-    assert(e.getMessage.contains("dd_embed_bucketed"),
-      s"guard message must point at the scale path: ${e.getMessage}")
+    withTempDir("embed-guard") { dirPath =>
+      val dir = dirPath.toString
+      spark.range(30001)
+        .select(col("id").as("vec_id"),
+          array(lit(0.1f)).as("embedding"))
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      val e = intercept[IllegalArgumentException] { Dedup.embedCosine(spark, dir) }
+      assert(e.getMessage.contains("dd_embed_bucketed"),
+        s"guard message must point at the scale path: ${e.getMessage}")
+    }
   }
 
   test("dd_lines: planted boilerplate dropped, order kept, df counts docs not repeats") {
@@ -571,11 +575,23 @@ class DedupSpec extends SparkSuite {
     ).toDF("doc_id", "text")
     val sh = docs.select(col("doc_id"),
       explode(graft.functions.WordShingles.wordShingles(col("text"), 3)).as("shingle"))
-      .distinct()
-    val pairs = Dedup.deltaFrom(sh, c => c % 10 === 3)
-      .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs == Set((1L, 3L), (2L, 3L), (1L, 23L), (2L, 23L), (3L, 23L)),
-      s"got $pairs")
+      .distinct().localCheckpoint()
+    def scored(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // The funnel's probe predicate, table-driven: the batch, every
+    // document (the closed-corpus case — must equal the exact verify join,
+    // old×old pair (1, 2) included) and no document (nothing probes).
+    val cases = Seq[(String, Column => Column, Set[(Long, Long, Double)])](
+      ("≡ 3 mod 10", c => c % 10 === 3, Set((1L, 3L), (2L, 3L), (1L, 23L),
+        (2L, 23L), (3L, 23L)).map { case (a, b) => (a, b, 1.0) }),
+      ("every document", Dedup.AllDocs, scored(Dedup.jaccardPairs(sh, 0.8))),
+      ("no document", _ => lit(false), Set.empty))
+    assert(cases(1)._3.exists(p => p._1 == 1L && p._2 == 2L),
+      "the exact reference must report the old×old pair")
+    cases.foreach { case (name, inProbe, expected) =>
+      val got = scored(Dedup.deltaFrom(sh, inProbe))
+      assert(got == expected, s"$name: got $got expected $expected")
+    }
   }
 
   test("dd_embed_hi768: output is exactly the planted pair set, cosines in the blend band") {
@@ -597,33 +613,37 @@ class DedupSpec extends SparkSuite {
   }
 
   test("dd_embed_hi768: staged expansion parquet equals in-query construction") {
-    val dir = java.nio.file.Files.createTempDirectory("hi768-staged").toString
-    Dedup.expand768(spark, sf)
-      .write.mode("overwrite").parquet(s"$dir/embeddings_hi768.parquet")
-    val constructed = Dedup.embedHi768(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val staged = Dedup.embedHi768(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(staged == constructed,
-      "staged-parquet path must be bit-identical to in-query construction")
+    withTempDir("hi768-staged") { dirPath =>
+      val dir = dirPath.toString
+      Dedup.expand768(spark, sf)
+        .write.mode("overwrite").parquet(s"$dir/embeddings_hi768.parquet")
+      val constructed = Dedup.embedHi768(spark, sf).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      val staged = Dedup.embedHi768(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      assert(staged == constructed,
+        "staged-parquet path must be bit-identical to in-query construction")
+    }
   }
 
   test("staged delta (old buckets from parquet, batch signed fresh) equals in-query") {
     // The chain's own functions with a single batch: seed the index from
     // the old corpus, then one ingest step for the dd_delta batch.
-    val staging = java.nio.file.Files.createTempDirectory("graft-delta").toString
-    val inQuery = Dedup.deltaDedup(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val isNew = (c: Column) => c % Dedup.DeltaModulus === Dedup.DeltaResidue
-    val sh = Dedup.cappedShingles(spark, sf, None).localCheckpoint()
-    val seed = s"$staging/seed.parquet"
-    Dedup.seedDeltaIndex(sh, c => !isNew(c), seed)
-    val staged = Dedup.deltaIngestStep(spark, sh, isNew, Seq(seed),
-        s"$staging/b1.parquet")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(staged == inQuery)
-    assert(new java.io.File(seed).exists,
-      "old-corpus bucket table must be materialized")
+    withTempDir("graft-delta") { stagingPath =>
+      val staging = stagingPath.toString
+      val inQuery = Dedup.deltaDedup(spark, sf)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val isNew = (c: Column) => c % Dedup.DeltaModulus === Dedup.DeltaResidue
+      val sh = Dedup.cappedShingles(spark, sf, None).localCheckpoint()
+      val seed = s"$staging/seed.parquet"
+      Dedup.seedDeltaIndex(sh, c => !isNew(c), seed)
+      val staged = Dedup.deltaIngestStep(spark, sh, isNew, Seq(seed),
+          s"$staging/b1.parquet")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(staged == inQuery)
+      assert(new java.io.File(seed).exists,
+        "old-corpus bucket table must be materialized")
+    }
   }
 
   test("dd_delta_embed equals the τ=0.8 pairs restricted to batch-touching pairs") {
@@ -665,23 +685,25 @@ class DedupSpec extends SparkSuite {
   test("staged delta-embed (old keys from parquet, batch signed fresh) equals in-query") {
     // The embed chain's own functions with a single batch, on the plan
     // dd_delta_embed solves (same corpus, same cached selectivity).
-    val staging = java.nio.file.Files.createTempDirectory("graft-delta-emb").toString
-    val inQuery = Dedup.deltaEmbed(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val (corpusL, plan) = Dedup.hiCorpusAndPlan(spark, sf)
-    val corpus = corpusL.localCheckpoint()
-    Dedup.seedEmbedDeltaIndex(spark, corpus, c => !Dedup.deltaEmbedIsNew(c),
-      plan, Dedup.EmbedDim, staging)
-    val staged = Dedup.deltaEmbedIngestStep(spark, corpus, Dedup.deltaEmbedIsNew,
-        Dedup.EmbedHiThreshold, staging, Seq(Dedup.embedSigsPath(staging)),
-        s"$staging/b1_sigs.parquet")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(staged == inQuery)
-    assert(new java.io.File(s"$staging/embed_sigs.parquet").exists,
-      "old-corpus signatures must be materialized under the ONE embedding " +
-        "staging idiom (embed_sigs.parquet + embed_meta.json manifest)")
-    assert(new java.io.File(s"$staging/embed_meta.json").exists,
-      "the staged relation must carry its provenance manifest")
+    withTempDir("graft-delta-emb") { stagingPath =>
+      val staging = stagingPath.toString
+      val inQuery = Dedup.deltaEmbed(spark, sf)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val (corpusL, plan) = Dedup.hiCorpusAndPlan(spark, sf)
+      val corpus = corpusL.localCheckpoint()
+      Dedup.seedEmbedDeltaIndex(spark, corpus, c => !Dedup.deltaEmbedIsNew(c),
+        plan, Dedup.EmbedDim, staging)
+      val staged = Dedup.deltaEmbedIngestStep(spark, corpus, Dedup.deltaEmbedIsNew,
+          Dedup.EmbedHiThreshold, staging, Seq(Dedup.embedSigsPath(staging)),
+          s"$staging/b1_sigs.parquet")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(staged == inQuery)
+      assert(new java.io.File(s"$staging/embed_sigs.parquet").exists,
+        "old-corpus signatures must be materialized under the ONE embedding " +
+          "staging idiom (embed_sigs.parquet + embed_meta.json manifest)")
+      assert(new java.io.File(s"$staging/embed_meta.json").exists,
+        "the staged relation must carry its provenance manifest")
+    }
   }
 
   test("delta ingest chain: appended index, per-step pairs, no re-emission, no re-signing") {
@@ -700,63 +722,67 @@ class DedupSpec extends SparkSuite {
     val sh = docs.select(col("doc_id"),
       explode(graft.functions.WordShingles.wordShingles(col("text"), 3)).as("shingle"))
       .distinct().localCheckpoint()
-    val dir = java.nio.file.Files.createTempDirectory("graft-chain-spec").toString
-    val seedPath = s"$dir/seed.parquet"
-    val b1Path = s"$dir/b1.parquet"
-    val b2Path = s"$dir/b2.parquet"
-    Dedup.seedDeltaIndex(sh, c => c % 10 =!= 3 && c % 10 =!= 7, seedPath)
-    def fileSet(p: String): Set[String] =
-      new java.io.File(p).listFiles().map(_.getName).toSet
-    val seedN = spark.read.parquet(seedPath).count()
-    val seedFiles = fileSet(seedPath)
-    val s1 = Dedup.deltaIngestStep(spark, sh, _ % 10 === 3,
-      Seq(seedPath), b1Path)
-    val afterB1 = seedN + spark.read.parquet(b1Path).count()
-    val s2 = Dedup.deltaIngestStep(spark, sh, _ % 10 === 7,
-      Seq(seedPath, b1Path), b2Path)
-    val afterB2 = afterB1 + spark.read.parquet(b2Path).count()
-    // APPEND semantics at the file grain: each step publishes exactly its
-    // batch's bucket rows as its OWN table under the index root — nothing
-    // already staged is ever re-signed or re-written (the seed table's
-    // files are bit-level untouched across both ingests).
-    assert(fileSet(seedPath) == seedFiles,
-      "an ingest step must never rewrite the staged index's existing files")
-    val b1Buckets = Dedup.bandedBuckets(sh.filter(col("doc_id") % 10 === 3),
-      Dedup.BandRows).count()
-    val b2Buckets = Dedup.bandedBuckets(sh.filter(col("doc_id") % 10 === 7),
-      Dedup.BandRows).count()
-    assert(seedN > 0 && afterB1 - seedN == b1Buckets && afterB2 - afterB1 == b2Buckets,
-      s"append must add batch buckets only: $seedN -> $afterB1 -> $afterB2")
-    val p1 = s1.select("doc_a", "doc_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val p2 = s2.select("doc_a", "doc_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    def pairsAmong(ids: Set[Long]) =
-      for (a <- ids; b <- ids if a < b) yield (a, b)
-    // step 1: pairs among old ∪ B1 touching B1 (B2 has not arrived)
-    val exp1 = pairsAmong(Set(1L, 2L, 3L, 23L))
-      .filter { case (a, b) => a % 10 == 3 || b % 10 == 3 }
-    // step 2: pairs touching B2 over the full corpus — incl. the old×B2
-    // pair (5, 27); B1's pairs and (1,2) must NOT reappear
-    val exp2 = (pairsAmong(Set(1L, 2L, 3L, 23L, 7L, 17L)) + ((5L, 27L)))
-      .filter { case (a, b) => a % 10 == 7 || b % 10 == 7 }
-    assert(p1 == exp1, s"step 1: got $p1 expected $exp1")
-    assert(p2 == exp2, s"step 2: got $p2 expected $exp2")
-    assert((p1 intersect p2).isEmpty, "a pair may be emitted at exactly one step")
-    // "Reads but never re-signs the staged product": a further batch's
-    // candidate plan joins the parquet bucket table directly — no minhash
-    // aggregate anywhere in it (the only signing happened in the batch's
-    // own checkpointed bucket build).
-    val newB3 = Dedup.bandedBuckets(sh.filter(col("doc_id") % 10 === 1),
-      Dedup.BandRows).localCheckpoint()
-    val candPlan = Dedup.deltaCandidatesLazy(newB3,
-        spark.read.parquet(seedPath).unionByName(spark.read.parquet(b1Path))
-          .unionByName(spark.read.parquet(b2Path)).unionByName(newB3))
-      .queryExecution.executedPlan.toString
-    assert(!candPlan.toLowerCase.contains("minhash"),
-      s"ingest must not re-sign the staged product:\n$candPlan")
-    assert(candPlan.contains("seed.parquet") && candPlan.contains("b1.parquet"),
-      s"staged product must be read as parquet:\n$candPlan")
+    withTempDir("graft-chain-spec") { dirPath =>
+      val dir = dirPath.toString
+      val seedPath = s"$dir/seed.parquet"
+      val b1Path = s"$dir/b1.parquet"
+      val b2Path = s"$dir/b2.parquet"
+      Dedup.seedDeltaIndex(sh, c => c % 10 =!= 3 && c % 10 =!= 7, seedPath)
+      def fileSet(p: String): Set[String] =
+        new java.io.File(p).listFiles().map(_.getName).toSet
+      val seedN = spark.read.parquet(seedPath).count()
+      val seedFiles = fileSet(seedPath)
+      val s1 = Dedup.deltaIngestStep(spark, sh, _ % 10 === 3,
+        Seq(seedPath), b1Path)
+      val afterB1 = seedN + spark.read.parquet(b1Path).count()
+      val s2 = Dedup.deltaIngestStep(spark, sh, _ % 10 === 7,
+        Seq(seedPath, b1Path), b2Path)
+      val afterB2 = afterB1 + spark.read.parquet(b2Path).count()
+      // APPEND semantics at the file grain: each step publishes exactly its
+      // batch's bucket rows as its OWN table under the index root — nothing
+      // already staged is ever re-signed or re-written (the seed table's
+      // files are bit-level untouched across both ingests).
+      assert(fileSet(seedPath) == seedFiles,
+        "an ingest step must never rewrite the staged index's existing files")
+      val b1Buckets = Dedup.bandedBuckets(sh.filter(col("doc_id") % 10 === 3),
+        Dedup.BandRows).count()
+      val b2Buckets = Dedup.bandedBuckets(sh.filter(col("doc_id") % 10 === 7),
+        Dedup.BandRows).count()
+      assert(seedN > 0 && afterB1 - seedN == b1Buckets && afterB2 - afterB1 == b2Buckets,
+        s"append must add batch buckets only: $seedN -> $afterB1 -> $afterB2")
+      val p1 = s1.select("doc_a", "doc_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      val p2 = s2.select("doc_a", "doc_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      def pairsAmong(ids: Set[Long]) =
+        for (a <- ids; b <- ids if a < b) yield (a, b)
+      // step 1: pairs among old ∪ B1 touching B1 (B2 has not arrived)
+      val exp1 = pairsAmong(Set(1L, 2L, 3L, 23L))
+        .filter { case (a, b) => a % 10 == 3 || b % 10 == 3 }
+      // step 2: pairs touching B2 over the full corpus — incl. the old×B2
+      // pair (5, 27); B1's pairs and (1,2) must NOT reappear
+      val exp2 = (pairsAmong(Set(1L, 2L, 3L, 23L, 7L, 17L)) + ((5L, 27L)))
+        .filter { case (a, b) => a % 10 == 7 || b % 10 == 7 }
+      assert(p1 == exp1, s"step 1: got $p1 expected $exp1")
+      assert(p2 == exp2, s"step 2: got $p2 expected $exp2")
+      assert((p1 intersect p2).isEmpty, "a pair may be emitted at exactly one step")
+      // "Reads but never re-signs the staged product": a further batch's
+      // candidate plan (the funnel's shared candidate step) joins the
+      // parquet bucket table directly — no minhash aggregate anywhere in it
+      // (the only signing happened in the batch's own checkpointed bucket
+      // build).
+      val isB3 = (c: Column) => c % 10 === 1
+      val newB3 = Dedup.bandedBuckets(sh.filter(isB3(col("doc_id"))),
+        Dedup.BandRows).localCheckpoint()
+      val candPlan = Dedup.lshCandidates(newB3,
+          spark.read.parquet(seedPath).unionByName(spark.read.parquet(b1Path))
+            .unionByName(spark.read.parquet(b2Path)).unionByName(newB3), isB3)
+        .queryExecution.executedPlan.toString
+      assert(!candPlan.toLowerCase.contains("minhash"),
+        s"ingest must not re-sign the staged product:\n$candPlan")
+      assert(candPlan.contains("seed.parquet") && candPlan.contains("b1.parquet"),
+        s"staged product must be read as parquet:\n$candPlan")
+    }
   }
 
   test("embed ingest step publishes the batch's signatures at the file grain, seed untouched") {
@@ -772,25 +798,27 @@ class DedupSpec extends SparkSuite {
       (101L, a), (102L, a)
     ).toDF("vec_id", "embedding").localCheckpoint()
     val plan = Dedup.LshPlan(bits = 6, tables = 8, work = 0, candFraction = 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-embed-step").toString
-    Dedup.seedEmbedDeltaIndex(spark, corpus, c => c < 100L, plan, 4, dir)
-    val seedPath = Dedup.embedSigsPath(dir)
-    def fileSet(p: String): Set[String] =
-      new java.io.File(p).listFiles().map(_.getName).toSet
-    val seedFiles = fileSet(seedPath)
-    assert(spark.read.parquet(seedPath).count() == 3L,
-      "seed must hold one signature row per old vector")
-    val b1Path = s"$dir/b1_sigs.parquet"
-    val out = Dedup.deltaEmbedIngestStep(spark, corpus, c => c >= 100L,
-        0.8, dir, Seq(seedPath), b1Path)
-      .select("vec_a", "vec_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(spark.read.parquet(b1Path).count() == 2L,
-      "the step's table must hold exactly the batch's signature rows")
-    assert(fileSet(seedPath) == seedFiles,
-      "an ingest step must never rewrite the staged index's existing files")
-    assert(out == Set((1L, 101L), (2L, 101L), (1L, 102L), (2L, 102L),
-      (101L, 102L)), s"got $out")
+    withTempDir("graft-embed-step") { dirPath =>
+      val dir = dirPath.toString
+      Dedup.seedEmbedDeltaIndex(spark, corpus, c => c < 100L, plan, 4, dir)
+      val seedPath = Dedup.embedSigsPath(dir)
+      def fileSet(p: String): Set[String] =
+        new java.io.File(p).listFiles().map(_.getName).toSet
+      val seedFiles = fileSet(seedPath)
+      assert(spark.read.parquet(seedPath).count() == 3L,
+        "seed must hold one signature row per old vector")
+      val b1Path = s"$dir/b1_sigs.parquet"
+      val out = Dedup.deltaEmbedIngestStep(spark, corpus, c => c >= 100L,
+          0.8, dir, Seq(seedPath), b1Path)
+        .select("vec_a", "vec_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(spark.read.parquet(b1Path).count() == 2L,
+        "the step's table must hold exactly the batch's signature rows")
+      assert(fileSet(seedPath) == seedFiles,
+        "an ingest step must never rewrite the staged index's existing files")
+      assert(out == Set((1L, 101L), (2L, 101L), (1L, 102L), (2L, 102L),
+        (101L, 102L)), s"got $out")
+    }
   }
 
   test("dd_delta_embed_chain: per-step pairs equal the bipartite exact form; index appended") {

@@ -83,8 +83,8 @@ object FuzzyCoarseCheck {
         (r, wall)
       }
       // Lap protocol (round 16): the first lap of anything in a fresh JVM
-      // carries 60+ s of JIT/page-cache warmup at this scale (SigProbe
-      // measured 74.5 → 3.6 s on an UNCHANGED query), so the walls that
+      // carries 60+ s of JIT/page-cache warmup at this scale (an
+      // UNCHANGED query measured 74.5 → 3.6 s, round 16), so the walls that
       // decide the threshold are min-of-2 over ALTERNATING warm laps after
       // one untimed warm-up; row equality is asserted on the first pair.
       rows(Long.MaxValue) // untimed warm-up

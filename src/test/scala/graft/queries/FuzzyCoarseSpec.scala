@@ -31,8 +31,7 @@ class FuzzyCoarseSpec extends SparkSuite {
         (7001L, other + " seventeen", "en", "web")))
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_fuzzy_coarse")
-    try {
+    withTempDir("graft_fuzzy_coarse") { dir =>
       docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
       // The hot census the coarse path routes on: every cluster bucket
       // must genuinely exceed HotBucketOcc, or the forced-on lap would
@@ -80,7 +79,7 @@ class FuzzyCoarseSpec extends SparkSuite {
       // The cold near-dup pair must be untouched by hot routing.
       assert(coarseOn.exists { case (t, e, _) => t == 7001L && e == 7000L },
         s"cold near-dup pair lost: ${coarseOn.filter(_._1 > 1000L)}")
-    } finally graft.sources.Staging.deleteRecursively(dir)
+    }
   }
 
   test("borderline-J pair routed entirely through hot buckets: coarse survival AND the documented miss are both pinned") {
@@ -163,8 +162,7 @@ class FuzzyCoarseSpec extends SparkSuite {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("web"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_fuzzy_border")
-    try {
+    withTempDir("graft_fuzzy_border") { dir =>
       docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
       // Hot-routing is a fact of the census, not an argument: every fine
       // bucket where E collides with a mutant must exceed HotBucketOcc.
@@ -210,7 +208,7 @@ class FuzzyCoarseSpec extends SparkSuite {
       assert(coarseOut.count(p => p._1 % 7 == 1 && p._2 == 700L) == 80,
         s"cluster pairs lost: ${coarseOut.size}")
       assert(mass >= 0) // census materialized
-    } finally graft.sources.Staging.deleteRecursively(dir)
+    }
   }
 
   test("coarse guard is inert on every driver-verified corpus (sentinel)") {

@@ -30,8 +30,7 @@ class FuzzyFloorSpec extends SparkSuite {
       (141L, shortText, "en", "web"))
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_fuzzy_floor")
-    try {
+    withTempDir("graft_fuzzy_floor") { dir =>
       docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val out = CorpusOps.decontaminateFuzzy(spark, dir.toString)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -40,7 +39,7 @@ class FuzzyFloorSpec extends SparkSuite {
       assert(!out.exists(p => p._1 == 141L || p._2 == 140L),
         s"sub-floor docs (3 shingles < ${CorpusOps.MinCappedShingles}) must " +
           s"be incomparable; got $out")
-    } finally graft.sources.Staging.deleteRecursively(dir)
+    }
   }
 
   test("floor is inert on every driver-verified corpus (oracle-divergence sentinel)") {

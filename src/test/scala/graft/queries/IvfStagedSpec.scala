@@ -18,19 +18,21 @@ class IvfStagedSpec extends SparkSuite {
     df.collect().map(_.toString).toSeq.sorted
 
   test("staged arm serves the staged index; ann_ivf identical across the dispatch") {
-    val staging = java.nio.file.Files.createTempDirectory("ivf-staging").toString
-    val recompute = rows(Similarity.annIvf(spark, sf))
-    Similarity.stageIvfIndex(spark, sf, staging)
-    // Engagement: the served posting relation must actually READ the
-    // staged parquet, not silently recompute.
-    val emb = graft.Tables.embeddings(spark, sf)
-    val serving = Similarity.sharedIvfServing(spark, emb, Some(staging))
-    assert(serving.assigned.inputFiles.nonEmpty &&
-      serving.assigned.inputFiles.forall(_.contains(staging)),
-      s"staged arm must scan $staging, got " +
-        serving.assigned.inputFiles.take(2).mkString(","))
-    assert(rows(Similarity.annIvfWith(spark, sf, Some(staging))) == recompute,
-      "ann_ivf must be row-identical across the staged-index dispatch")
+    withTempDir("ivf-staging") { stagingPath =>
+      val staging = stagingPath.toString
+      val recompute = rows(Similarity.annIvf(spark, sf))
+      Similarity.stageIvfIndex(spark, sf, staging)
+      // Engagement: the served posting relation must actually READ the
+      // staged parquet, not silently recompute.
+      val emb = graft.Tables.embeddings(spark, sf)
+      val serving = Similarity.sharedIvfServing(spark, emb, Some(staging))
+      assert(serving.assigned.inputFiles.nonEmpty &&
+        serving.assigned.inputFiles.forall(_.contains(staging)),
+        s"staged arm must scan $staging, got " +
+          serving.assigned.inputFiles.take(2).mkString(","))
+      assert(rows(Similarity.annIvfWith(spark, sf, Some(staging))) == recompute,
+        "ann_ivf must be row-identical across the staged-index dispatch")
+    }
   }
 
   test("ann_ivf_staged entry equals ann_ivf") {
@@ -45,100 +47,112 @@ class IvfStagedSpec extends SparkSuite {
     // stratum's inverted file is the persisted full-corpus postings
     // semi-joined on the stratum ids (no per-execution assignment), and
     // both strata must be row-identical across the switch.
-    val staging = java.nio.file.Files.createTempDirectory("ivf-filter").toString
-    val recompute10 = rows(Similarity.annFiltered(spark, sf))
-    val recompute1 = rows(Similarity.annFilteredRare(spark, sf))
-    Similarity.stageIvfIndex(spark, sf, staging)
-    val emb = graft.Tables.embeddings(spark, sf)
-    val (_, _, assigned) = Similarity.sharedIvfFilteredPostings(
-      spark, emb, emb.filter(Similarity.filterPred10()), Some(staging))
-    assert(assigned.inputFiles.exists(_.contains(staging)),
-      "the staged arm must scan the persisted postings, got " +
-        assigned.inputFiles.take(2).mkString(","))
-    assert(rows(Similarity.annFilteredWith(spark, sf, Similarity.filterPred10(),
-        s"label${Similarity.FilterLabel}", Some(staging))) == recompute10,
-      "ann_filtered must be row-identical across the staged-postings dispatch")
-    assert(rows(Similarity.annFilteredWith(spark, sf, Similarity.filterPredRare(),
-        "rare", Some(staging))) == recompute1,
-      "ann_filtered_rare must be row-identical across the staged-postings dispatch")
+    withTempDir("ivf-filter") { stagingPath =>
+      val staging = stagingPath.toString
+      val recompute10 = rows(Similarity.annFiltered(spark, sf))
+      val recompute1 = rows(Similarity.annFilteredRare(spark, sf))
+      Similarity.stageIvfIndex(spark, sf, staging)
+      val emb = graft.Tables.embeddings(spark, sf)
+      val (_, _, assigned) = Similarity.sharedIvfFilteredPostings(
+        spark, emb, emb.filter(Similarity.filterPred10()), Some(staging))
+      assert(assigned.inputFiles.exists(_.contains(staging)),
+        "the staged arm must scan the persisted postings, got " +
+          assigned.inputFiles.take(2).mkString(","))
+      assert(rows(Similarity.annFilteredWith(spark, sf, Similarity.filterPred10(),
+          s"label${Similarity.FilterLabel}", Some(staging))) == recompute10,
+        "ann_filtered must be row-identical across the staged-postings dispatch")
+      assert(rows(Similarity.annFilteredWith(spark, sf, Similarity.filterPredRare(),
+          "rare", Some(staging))) == recompute1,
+        "ann_filtered_rare must be row-identical across the staged-postings dispatch")
+    }
   }
 
   test("pq and kmeans families serve their staged products, row-identical") {
     // Round-19 follow-on: the whole vector-index family behind the one
     // staging location — ann_ivf_pq's encoded inverted file + codebooks
     // + calibrated depths, ann_ivf_kmeans' fitted matrix + postings.
-    val staging = java.nio.file.Files.createTempDirectory("ivf-pqkm").toString
-    val pqRecompute = rows(Similarity.annIvfPq(spark, sf))
-    val kmRecompute = rows(Similarity.annIvfKmeans(spark, sf))
-    Similarity.stagePqIndex(spark, sf, staging)
-    Similarity.stageKmeansIndex(spark, sf, staging)
-    val emb = graft.Tables.embeddings(spark, sf)
-    val pqS = Similarity.sharedPqServing(spark, emb, Some(staging))
-    assert(pqS.codes.inputFiles.nonEmpty &&
-      pqS.codes.inputFiles.forall(_.contains(staging)),
-      "the pq staged arm must scan the persisted code postings")
-    val kmS = Similarity.sharedKmeansServing(spark, emb, Some(staging))
-    assert(kmS.assigned.inputFiles.nonEmpty &&
-      kmS.assigned.inputFiles.forall(_.contains(staging)),
-      "the kmeans staged arm must scan the persisted postings")
-    assert(rows(Similarity.annIvfPqWith(spark, sf, Some(staging))) == pqRecompute,
-      "ann_ivf_pq must be row-identical across the staged dispatch")
-    assert(rows(Similarity.annIvfKmeansWith(spark, sf, Some(staging))) == kmRecompute,
-      "ann_ivf_kmeans must be row-identical across the staged dispatch")
+    withTempDir("ivf-pqkm") { stagingPath =>
+      val staging = stagingPath.toString
+      val pqRecompute = rows(Similarity.annIvfPq(spark, sf))
+      val kmRecompute = rows(Similarity.annIvfKmeans(spark, sf))
+      Similarity.stagePqIndex(spark, sf, staging)
+      Similarity.stageKmeansIndex(spark, sf, staging)
+      val emb = graft.Tables.embeddings(spark, sf)
+      val pqS = Similarity.sharedPqServing(spark, emb, Some(staging))
+      assert(pqS.codes.inputFiles.nonEmpty &&
+        pqS.codes.inputFiles.forall(_.contains(staging)),
+        "the pq staged arm must scan the persisted code postings")
+      val kmS = Similarity.sharedKmeansServing(spark, emb, Some(staging))
+      assert(kmS.assigned.inputFiles.nonEmpty &&
+        kmS.assigned.inputFiles.forall(_.contains(staging)),
+        "the kmeans staged arm must scan the persisted postings")
+      assert(rows(Similarity.annIvfPqWith(spark, sf, Some(staging))) == pqRecompute,
+        "ann_ivf_pq must be row-identical across the staged dispatch")
+      assert(rows(Similarity.annIvfKmeansWith(spark, sf, Some(staging))) == kmRecompute,
+        "ann_ivf_kmeans must be row-identical across the staged dispatch")
+    }
   }
 
   test("a partial staging serves only its committed products") {
     // stageIvfIndex alone: the coarse index serves, pq/kmeans — whose
     // products were never staged — each degrade to recompute without
     // touching the served sibling.
-    val staging = java.nio.file.Files.createTempDirectory("ivf-partial").toString
-    Similarity.stageIvfIndex(spark, sf, staging)
-    val emb = graft.Tables.embeddings(spark, sf)
-    assert(Similarity.sharedIvfServing(spark, emb, Some(staging))
-      .assigned.inputFiles.exists(_.contains(staging)),
-      "the staged coarse index must serve")
-    assert(!Similarity.sharedPqServing(spark, emb, Some(staging))
-      .codes.inputFiles.exists(_.contains(staging)),
-      "pq must recompute when its product was not staged")
-    assert(!Similarity.sharedKmeansServing(spark, emb, Some(staging))
-      .assigned.inputFiles.exists(_.contains(staging)),
-      "kmeans must recompute when its product was not staged")
+    withTempDir("ivf-partial") { stagingPath =>
+      val staging = stagingPath.toString
+      Similarity.stageIvfIndex(spark, sf, staging)
+      val emb = graft.Tables.embeddings(spark, sf)
+      assert(Similarity.sharedIvfServing(spark, emb, Some(staging))
+        .assigned.inputFiles.exists(_.contains(staging)),
+        "the staged coarse index must serve")
+      assert(!Similarity.sharedPqServing(spark, emb, Some(staging))
+        .codes.inputFiles.exists(_.contains(staging)),
+        "pq must recompute when its product was not staged")
+      assert(!Similarity.sharedKmeansServing(spark, emb, Some(staging))
+        .assigned.inputFiles.exists(_.contains(staging)),
+        "kmeans must recompute when its product was not staged")
+    }
   }
 
   test("provenance fence: an index staged from another corpus is refused") {
-    val staging = java.nio.file.Files.createTempDirectory("ivf-foreign").toString
-    Similarity.stageIvfIndex(spark, "/root/testdata/sf0.01", staging)
-    val emb = graft.Tables.embeddings(spark, sf)
-    val serving = Similarity.sharedIvfServing(spark, emb, Some(staging))
-    assert(!serving.assigned.inputFiles.exists(_.contains(staging)),
-      "a foreign-corpus staging must fall back to recompute")
-    // And the output still equals the recompute form.
-    assert(rows(Similarity.annIvfWith(spark, sf, Some(staging))) ==
-      rows(Similarity.annIvf(spark, sf)))
+    withTempDir("ivf-foreign") { stagingPath =>
+      val staging = stagingPath.toString
+      Similarity.stageIvfIndex(spark, "/root/testdata/sf0.01", staging)
+      val emb = graft.Tables.embeddings(spark, sf)
+      val serving = Similarity.sharedIvfServing(spark, emb, Some(staging))
+      assert(!serving.assigned.inputFiles.exists(_.contains(staging)),
+        "a foreign-corpus staging must fall back to recompute")
+      // And the output still equals the recompute form.
+      assert(rows(Similarity.annIvfWith(spark, sf, Some(staging))) ==
+        rows(Similarity.annIvf(spark, sf)))
+    }
   }
 
   test("params fence: an index staged under different parameters is refused") {
-    val staging = java.nio.file.Files.createTempDirectory("ivf-params").toString
-    Similarity.stageIvfIndex(spark, sf, staging)
-    // Tamper with ONE identity field (cellReplicas) in the manifest —
-    // postings built under a different replication cannot serve.
-    val conf = spark.sparkContext.hadoopConfiguration
-    val m = graft.sources.Manifest.read(conf, staging, "ivf_meta.json").get
-    graft.sources.Manifest.write(conf, staging, "ivf_meta.json",
-      m.toSeq.map { case (k, v) =>
-        if (k == "cellReplicas") (k, (v.toInt + 1).toString) else (k, v)
-      })
-    val emb = graft.Tables.embeddings(spark, sf)
-    val serving = Similarity.sharedIvfServing(spark, emb, Some(staging))
-    assert(!serving.assigned.inputFiles.exists(_.contains(staging)),
-      "an index staged under different parameters must recompute")
+    withTempDir("ivf-params") { stagingPath =>
+      val staging = stagingPath.toString
+      Similarity.stageIvfIndex(spark, sf, staging)
+      // Tamper with ONE identity field (cellReplicas) in the manifest —
+      // postings built under a different replication cannot serve.
+      val conf = spark.sparkContext.hadoopConfiguration
+      val m = graft.sources.Manifest.read(conf, staging, "ivf_meta.json").get
+      graft.sources.Manifest.write(conf, staging, "ivf_meta.json",
+        m.toSeq.map { case (k, v) =>
+          if (k == "cellReplicas") (k, (v.toInt + 1).toString) else (k, v)
+        })
+      val emb = graft.Tables.embeddings(spark, sf)
+      val serving = Similarity.sharedIvfServing(spark, emb, Some(staging))
+      assert(!serving.assigned.inputFiles.exists(_.contains(staging)),
+        "an index staged under different parameters must recompute")
+    }
   }
 
   test("missing or half-written staging is refused") {
-    val staging = java.nio.file.Files.createTempDirectory("ivf-empty").toString
-    val emb = graft.Tables.embeddings(spark, sf)
-    val serving = Similarity.sharedIvfServing(spark, emb, Some(staging))
-    assert(!serving.assigned.inputFiles.exists(_.contains(staging)),
-      "a staging dir without tables+manifest must recompute")
+    withTempDir("ivf-empty") { stagingPath =>
+      val staging = stagingPath.toString
+      val emb = graft.Tables.embeddings(spark, sf)
+      val serving = Similarity.sharedIvfServing(spark, emb, Some(staging))
+      assert(!serving.assigned.inputFiles.exists(_.contains(staging)),
+        "a staging dir without tables+manifest must recompute")
+    }
   }
 }

@@ -7,9 +7,13 @@ import org.apache.spark.sql.functions._
   * three scale points and fitted for a time-vs-rows exponent
   * (scripts/scale_probes.sh → SCALE_r{N}.json).
   *
-  * Growth uses the OrganicCapProbe mosaic construction (chunked
-  * arithmetic progressions over a prime modulus — see that file's header
-  * for the pairwise-Jaccard ≤ ~0.02 argument): replicas add corpus BYTES
+  * Growth uses a mosaic construction: replica r's chunk j (j = 0..11) is
+  * words [4j, 4j+4) of source doc (a + j·b) mod N, with a = r mod N,
+  * b = 1 + r div N and N prime. Two replicas with the same stride never
+  * pick the same doc at the same slot, and two with different strides
+  * agree on at most one slot (j·(b₁−b₂) ≡ a₂−a₁ mod N has one root), so
+  * any two replicas share at most one 4-word chunk — pairwise Jaccard
+  * ≤ ~0.02, far below every near-dup threshold. Replicas add corpus BYTES
   * and organically growing shingle document-frequencies without
   * fabricating near-dup pairs, so each query's OUTPUT stays anchored to
   * the original docs while its WORK scales with the corpus — exactly
@@ -26,7 +30,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleCorpus {
 
-  private val N = 4999 // prime ≤ the 5000 sf0.1 docs (OrganicCapProbe)
+  private val N = 4999 // prime ≤ the 5000 sf0.1 docs
   private val ChunkWords = 4
   private val ChunksPerReplica = 12
   private val ReplicaIdBase = 1000000L

@@ -310,8 +310,7 @@ class SimilaritySpec extends SparkSuite {
   test("ann_ivf_append: append-only lifecycle — batches assign only themselves, postings grow by exactly the batch") {
     import org.apache.spark.sql.functions.col
     val emb = graft.Tables.embeddings(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_append_spec")
-    try {
+    withTempDir("graft_ivf_append_spec") { dir =>
       Similarity.seedIvfIndex(spark, emb, Similarity.ivfAppendIsOld, dir.toString)
       val idx = () => spark.read.parquet(s"$dir/ivf_index.parquet")
       val nOld = emb.filter(Similarity.ivfAppendIsOld(col("vec_id"))).count()
@@ -336,10 +335,6 @@ class SimilaritySpec extends SparkSuite {
       Similarity.ivfAppendStep(spark, emb, Similarity.ivfAppendIsB2, dir.toString)
       assert(idx().count() == 2 * (nOld + nB1 + nB2))
       assert(idx().filter(Similarity.ivfAppendIsB2(col("vec_id"))).count() == 2 * nB2)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
     }
   }
 

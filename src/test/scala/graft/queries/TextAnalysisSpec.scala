@@ -197,36 +197,38 @@ class TextAnalysisSpec extends SparkSuite {
     val bulleted = Seq.fill(10)("- " + line).mkString("\n")
     val ellipsial = (Seq.fill(3)(line + "...") ++ Seq(line + "…") ++
       Seq.fill(6)(line)).mkString("\n")
-    val dir = java.nio.file.Files.createTempDirectory("gopher-lines").toString
-    val sess = spark
-    import sess.implicits._
-    Seq((1L, "en", clean), (2L, "en", bulleted), (3L, "en", ellipsial))
-      .toDF("doc_id", "lang", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rows = TextAnalysis.gopher(spark, dir).collect()
-      .map(r => r.getLong(0) -> r).toMap
-    def ratio(id: Long, c: String): Double =
-      rows(id).getAs[Double](c)
-    assert(rows(1L).getAs[Int]("pass") == 1, s"clean doc must pass: ${rows(1L)}")
-    assert(rows(2L).getAs[Int]("pass") == 0 && ratio(2L, "bullet_line_ratio") > 0.9,
-      s"bulleted doc must fail the bullet rule: ${rows(2L)}")
-    assert(rows(3L).getAs[Int]("pass") == 0 && ratio(3L, "ellipsis_line_ratio") > 0.3,
-      s"ellipsial doc must fail the ellipsis-line rule: ${rows(3L)}")
-    // Isolation: on the two rejected docs every word-level rule passes,
-    // so the line rule is the only rejection cause — and the rejected
-    // docs pass the OTHER line rule.
-    for (id <- Seq(2L, 3L)) {
-      val r = rows(id)
-      assert(r.getLong(1) >= 50 && r.getLong(1) <= 100000)
-      assert(ratio(id, "mean_word_len") >= 3 && ratio(id, "mean_word_len") <= 10)
-      assert(ratio(id, "hash_ratio") < 0.1 && ratio(id, "ellipsis_ratio") < 0.1)
-      assert(ratio(id, "alpha_ratio") >= 0.8)
-      assert(r.getAs[Int]("stop_hits") >= 2)
+    withTempDir("gopher-lines") { dirPath =>
+      val dir = dirPath.toString
+      val sess = spark
+      import sess.implicits._
+      Seq((1L, "en", clean), (2L, "en", bulleted), (3L, "en", ellipsial))
+        .toDF("doc_id", "lang", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val rows = TextAnalysis.gopher(spark, dir).collect()
+        .map(r => r.getLong(0) -> r).toMap
+      def ratio(id: Long, c: String): Double =
+        rows(id).getAs[Double](c)
+      assert(rows(1L).getAs[Int]("pass") == 1, s"clean doc must pass: ${rows(1L)}")
+      assert(rows(2L).getAs[Int]("pass") == 0 && ratio(2L, "bullet_line_ratio") > 0.9,
+        s"bulleted doc must fail the bullet rule: ${rows(2L)}")
+      assert(rows(3L).getAs[Int]("pass") == 0 && ratio(3L, "ellipsis_line_ratio") > 0.3,
+        s"ellipsial doc must fail the ellipsis-line rule: ${rows(3L)}")
+      // Isolation: on the two rejected docs every word-level rule passes,
+      // so the line rule is the only rejection cause — and the rejected
+      // docs pass the OTHER line rule.
+      for (id <- Seq(2L, 3L)) {
+        val r = rows(id)
+        assert(r.getLong(1) >= 50 && r.getLong(1) <= 100000)
+        assert(ratio(id, "mean_word_len") >= 3 && ratio(id, "mean_word_len") <= 10)
+        assert(ratio(id, "hash_ratio") < 0.1 && ratio(id, "ellipsis_ratio") < 0.1)
+        assert(ratio(id, "alpha_ratio") >= 0.8)
+        assert(r.getAs[Int]("stop_hits") >= 2)
+      }
+      assert(ratio(2L, "ellipsis_line_ratio") <= 0.3)
+      assert(ratio(3L, "bullet_line_ratio") <= 0.9)
+      // The U+2026 line participates: 3 ASCII + 1 Unicode ellipsis line.
+      assert(ratio(3L, "ellipsis_line_ratio") == 0.4)
     }
-    assert(ratio(2L, "ellipsis_line_ratio") <= 0.3)
-    assert(ratio(3L, "bullet_line_ratio") <= 0.9)
-    // The U+2026 line participates: 3 ASCII + 1 Unicode ellipsis line.
-    assert(ratio(3L, "ellipsis_line_ratio") == 0.4)
   }
 
   test("zipf fit replays from a plain-Scala OLS over the ranked vocabulary") {

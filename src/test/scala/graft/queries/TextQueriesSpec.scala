@@ -31,14 +31,16 @@ class TextQueriesSpec extends SparkSuite {
 
   test("invertedIndex: repeated doc_id, empty and punctuation-only texts match the oracle") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-index").toString
-    docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-    val out = TextQueries.invertedIndex(spark, dir)
-    assert(out.schema.map(f => f.name -> f.dataType.simpleString) ==
-      Seq("word" -> "string", "df" -> "bigint", "docs" -> "string"))
-    val got = out.collect().toSeq.map(r => (r.getString(0), r.getLong(1), r.getString(2))).sorted
-    val want = oracle(docs)
-    assert(want.contains(("beta", 1L, "1")) && want.contains(("gamma", 3L, "1,4,10")))
-    assert(got == want)
+    withTempDir("graft-index") { dirPath =>
+      val dir = dirPath.toString
+      docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      val out = TextQueries.invertedIndex(spark, dir)
+      assert(out.schema.map(f => f.name -> f.dataType.simpleString) ==
+        Seq("word" -> "string", "df" -> "bigint", "docs" -> "string"))
+      val got = out.collect().toSeq.map(r => (r.getString(0), r.getLong(1), r.getString(2))).sorted
+      val want = oracle(docs)
+      assert(want.contains(("beta", 1L, "1")) && want.contains(("gamma", 3L, "1,4,10")))
+      assert(got == want)
+    }
   }
 }

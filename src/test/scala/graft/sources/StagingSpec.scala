@@ -21,75 +21,76 @@ class StagingSpec extends SparkSuite {
     * and what the file-stream's pathGlobFilter requires).
     */
   private def writeSingleParquet(df: DataFrame, dest: Path): Unit = {
-    val tmp = Files.createTempDirectory("graft-stage-spec")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val ls = Files.list(tmp)
-    try {
-      val part = ls.filter(_.toString.endsWith(".parquet")).findFirst().get()
-      Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
-    } finally ls.close()
-    val walk = Files.walk(tmp)
-    try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(p => Files.deleteIfExists(p))
-    finally walk.close()
+    withTempDir("graft-stage-spec") { tmp =>
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val ls = Files.list(tmp)
+      try {
+        val part = ls.filter(_.toString.endsWith(".parquet")).findFirst().get()
+        Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
+      } finally ls.close()
+    }
   }
 
   test("media stage refreshes when documents.parquet is regenerated in place") {
-    val corpus = Files.createTempDirectory("graft-regen-media")
-    val docs = graft.Tables.documents(spark, sf)
-    writeSingleParquet(docs.orderBy("doc_id").limit(300),
-      corpus.resolve("documents.parquet"))
-    assert(Multimodal.mediaIngest(spark, corpus.toString).count() == 300)
-    // Regenerate the corpus at the SAME path with different content; the
-    // stale stage would keep serving 300 payloads.
-    writeSingleParquet(docs.orderBy("doc_id").limit(200),
-      corpus.resolve("documents.parquet"))
-    assert(Multimodal.mediaIngest(spark, corpus.toString).count() == 200,
-      "media stage served the previous corpus generation")
+    withTempDir("graft-regen-media") { corpus =>
+      val docs = graft.Tables.documents(spark, sf)
+      writeSingleParquet(docs.orderBy("doc_id").limit(300),
+        corpus.resolve("documents.parquet"))
+      assert(Multimodal.mediaIngest(spark, corpus.toString).count() == 300)
+      // Regenerate the corpus at the SAME path with different content; the
+      // stale stage would keep serving 300 payloads.
+      writeSingleParquet(docs.orderBy("doc_id").limit(200),
+        corpus.resolve("documents.parquet"))
+      assert(Multimodal.mediaIngest(spark, corpus.toString).count() == 200,
+        "media stage served the previous corpus generation")
+    }
   }
 
   test("st_sessionize stays oracle-green when events.parquet is regenerated with later data") {
-    val corpus = Files.createTempDirectory("graft-regen-events")
-    // Raw read (ts stays epoch-nanos long) so the written file matches the
-    // driver layout bit-for-bit in schema.
-    val raw = spark.read.parquet(s"$sf/events.parquet")
-    val n = raw.count()
-    // Generation 1: the EARLIEST half — its max(ts) is far below the full
-    // corpus's, which is exactly the hazard setup: a sentinel staged from
-    // it cannot clear the later generation's session timeouts.
-    writeSingleParquet(raw.orderBy("ts").limit((n / 2).toInt),
-      corpus.resolve("events.parquet"))
-    def sessSet(df: DataFrame) =
-      df.select("user_id", "session_start", "session_end", "n_events")
-        .collect().map(_.toSeq).toSet
-    assert(sessSet(StreamingQueries.sessionize(spark, corpus.toString)) ==
-      sessSet(Events.sessionize(spark, corpus.toString)))
-    // Generation 2 at the same path: the full corpus (max ts 2× later).
-    writeSingleParquet(raw, corpus.resolve("events.parquet"))
-    val got = sessSet(StreamingQueries.sessionize(spark, corpus.toString))
-    val want = sessSet(Events.sessionize(spark, corpus.toString))
-    assert(got == want,
-      s"stale sentinel: ${want.size - got.size} of ${want.size} sessions missing")
+    withTempDir("graft-regen-events") { corpus =>
+      // Raw read (ts stays epoch-nanos long) so the written file matches the
+      // driver layout bit-for-bit in schema.
+      val raw = spark.read.parquet(s"$sf/events.parquet")
+      val n = raw.count()
+      // Generation 1: the EARLIEST half — its max(ts) is far below the full
+      // corpus's, which is exactly the hazard setup: a sentinel staged from
+      // it cannot clear the later generation's session timeouts.
+      writeSingleParquet(raw.orderBy("ts").limit((n / 2).toInt),
+        corpus.resolve("events.parquet"))
+      def sessSet(df: DataFrame) =
+        df.select("user_id", "session_start", "session_end", "n_events")
+          .collect().map(_.toSeq).toSet
+      assert(sessSet(StreamingQueries.sessionize(spark, corpus.toString)) ==
+        sessSet(Events.sessionize(spark, corpus.toString)))
+      // Generation 2 at the same path: the full corpus (max ts 2× later).
+      writeSingleParquet(raw, corpus.resolve("events.parquet"))
+      val got = sessSet(StreamingQueries.sessionize(spark, corpus.toString))
+      val want = sessSet(Events.sessionize(spark, corpus.toString))
+      assert(got == want,
+        s"stale sentinel: ${want.size - got.size} of ${want.size} sessions missing")
+    }
   }
 
   test("superseded stages of the same source are deleted; other corpora coexist") {
-    val corpus = Files.createTempDirectory("graft-regen-clean")
-    val docs = graft.Tables.documents(spark, sf)
-    writeSingleParquet(docs.limit(50), corpus.resolve("documents.parquet"))
-    val d1 = Staging.stagedDir("graft_spec_probe", s"$corpus/documents.parquet")
-    Files.createDirectories(d1.toPath)
-    // A different corpus under the same prefix must NOT be treated as stale.
-    val other = Files.createTempDirectory("graft-regen-other")
-    writeSingleParquet(docs.limit(50), other.resolve("documents.parquet"))
-    val dOther = Staging.stagedDir("graft_spec_probe", s"$other/documents.parquet")
-    Files.createDirectories(dOther.toPath)
-    // Regenerate the first corpus: its new key differs, its old dir dies,
-    // the other corpus's stage survives.
-    writeSingleParquet(docs.limit(60), corpus.resolve("documents.parquet"))
-    val d2 = Staging.stagedDir("graft_spec_probe", s"$corpus/documents.parquet")
-    assert(d2.getName != d1.getName, "content change did not change the key")
-    assert(!d1.exists(), "superseded stage not cleaned up")
-    assert(dOther.exists(), "unrelated corpus's stage was deleted")
+    withTempDir("graft-regen-clean") { corpus =>
+      val docs = graft.Tables.documents(spark, sf)
+      writeSingleParquet(docs.limit(50), corpus.resolve("documents.parquet"))
+      val d1 = Staging.stagedDir("graft_spec_probe", s"$corpus/documents.parquet")
+      Files.createDirectories(d1.toPath)
+      // A different corpus under the same prefix must NOT be treated as stale.
+      withTempDir("graft-regen-other") { other =>
+        writeSingleParquet(docs.limit(50), other.resolve("documents.parquet"))
+        val dOther = Staging.stagedDir("graft_spec_probe", s"$other/documents.parquet")
+        Files.createDirectories(dOther.toPath)
+        // Regenerate the first corpus: its new key differs, its old dir dies,
+        // the other corpus's stage survives.
+        writeSingleParquet(docs.limit(60), corpus.resolve("documents.parquet"))
+        val d2 = Staging.stagedDir("graft_spec_probe", s"$corpus/documents.parquet")
+        assert(d2.getName != d1.getName, "content change did not change the key")
+        assert(!d1.exists(), "superseded stage not cleaned up")
+        assert(dOther.exists(), "unrelated corpus's stage was deleted")
+      }
+    }
   }
 
   test("scoped: a body that throws leaves no directory") {

@@ -181,34 +181,38 @@ class StreamingSpec extends SparkSuite {
     import java.nio.file.Files
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    val outDir = Files.createTempDirectory("graft-restart-out").toString
-    val events = loadEvents().sortBy(_.ts).take(3000)
-    val (c1, c2) = events.splitAt(1500)
-    val stream = MemoryStream[Event]
-    def start() = Streaming.dedupeStream(stream.toDF())
-      .writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    val q1 = start()
-    try { stream.addData(c1); q1.processAllAvailable() } finally q1.stop()
-    // Re-deliver rows still inside the watermark horizon (the
-    // dropDuplicatesWithinWatermark contract only covers those), plus the
-    // next chunk — the at-least-once pattern across a process restart.
-    val wmCut = c1.map(_.ts).max.minusSeconds(1800)
-    val redeliver = c1.filter(e => !e.ts.isBefore(wmCut))
-    assert(redeliver.nonEmpty, "test data too sparse for an in-watermark re-delivery")
-    stream.addData(redeliver)
-    stream.addData(c2)
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    // Checkpointed dedup state must survive the restart (re-delivered rows
-    // dropped) and the file sink must commit exactly-once.
-    val got = spark.read.parquet(outDir)
-    assert(got.count() == events.length,
-      s"expected ${events.length} rows after restart, got ${got.count()}")
-    assert(got.select("event_id").distinct().count() == events.length)
+    withTempDir("graft-ckpt") { ckptPath =>
+      val ckpt = ckptPath.toString
+      withTempDir("graft-restart-out") { outDirPath =>
+        val outDir = outDirPath.toString
+        val events = loadEvents().sortBy(_.ts).take(3000)
+        val (c1, c2) = events.splitAt(1500)
+        val stream = MemoryStream[Event]
+        def start() = Streaming.dedupeStream(stream.toDF())
+          .writeStream.format("parquet")
+          .option("path", outDir)
+          .option("checkpointLocation", ckpt)
+          .outputMode("append").start()
+        val q1 = start()
+        try { stream.addData(c1); q1.processAllAvailable() } finally q1.stop()
+        // Re-deliver rows still inside the watermark horizon (the
+        // dropDuplicatesWithinWatermark contract only covers those), plus the
+        // next chunk — the at-least-once pattern across a process restart.
+        val wmCut = c1.map(_.ts).max.minusSeconds(1800)
+        val redeliver = c1.filter(e => !e.ts.isBefore(wmCut))
+        assert(redeliver.nonEmpty, "test data too sparse for an in-watermark re-delivery")
+        stream.addData(redeliver)
+        stream.addData(c2)
+        val q2 = start()
+        try q2.processAllAvailable() finally q2.stop()
+        // Checkpointed dedup state must survive the restart (re-delivered rows
+        // dropped) and the file sink must commit exactly-once.
+        val got = spark.read.parquet(outDir)
+        assert(got.count() == events.length,
+          s"expected ${events.length} rows after restart, got ${got.count()}")
+        assert(got.select("event_id").distinct().count() == events.length)
+      }
+    }
   }
 
   test("driver-facing streaming entries (st_window_agg, st_sessionize) equal batch forms") {
