@@ -71,7 +71,7 @@ object RecallProbe {
       }
       val approx = resultMap(fam match {
         case "ann_filtered_range_corpuswide" =>
-          graft.queries.Similarity.annFilteredWith(spark, sfDir, rangePred, "range", None)
+          graft.queries.Similarity.annFilteredWith(spark, sfDir, rangePred, "range")
         case _ => SparkEntry.queries(fam)(spark, sfDir)
       })
       val recalls = baseline.map { case (q, nn) =>

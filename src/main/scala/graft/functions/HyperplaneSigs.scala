@@ -232,7 +232,7 @@ case class ProbeBuckets(child: Expression, tables: Int, bits: Int, depth: Int,
           // Directional (self-join) mode: flip only 0→1. A hamming-1 pair
           // differs at one position where exactly one side holds a 0 —
           // that side's flip lands on the other's base key, so each pair
-          // is generated exactly once (see Dedup.embedCosineBucketed).
+          // is generated exactly once (see Dedup.embedFunnel).
           if (!directional || (base & (1 << b1)) == 0) {
             out(idx) = tb | ((base ^ (1 << b1)) & 0xFFFFFFFFL); idx += 1
           }

@@ -36,23 +36,8 @@ object Dedup {
       |  min(doc_id) AS canonical_id, count(*) AS n_copies
       |FROM documents GROUP BY 1""".stripMargin
 
-  /** Distinct word-3-gram shingles per doc. Whitespace tokenization matches
-    * the oracle's regexp_split_to_array(text, '\s+').
-    *
-    * Deliberately NOT checkpointed/cached even though several consumers
-    * branch off it: measured at sf0.1, recomputing this subtree per branch
-    * is ~2.5× faster than a localCheckpoint barrier (materialization cost +
-    * lost pushdown). At 100 TB the right call flips — materialize shingles
-    * to a staging table once per corpus ingest and join against that.
-    */
-  private def shingles(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"),
-        explode(graft.functions.WordShingles.wordShingles(col("text"), 3))
-          .as("shingle"))
-      .distinct()
-
-  /** The one shingle-basis builder: word 3-grams of `docs.text`, hashed
+  /** The one shingle-basis builder: word 3-grams of `docs.text` (whitespace
+    * tokenization, the oracles' regexp_split_to_array(text, '\s+')), hashed
     * to xxhash64 BEFORE the distinct (round 19, guide §2.3 "shuffle fewer
     * bytes"), so the distinct's exchange and aggregate carry 8 B longs
     * instead of ~25-45 B shingle strings — every signature-family
@@ -60,8 +45,9 @@ object Dedup {
     * string form: distinct∘hash ≡ hash∘distinct exactly when no two
     * distinct shingles of one doc collide — BasisFloorSpec's collision
     * sentinel pins zero xxhash64 collisions corpus-wide on every
-    * driver-verified corpus. dd_minhash and the staged basis read it over
-    * `documents`, Pipeline's stage 3 over its survivor table.
+    * driver-verified corpus. dd_ngram_jaccard, dd_minhash and the staged
+    * basis read it over `documents`, Pipeline's stage 3 over its survivor
+    * table.
     */
   private[queries] def hashedShingles(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
@@ -123,7 +109,7 @@ object Dedup {
     * scale path with identical output on this threshold.
     */
   def ngramJaccard(spark: SparkSession, sfDir: String): DataFrame =
-    jaccardPairs(shingles(spark, sfDir), 0.8)
+    jaccardPairs(hashedShingles(Tables.documents(spark, sfDir)), 0.8)
 
   val ngramJaccardSql: String =
     raw"""WITH tok AS (
@@ -337,10 +323,11 @@ object Dedup {
     * countDistinct(string) == countDistinct(hash) on every
     * driver-verified corpus, the same staging-time discipline as the
     * floor and coarse-guard sentinels. The exact family
-    * (dd_ngram_jaccard / jaccardPairs) compacts at the same df-cap site
-    * ([[dfCapped]]); its DuckDB oracle states the string form.
+    * (dd_ngram_jaccard / jaccardPairs) reads the same hashed basis
+    * ([[hashedShingles]]); its DuckDB oracle states the string form.
     * Idempotent: a caller handing an already-compacted (long) basis —
-    * the staged table, a spec fixture — passes through unchanged.
+    * [[hashedShingles]], the staged table — passes through unchanged;
+    * a string basis (a spec fixture) is hashed here.
     */
   private[queries] def hashCompact(sh: DataFrame): DataFrame =
     sh.schema("shingle").dataType match {
@@ -828,10 +815,14 @@ object Dedup {
     * away from this regime.
     */
   def embedCosineBucketed(spark: SparkSession, sfDir: String): DataFrame = {
+    val corpus = Tables.embeddings(spark, sfDir)
     // Filter-less parquet count: answered from row-group metadata (empty
     // ReadSchema), footer IO only — safe inside the query at any scale.
-    val n = Tables.embeddings(spark, sfDir).count()
-    embedBucketedCore(Tables.embeddings(spark, sfDir), n, EmbedDupThreshold, "base")
+    // Like a CBO reading table statistics, `n` only steers the (bits,
+    // tables) solve, never the result.
+    val n = corpus.count()
+    val plan = solveLsh(n, EmbedDupThreshold, Some(sampledP1Cached(corpus, n, "base")))
+    embedBucketedWithPlan(corpus, plan, EmbedDupThreshold, None)
   }
 
   /** The solved LSH configuration for a (corpus size, threshold) point,
@@ -853,20 +844,6 @@ object Dedup {
     */
   private[queries] def allPairsWork(n: Long): Double =
     n.toDouble * n.toDouble / 2.0 * EmbedDim
-
-  /** The LSH candidate→verify pipeline over an arbitrary (vec_id,
-    * embedding) corpus at an arbitrary cosine threshold. `n` is a
-    * CARDINALITY ESTIMATE for the (bits, tables) work-model solver — like
-    * a CBO reading table statistics, it only steers the plan shape, never
-    * the result, so an estimate from footer counts is safe.
-    */
-  private[queries] def embedBucketedCore(corpus: DataFrame, n: Long,
-      threshold: Double, cacheTag: String, dim: Int = EmbedDim): DataFrame = {
-    val plan = solveLsh(n, threshold, Some(sampledP1Cached(corpus, n, cacheTag, dim)))
-    // cacheTag doubles as the staged-signature dispatch tag: both name
-    // the corpus CONSTRUCTION over its physical files.
-    embedBucketedWithPlan(corpus, plan, threshold, None, dim, tag = cacheTag)
-  }
 
   /** Per-corpus cache for the sampled selectivity table (ADVICE r11: it
     * was the only index-build product not cached — every dd_embed_*
@@ -1094,22 +1071,6 @@ object Dedup {
       Array.fill(VerifyTables, VerifyBits, d)(rnd.nextGaussian())
     })
 
-  /** Base bucket keys as ONE packed (table << 32 | bucket) long — the
-    * exact key layout [[graft.functions.HyperplaneSigs.probeBuckets]]
-    * emits — so the candidate join compares a single 8-byte key and the
-    * probe side (the BIG side: B/2+1 rows per base row under directional
-    * depth-1 probing) flows into the join with no per-row unpack
-    * projection. Packing is injective for the non-negative 31-bit
-    * table/bucket values the family uses.
-    */
-  private def keyedPacked(sigs: DataFrame): DataFrame =
-    sigs.select(col("vec_id").as("vec_b"),
-      posexplode(col("sig")).as(Seq("tbl", "bkt")))
-      .select(col("vec_b"), packTk(col("tbl"), col("bkt")).as("tk"))
-
-  private def packTk(tbl: Column, bkt: Column): Column =
-    shiftleft(tbl.cast("long"), 32).bitwiseOR(bkt.cast("long"))
-
   /** The signing pass as a relation: one row per vector, all L bucket
     * ids in one array — exactly the product [[stageEmbedSigs]] persists
     * and the recompute arm derives in-flight.
@@ -1216,56 +1177,96 @@ object Dedup {
     }.getOrElse(computeEmbedSigs(corpus, plan, dim).localCheckpoint())
   }
 
+  /** The closed-corpus pass: the signature relation, served through the
+    * one staged dispatch (the `tag` names the corpus CONSTRUCTION, the
+    * sampledP1Cached cacheTag discipline, so a staged relation can never
+    * serve a differently constructed corpus over the same files), then
+    * the funnel with every vector probing.
+    */
   private[queries] def embedBucketedWithPlan(corpus: DataFrame, plan: LshPlan,
       threshold: Double, staging: Option[String], dim: Int = EmbedDim,
       cascadeCutFloor: Double = CascadeCutFloor,
       tag: String = "base"): DataFrame = {
-    val bits = plan.bits
-    val tables = plan.tables
-    // The hyperplane signature relation, served through the ONE-SITE
-    // staged dispatch (round 18, VERDICT r17 #2 — the sharedBasis
-    // symmetry for the embedding families): a corpus signed once at
-    // ingest serves every τ≥0.8 pass the way the staged shingle basis
-    // serves the Jaccard families. Recompute arm = the historical
-    // sign-and-localCheckpoint (comment inside sharedEmbedSigs); the
-    // `tag` names the corpus CONSTRUCTION (the sampledP1Cached cacheTag
-    // discipline) so a staged relation can never serve a differently
-    // constructed corpus over the same files.
     val sigs = sharedEmbedSigs(corpus, tag, plan, dim, staging)
-    // Base keys carry the SAME packed (table << 32 | bucket) long the
-    // probe expression emits — the join runs on one 8-byte key, and the
-    // probe side (B/2+1 rows per base row, the big side by construction)
-    // is never projected through an unpack.
-    val keyed = keyedPacked(sigs)
-    // DIRECTIONAL multiprobe: flip only 0→1 bits. A hamming-1 pair differs
-    // at exactly one position, where exactly one side holds a 0 — that
-    // side's flip hits the other's base key, so every qualifying pair is
-    // generated exactly ONCE (symmetric flipping finds it twice and leaves
-    // distinct() double the work). Hamming-0 pairs meet on base keys.
-    // ONE codegen expression (ProbeBuckets, directional), not the per-key
-    // struct column forest: at the solver's table counts (L > 100) the
-    // forest is L·(B+1) expression trees — the janino compile-time trap
-    // the sigs Scaladoc documents — while the expression stays two
-    // constant generated loops, compiled once per JVM.
-    val probes = sigs.select(col("vec_id").as("vec_a"),
-      explode(graft.functions.HyperplaneSigs.probeBuckets(
-        col("sig"), tables, bits, depth = 1, directional = true)).as("tk"))
-    // Candidate pairs: two-long rows — dedupe is a cheap shuffle on ids,
-    // never on embedding arrays. Directional probing fixes which side
-    // PROBES (the 0-bit holder), not which id is smaller, so orientation
-    // is normalized with least/greatest rather than an a<b filter (which
-    // would drop pairs whose only discovery ran high→low).
-    // SHUFFLE_HASH on the keyed side: it is ~B/2× the smaller relation
-    // and its per-partition build is bounded (N·L·16 B / partitions —
-    // scales out with the partition count), while the default sort-merge
-    // would SORT the N·L·(B/2+1)-row probe side — the query's largest
-    // shuffle (EmbedHiProbe, 100× staging: 259M probe rows vs 23.5M
-    // keyed rows).
-    val cands = probes.join(keyed.hint("SHUFFLE_HASH"), Seq("tk"))
+    embedFunnel(corpus, sigs, sigs, AllDocs, plan, threshold, dim, cascadeCutFloor)
+  }
+
+  // --- The embedding LSH funnel -------------------------------------------
+  //
+  // One candidate-and-verify chain for the embedding family, the
+  // [[lshFunnel]] shape: dd_embed_* run it with AllDocs, dd_delta_embed
+  // with its batch predicate, each dd_delta_embed_chain step against the
+  // staged index ∪ batch.
+
+  /** Base bucket keys (vec_b, tk) of a signature relation, each as ONE
+    * packed (table << 32 | bucket) long — the exact key layout
+    * [[graft.functions.HyperplaneSigs.probeBuckets]] emits — so the
+    * candidate join compares a single 8-byte key and the probe side (the
+    * big side) flows into the join with no per-row unpack projection.
+    * Staged signature tables keep their one (vec_id, sig) layout; keys
+    * are derived per read. Packing is injective for the non-negative
+    * 31-bit table/bucket values the family uses.
+    */
+  private def packedKeys(sigs: DataFrame): DataFrame =
+    sigs.select(col("vec_id").as("vec_b"),
+      posexplode(col("sig")).as(Seq("tbl", "bkt")))
+      .select(col("vec_b"),
+        shiftleft(col("tbl").cast("long"), 32).bitwiseOR(col("bkt").cast("long"))
+          .as("tk"))
+
+  /** The funnel: depth-1 multiprobe of `probeSigs` against the base keys
+    * of `indexSigs`, then [[cascadeVerify]]. `probeSigs` is the probe
+    * side already narrowed to `inProbe`; `indexSigs` signs every vector
+    * the index holds.
+    *
+    * The probe mode follows from the predicate:
+    *   - AllDocs: every vector probes, so DIRECTIONAL probing (flip only
+    *     0→1 bits) is complete and finds each pair once. A hamming-1 pair
+    *     differs at exactly one position, where exactly one side holds a
+    *     0; that side's flip hits the other's base key. Hamming-0 pairs
+    *     meet on base keys. Symmetric flipping would find every pair twice
+    *     and leave the distinct double the work.
+    *   - A batch predicate: only the batch probes, so the flips must be
+    *     SYMMETRIC (base key + every single-bit flip). A pair whose 0-bit
+    *     sits on the old side is found only from the old side's
+    *     directional flip, which never runs. Symmetric probing finds a
+    *     hamming-≤1 pair (n, o) from n's side alone, so coverage equals
+    *     the closed-corpus pass's at the same (bits, tables) while an
+    *     old×old candidate can never form. It costs 2× the flip fan-out,
+    *     but only on the batch.
+    *
+    * ONE codegen expression (ProbeBuckets), not a per-key struct column
+    * forest: at the solver's table counts (L > 100) the forest is
+    * L·(B+1) expression trees — the janino compile-time trap the sigs
+    * Scaladoc documents — while the expression stays two constant
+    * generated loops, compiled once per JVM.
+    *
+    * Candidates are two-long rows, so dedupe is a cheap shuffle on ids,
+    * never on embedding arrays. Probing fixes which side PROBES, not
+    * which id is smaller, so orientation is normalized with
+    * least/greatest rather than an a<b filter (which would drop pairs
+    * whose only discovery ran high→low). SHUFFLE_HASH on the keyed side:
+    * its per-partition build is bounded (N·L·16 B / partitions — scales
+    * out with the partition count), while the default sort-merge would
+    * SORT the probe side — the query's largest shuffle (EmbedHiProbe,
+    * 100× staging: 259M probe rows vs 23.5M keyed rows). Under symmetric
+    * probing the keyed side is the smaller at any batch fraction above
+    * ~1/(B+1).
+    */
+  private[queries] def embedFunnel(corpus: DataFrame, probeSigs: DataFrame,
+      indexSigs: DataFrame, inProbe: Column => Column, plan: LshPlan,
+      threshold: Double, dim: Int, cutFloor: Double = CascadeCutFloor,
+      preSketches: Option[DataFrame] = None): DataFrame = {
+    val probes = probeSigs.select(col("vec_id").as("vec_a"),
+      explode(graft.functions.HyperplaneSigs.probeBuckets(col("sig"),
+        plan.tables, plan.bits, depth = 1, directional = inProbe eq AllDocs))
+        .as("tk"))
+    val cands = probes.join(packedKeys(indexSigs).hint("SHUFFLE_HASH"), Seq("tk"))
       .filter(col("vec_a") =!= col("vec_b"))
       .select(least(col("vec_a"), col("vec_b")).as("vec_a"),
         greatest(col("vec_a"), col("vec_b")).as("vec_b"))
-    cascadeVerify(corpus, cands, threshold, dim, cutFloor = cascadeCutFloor)
+    cascadeVerify(corpus, cands, threshold, dim, cutFloor = cutFloor,
+      preSketches = preSketches)
   }
 
   /** Shared byte budget for any guarded-broadcast build relation
@@ -1316,12 +1317,11 @@ object Dedup {
     */
   private[graft] val CascadeSketchBroadcastMax = guardCeilingRows(SketchRowBytes)
 
-  /** The sketch-verify cascade + exact verification tail, shared by the
-    * closed-corpus pipeline ([[embedBucketedWithPlan]]) and the
-    * incremental one ([[deltaEmbedFrom]]): prune candidate pairs on the
-    * 16-byte verify sketch at separable thresholds (see VerifyTables),
-    * then attach raw embeddings ONLY to survivors for the exact cosine
-    * gate. Input is a canonicalized (vec_a < vec_b) pair stream that MAY
+  /** The sketch-verify cascade + exact verification tail of
+    * [[embedFunnel]]: prune candidate pairs on the 16-byte verify sketch
+    * at separable thresholds (see VerifyTables), then attach raw
+    * embeddings ONLY to survivors for the exact cosine gate. Input is a
+    * canonicalized (vec_a < vec_b) pair stream that MAY
     * carry duplicates (the multiprobe join emits a qualifying pair once
     * per shared bucket beyond the directional guarantee): the sketch
     * verdict is deterministic per pair, so pruning commutes with
@@ -1394,7 +1394,7 @@ object Dedup {
       if (!cascadeEngages(threshold, cutFloor)) cands.distinct()
       else {
         // Same two-consumer duplication as the main sigs relation (the
-        // embedBucketedWithPlan checkpoint rationale): the sketch joins
+        // sharedEmbedSigs checkpoint rationale): the sketch joins
         // onto BOTH pair sides, and without a materialization each side
         // replays the corpus scan + the N·124·dim verify signing. The
         // stored relation is 16 bytes + id per vector. A multi-step
@@ -1550,9 +1550,8 @@ object Dedup {
   }
 
   def embedHi(spark: SparkSession, sfDir: String): DataFrame = {
-    val nBase = Tables.embeddings(spark, sfDir).count()
-    embedBucketedCore(embedHiCorpus(spark, sfDir),
-      nBase + nBase / 10, EmbedHiThreshold, "hi")
+    val (corpus, plan) = hiCorpusAndPlan(spark, sfDir)
+    embedBucketedWithPlan(corpus, plan, EmbedHiThreshold, None, tag = "hi")
   }
 
   // --- Production-dimension embed dedup (dd_embed_hi768) --------------------
@@ -1636,10 +1635,9 @@ object Dedup {
   }
 
   def embedHi768(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = hi768Base(spark, sfDir)
-    val n = base.count()
-    embedBucketedCore(plantNearDups(base), n + n / 10, EmbedHiThreshold,
-      "hi768", EmbedHiDim)
+    val (corpus, plan) = hi768CorpusAndPlan(spark, sfDir)
+    embedBucketedWithPlan(corpus, plan, EmbedHiThreshold, None, EmbedHiDim,
+      tag = "hi768")
   }
 
   /** dd_embed_hi768_staged — the embedding deployment form INSIDE the
@@ -1656,9 +1654,9 @@ object Dedup {
     * real ingest pipeline runs: sign once, serve every pass.
     */
   def embedHi768StagedEntry(spark: SparkSession, sfDir: String): DataFrame = {
-    // One solved plan signs the staging and runs the query — exactly the
-    // plan embedHi768 solves (same corpus, cached selectivity sample,
-    // deterministic minimizer), so the manifest fence matches.
+    // One solved plan signs the staging and runs the query — the plan
+    // embedHi768 takes from the same hi768CorpusAndPlan, so the manifest
+    // fence matches.
     val (corpus, plan) = hi768CorpusAndPlan(spark, sfDir)
     graft.sources.Staging.scoped("graft_hi768_staged") { staging =>
       stageEmbedSigs(spark, corpus, "hi768", plan, EmbedHiDim, staging)
@@ -1667,10 +1665,14 @@ object Dedup {
     }
   }
 
-  /** (corpus, solved plan) for the hi family — what a corpus-ingest
-    * staging step signs. Shared by the staged entry, EmbedStagedProbe
-    * and EmbedStagedSpec so "the plan the query will solve" is one
-    * code path, not three restatements.
+  /** (corpus, solved plan) for one corpus construction — the one plan
+    * solve per construction. The hi corpus serves dd_embed_hi,
+    * dd_delta_embed and dd_delta_embed_chain; the hi768 corpus serves
+    * dd_embed_hi768 and its staged entry. EmbedStagedProbe and
+    * EmbedStagedSpec sign with the same pair, so "the plan the query will
+    * solve" is one code path. `est` is a CARDINALITY ESTIMATE (base +
+    * plants, from footer counts): it only steers the (bits, tables)
+    * solve, never the result.
     */
   private[queries] def hiCorpusAndPlan(spark: SparkSession,
       sfDir: String): (DataFrame, LshPlan) = {
@@ -2715,18 +2717,10 @@ object Dedup {
     * pass per run; production signs a batch per hour against an index it
     * already holds.
     *
-    * No-old×old, by construction (not filter-after-join): only the BATCH
-    * generates probe rows — symmetric depth-1 multiprobe (base key + all
-    * single-bit flips, directional = false) — joined against the base
-    * bucket keys of the WHOLE corpus. A hamming-≤1 pair (n, o) is found
-    * from n's side alone (n's flip of the differing bit lands on o's
-    * base key; hamming-0 pairs meet base-on-base), so coverage equals
-    * the closed-corpus pass's at the same (bits, tables) while an
-    * old×old candidate can never form. Directional probing would NOT
-    * work one-sided — it flips only 0→1, so pairs whose 0-bit sits on
-    * the old side are only discovered from the old side's flip; the
-    * symmetric probe costs 2× the flip fan-out but ONLY on the batch
-    * (≈10% of rows), a bargain against probing the full corpus.
+    * No-old×old, by construction (not filter-after-join): it is
+    * [[embedFunnel]] with only the BATCH probing, against the base bucket
+    * keys of the WHOLE corpus — the funnel derives symmetric probing
+    * from the batch predicate, and states why it is complete.
     *
     * Reuse of index products: the old corpus contributes exactly its
     * per-table base keys — the per-corpus staged signature product —
@@ -2746,65 +2740,22 @@ object Dedup {
     * batch path exercises the full production stack.
     */
   def deltaEmbed(spark: SparkSession, sfDir: String): DataFrame = {
-    val nBase = Tables.embeddings(spark, sfDir).count()
-    val corpus = embedHiCorpus(spark, sfDir)
-    val n = nBase + nBase / 10
-    val plan = solveLsh(n, EmbedHiThreshold,
-      Some(sampledP1Cached(corpus, n, "hi")))
+    val (corpus, plan) = hiCorpusAndPlan(spark, sfDir)
     deltaEmbedFrom(corpus, plan, EmbedHiThreshold, EmbedDim, deltaEmbedIsNew)
   }
 
   /** Core over an arbitrary (vec_id, embedding) corpus, solved plan and
-    * batch predicate — DedupSpec drives it with planted old×old
-    * topologies the same way it drives [[deltaFrom]].
+    * batch predicate: sign, then the funnel with the batch probing.
+    * DedupSpec drives it with planted old×old topologies the same way it
+    * drives [[deltaFrom]].
     */
   private[queries] def deltaEmbedFrom(corpus: DataFrame, plan: LshPlan,
       threshold: Double, dim: Int, isNew: Column => Column): DataFrame = {
-    val flat = graft.functions.HyperplaneSigs.flatten(
-      planesFor(dim), plan.tables, plan.bits, dim)
-    val sigsAll = corpus.select(col("vec_id"),
-      graft.functions.HyperplaneSigs.sigs(col("embedding"), flat,
-        plan.tables, plan.bits, dim).as("sig"))
-      // Two consumers (base keys + batch probe side) — one signing pass,
-      // the embedBucketedWithPlan rationale.
-      .localCheckpoint()
-    deltaEmbedVerify(corpus,
-      keyedBuckets(sigsAll),
-      sigsAll.filter(isNew(col("vec_id"))),
+    // Two consumers (base keys + batch probe side) — one signing pass,
+    // the sharedEmbedSigs recompute-arm rationale.
+    val sigs = computeEmbedSigs(corpus, plan, dim).localCheckpoint()
+    embedFunnel(corpus, sigs.filter(isNew(col("vec_id"))), sigs, isNew,
       plan, threshold, dim)
-  }
-
-  /** Per-table base bucket keys (tbl, bkt, vec_b) from a signature
-    * relation — the old corpus's staged index product.
-    */
-  private[queries] def keyedBuckets(sigs: DataFrame): DataFrame =
-    sigs.select(col("vec_id").as("vec_b"),
-      posexplode(col("sig")).as(Seq("tbl", "bkt")))
-
-  /** Candidate join + cascade + exact verify over (all base keys, batch
-    * signatures): the probe side IS the batch, so every candidate row
-    * touches it.
-    */
-  private def deltaEmbedVerify(corpus: DataFrame, keyedAll: DataFrame,
-      sigsNew: DataFrame, plan: LshPlan, threshold: Double,
-      dim: Int, preSketches: Option[DataFrame] = None): DataFrame = {
-    val probesNew = sigsNew.select(col("vec_id").as("vec_a"),
-      explode(graft.functions.HyperplaneSigs.probeBuckets(
-        col("sig"), plan.tables, plan.bits, depth = 1, directional = false))
-        .as("tk"))
-    // The staged index product keeps its inspectable (tbl, bkt, vec_b)
-    // parquet layout; the key is packed at join time so the probe join
-    // runs the same single-long hash join as the closed-corpus pipeline.
-    // The keyed side is the build side here too: symmetric depth-1
-    // probing puts B+1 rows per batch signature on the probe side, so at
-    // any batch fraction above ~1/(B+1) the index side is the smaller.
-    val cands = probesNew.join(
-      keyedAll.select(col("vec_b"), packTk(col("tbl"), col("bkt")).as("tk"))
-        .hint("SHUFFLE_HASH"), Seq("tk"))
-      .filter(col("vec_a") =!= col("vec_b"))
-      .select(least(col("vec_a"), col("vec_b")).as("vec_a"),
-        greatest(col("vec_a"), col("vec_b")).as("vec_b"))
-    cascadeVerify(corpus, cands, threshold, dim, preSketches = preSketches)
   }
 
   /** Fingerprint sentinel for SELF-READ staging (the delta lifecycles
@@ -2881,17 +2832,16 @@ object Dedup {
         org.apache.spark.sql.types.IntegerType, containsNull = false))))
 
   /** One embed ingest step: read the frozen plan from the manifest, sign
-    * ONLY the batch, probe (symmetric depth-1 multiprobe, the deltaEmbed
-    * coverage argument) against staged ∪ own base keys, cascade + exact
-    * verify. The batch's signatures are APPENDED to the index at the
-    * FILE grain (the deltaIngestStep fusion, round 19): written once as
-    * their own parquet table under the index root — simultaneously the
-    * batch's one signing pass, its materialization barrier, and its
-    * index publication; nothing already staged is ever re-signed,
-    * re-written, or mutated, so neither the step output nor the batch
-    * signatures need a checkpoint fence. `preSketches` hoists the
-    * verify-sketch relation across a chain's steps (one corpus, signed
-    * once).
+    * ONLY the batch, write it, and run the funnel with the batch probing
+    * against staged ∪ batch signatures (keyed once, as one union). The
+    * batch's signatures are APPENDED to the index at the FILE grain (the
+    * deltaIngestStep fusion, round 19): written once as their own
+    * parquet table under the index root — simultaneously the batch's one
+    * signing pass, its materialization barrier, and its index
+    * publication; nothing already staged is ever re-signed, re-written,
+    * or mutated, so neither the step output nor the batch signatures
+    * need a checkpoint fence. `preSketches` hoists the verify-sketch
+    * relation across a chain's steps (one corpus, signed once).
     */
   private[queries] def deltaEmbedIngestStep(spark: SparkSession, corpus: DataFrame,
       isBatch: Column => Column, threshold: Double, stagingDir: String,
@@ -2904,10 +2854,9 @@ object Dedup {
     def readSigs(p: String): DataFrame =
       spark.read.schema(EmbedSigSchema).parquet(p)
     val sigsNew = readSigs(batchPath)
-    val keyedAll = (indexPaths.map(readSigs) :+ sigsNew)
-      .map(keyedBuckets).reduce(_.unionByName(_))
-    deltaEmbedVerify(corpus, keyedAll, sigsNew, plan, threshold, dim,
-      preSketches)
+    embedFunnel(corpus, sigsNew,
+      (indexPaths.map(readSigs) :+ sigsNew).reduce(_.unionByName(_)),
+      isBatch, plan, threshold, dim, preSketches = preSketches)
   }
 
   /** The chain's batch split: the even-base plants (deltaEmbedIsNew's
@@ -2930,13 +2879,10 @@ object Dedup {
     * — idempotent under re-runs and cross-mode fingerprinting.
     */
   def deltaEmbedChain(spark: SparkSession, sfDir: String): DataFrame = {
-    val nBase = Tables.embeddings(spark, sfDir).count()
-    val corpusL = embedHiCorpus(spark, sfDir)
-    val n = nBase + nBase / 10
     // Solve on the UNcheckpointed lineage so the sampled selectivity
     // pools with the file-backed "hi" cache, then checkpoint for the
     // five execution consumers.
-    val plan = solveLsh(n, EmbedHiThreshold, Some(sampledP1Cached(corpusL, n, "hi")))
+    val (corpusL, plan) = hiCorpusAndPlan(spark, sfDir)
     val corpus = corpusL.localCheckpoint()
     graft.sources.Staging.scoped("graft_embed_chain") { dir =>
       seedEmbedDeltaIndex(spark, corpus,

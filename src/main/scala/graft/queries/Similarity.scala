@@ -536,7 +536,7 @@ object Similarity {
     * reports the number per round.
     */
   def annFiltered(spark: SparkSession, sfDir: String): DataFrame =
-    annFilteredWith(spark, sfDir, filterPred10(), s"label$FilterLabel", None)
+    annFilteredWith(spark, sfDir, filterPred10(), s"label$FilterLabel")
 
   /** ann_filtered_rare — the same production shape at the ~1% stratum:
     * identical corpus-wide index, identical machinery, but the probe
@@ -547,20 +547,14 @@ object Similarity {
     * re-calibration is an instrumented fact, not a comment).
     */
   def annFilteredRare(spark: SparkSession, sfDir: String): DataFrame =
-    annFilteredWith(spark, sfDir, filterPredRare(), "rare", None)
+    annFilteredWith(spark, sfDir, filterPredRare(), "rare")
 
   private[graft] def annFilteredWith(spark: SparkSession, sfDir: String,
-      pred: Column, tag: String, staging: Option[String]): DataFrame = {
+      pred: Column, tag: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
     val filtered = Tables.embeddings(spark, sfDir).filter(pred)
-    // Coarse quantizer + stratum postings through the one staged-index
-    // dispatch (round 19): a staged ingest serves the persisted inverted
-    // file semi-joined on the stratum's ids instead of re-running the
-    // per-execution assignment pass. Probe depth stays the per-stratum
-    // calibrated value either way — it is predicate-dependent, so it is
-    // not a stageable ingest product.
-    val (ids, unit, assigned) =
-      sharedIvfFilteredPostings(spark, emb, filtered, staging)
+    val (ids, unit) = ivfModelOf(emb)
+    val assigned = assignedCells(normed(filtered), unit, ids)
     val probed = probedCells(queries(emb), unit, ids,
       filteredNprobe(spark, sfDir, pred, tag))
     searchCells(probed, assigned)
@@ -652,7 +646,7 @@ object Similarity {
     if (autoPicksExact(spark, sfDir, pred, tag, budgetOverride))
       annFilteredExactWith(spark, sfDir, pred)
     else if (perStratumIvf) annFilteredStratumWith(spark, sfDir, pred, tag)
-    else annFilteredWith(spark, sfDir, pred, tag, None)
+    else annFilteredWith(spark, sfDir, pred, tag)
 
   /** Per-stratum coarse quantizer (round 16, VERDICT r15 #6): centroids
     * hash-sampled FROM THE STRATUM, k = ⌈√n_s⌉ from the stratum's own
@@ -879,17 +873,12 @@ object Similarity {
     * centroids — and hence the query output — are identical across
     * local[32] and multi-JVM cluster mode.
     */
-  def annIvfKmeans(spark: SparkSession, sfDir: String): DataFrame =
-    annIvfKmeansWith(spark, sfDir, None)
-
-  private[queries] def annIvfKmeansWith(spark: SparkSession, sfDir: String,
-      staging: Option[String]): DataFrame = {
+  def annIvfKmeans(spark: SparkSession, sfDir: String): DataFrame = {
     val raw = Tables.embeddings(spark, sfDir)
-    // Model + postings + probe depth through the staged-index dispatch
-    // (round 19): an ingest-staged fitted matrix serves in place of the
-    // per-JVM driver Lloyd fit and the per-execution assignment pass.
-    val s = sharedKmeansServing(spark, raw, staging)
-    searchCells(probedCells(queries(raw), s.unit, s.ids, s.nprobe), s.assigned)
+    val (ids, unit) = kmeansModelOf(raw)
+    val assigned = assignedCells(normed(raw), unit, ids)
+    val nprobe = calibratedNprobe(calibrationPairsCached(raw), unit, ids)
+    searchCells(probedCells(queries(raw), unit, ids, nprobe), assigned)
   }
 
   /** The trained ("kmeans" slot) coarse model — factored out of
@@ -1147,35 +1136,37 @@ object Similarity {
     }).intValue()
   }
 
-  def annIvfPq(spark: SparkSession, sfDir: String): DataFrame =
-    annIvfPqWith(spark, sfDir, None)
-
-  private[queries] def annIvfPqWith(spark: SparkSession, sfDir: String,
-      staging: Option[String]): DataFrame = {
+  def annIvfPq(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    // Coarse model, codebooks, encoded inverted file, and both
-    // calibrated depths through the staged-index dispatch (round 19):
-    // an ingest-staged product replaces the per-execution assignment +
-    // encode corpus pass (one projection, but N·(√N·d + m·ksub·subDim)
-    // arithmetic) with a scan of the 8-byte-code postings. Recompute
-    // arm is the historical single-pass projection, unchanged.
-    val s = sharedPqServing(spark, emb, staging)
+    val n = corpusSize(emb)
+    val (ids, unit) = ivfModelOf(emb)
+    val (ksub, books) = pqBooksCached(emb, n)
+    val pairs = calibrationPairsCached(emb)
+    val shortK = calibratedPqShortlist(emb, books, ksub, pairs)
+    val nprobe = calibratedNprobe(pairs, unit, ids)
+    // IVF cell assignment AND PQ encode in one projection of the corpus.
+    val codes = normed(emb).select(
+      explode(graft.functions.NearestCells.nearestCells(
+        col("embedding"), unit, ids, ids.length, Dim, CellReplicas)).as("cell"),
+      col("vec_id"),
+      graft.functions.PqCodes.pqEncode(col("embedding"), books,
+        PqM, ksub, PqSubDim).as("code"))
     val q = queries(emb)
-    val probed = probedCells(q, s.unit, s.ids, s.nprobe)
+    val probed = probedCells(q, unit, ids, nprobe)
     // ADC scan: rank candidates from the code alone (a per-query positive
     // scale can't change a ranking, so the raw query needs no normalize).
     // Codes are the stream side of the ADC join and arrive as one split
-    // (recompute arm: the single-split embeddings scan; staged arm: the
-    // postings parquet) — the whole |Q|·nprobe·postings ADC scan plus the
-    // shortlist partial top-k ran in ONE task (JobBreakdown: 881 ms of
-    // the 1.63 s wall). Same spread as searchCells.
-    val scored = broadcast(probed).join(Dedup.spreadVecSource(s.codes), Seq("cell"))
+    // (the single-split embeddings scan) — the whole |Q|·nprobe·postings
+    // ADC scan plus the shortlist partial top-k ran in ONE task
+    // (JobBreakdown: 881 ms of the 1.63 s wall). Same spread as
+    // searchCells.
+    val scored = broadcast(probed).join(Dedup.spreadVecSource(codes), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("adc", graft.functions.PqCodes.pqAdcDot(
-        col("code"), col("q_emb"), s.books, PqM, s.ksub, PqSubDim))
+        col("code"), col("q_emb"), books, PqM, ksub, PqSubDim))
     val shortlist = scored.groupBy(col("q_id"))
       .agg(graft.functions.TopKAgg.topk(col("vec_id"), col("adc"),
-        s.shortK).as("top"))
+        shortK).as("top"))
       .select(col("q_id"), explode(col("top.id")).as("vec_id"))
     val e = normed(emb)
     // Exact re-rank: only |Q|·shortK raw vectors are ever fetched. The
@@ -1493,7 +1484,10 @@ object Similarity {
       "cannot stage an IVF index for a corpus with no file lineage - " +
         "the provenance fence would have no identity to verify")
     val n = corpusSize(emb)
-    writeIvfCents(emb, n, stagingDir)
+    val stride = math.max(1L, n / centroidCount(n))
+    emb.filter(pmod(xxhash64(col("vec_id")), lit(stride)) === 0)
+      .select(col("vec_id"), col("embedding"))
+      .coalesce(1).write.mode("overwrite").parquet(ivfServeCentsPath(stagingDir))
     val (ids, unit) = ivfModelOf(emb)
     assignedCells(normed(emb), unit, ids)
       .write.mode("overwrite").parquet(ivfServePostingsPath(stagingDir))
@@ -1507,19 +1501,25 @@ object Similarity {
   /** The IVF family's serving components behind the ONE dispatch site:
     * staged postings + centroids + calibrated nprobe when the caller
     * names a staging whose provenance matches this corpus; the
-    * historical recompute arm otherwise. A stale or foreign staging
-    * degrades to recompute — slower, never wrong. The staged centroid
-    * model shares the in-process "ivf" cache slot with the recompute
-    * arm (both are the identical sorted collect, so a hit from either
-    * side is byte-identical and every downstream fingerprint — including
-    * the dynamic-oracle generator's inlined matrix — is unchanged).
+    * historical recompute arm otherwise. The fence: both tables
+    * committed and `ivf_meta.json` matching this corpus. A stale or
+    * foreign staging degrades to recompute — slower, never wrong. The
+    * staged centroid model shares the in-process "ivf" cache slot with
+    * the recompute arm (both are the identical sorted collect, so a hit
+    * from either side is byte-identical and every downstream fingerprint
+    * — including the dynamic-oracle generator's inlined matrix — is
+    * unchanged).
     */
   private[queries] final case class IvfServing(ids: Array[Long],
       unit: Array[Double], assigned: DataFrame, nprobe: Int)
 
   private[queries] def sharedIvfServing(spark: SparkSession,
       emb: DataFrame, staging: Option[String]): IvfServing =
-    stagedIvfFor(spark, emb, staging) match {
+    staging.flatMap { dir =>
+      graft.sources.Manifest.lookup(spark.sparkContext.hadoopConfiguration,
+        dir, "ivf_meta.json", Seq(ivfServeCentsPath(dir), ivfServePostingsPath(dir)),
+        ivfManifestFields(emb), Seq("nprobe")).map(m => (dir, m("nprobe").toInt))
+    } match {
       case Some((dir, nprobe)) =>
         val (ids, unit) = centModelCached("ivf", emb)(
           collectUnitCents(spark.read.parquet(ivfServeCentsPath(dir))))
@@ -1529,49 +1529,6 @@ object Similarity {
         val (ids, unit) = ivfModelOf(emb)
         IvfServing(ids, unit, assignedCells(normed(emb), unit, ids),
           calibratedNprobe(calibrationPairsCached(emb), unit, ids))
-    }
-
-  /** The filtered family's inverted-file source behind the SAME staged
-    * dispatch (round 19 follow-on): a fence-matched staging serves the
-    * persisted full-corpus postings semi-joined on the stratum's
-    * `vec_id` set — an O(N) hash join replacing the stratum's
-    * per-execution N_s·√N·d assignment arithmetic (at 10⁹ vectors the
-    * assignment is ~10¹³ multiplies per pass; the join is one shuffle
-    * of rows that already exist on disk). Row-identical by
-    * construction: cell assignment is a deterministic per-row
-    * expression, so the full inverted file restricted to the stratum's
-    * ids IS the stratum's inverted file (IvfStagedSpec pins it). The
-    * recompute arm is the historical plan, untouched. Per-stratum
-    * probe-depth calibration stays with the caller — it depends on the
-    * predicate, which an ingest-time staging cannot know.
-    */
-  private[queries] def sharedIvfFilteredPostings(spark: SparkSession,
-      emb: DataFrame, filtered: DataFrame, staging: Option[String])
-      : (Array[Long], Array[Double], DataFrame) =
-    stagedIvfFor(spark, emb, staging) match {
-      case Some((dir, _)) =>
-        val (ids, unit) = centModelCached("ivf", emb)(
-          collectUnitCents(spark.read.parquet(ivfServeCentsPath(dir))))
-        val assigned = spark.read.parquet(ivfServePostingsPath(dir))
-          .join(filtered.select(col("vec_id")), Seq("vec_id"), "left_semi")
-          .select(col("cell"), col("vec_id"), col("embedding"), col("nrm"))
-        (ids, unit, assigned)
-      case None =>
-        val (ids, unit) = ivfModelOf(emb)
-        (ids, unit, assignedCells(normed(filtered), unit, ids))
-    }
-
-  /** The coarse index's fence: both tables committed and
-    * `ivf_meta.json` matching this corpus; yields (dir, served nprobe).
-    * Like every staged product it is fenced on its own, so a partial
-    * ingest degrades only the products it did not commit.
-    */
-  private def stagedIvfFor(spark: SparkSession, emb: DataFrame,
-      staging: Option[String]): Option[(String, Int)] =
-    staging.flatMap { dir =>
-      graft.sources.Manifest.lookup(spark.sparkContext.hadoopConfiguration,
-        dir, "ivf_meta.json", Seq(ivfServeCentsPath(dir), ivfServePostingsPath(dir)),
-        ivfManifestFields(emb), Seq("nprobe")).map(m => (dir, m("nprobe").toInt))
     }
 
   /** The recompute arm's posting relation alone — the assignment
@@ -1599,195 +1556,6 @@ object Similarity {
     graft.sources.Staging.scoped("graft_ivf_staged") { staging =>
       stageIvfIndex(spark, sfDir, staging)
       annIvfWith(spark, sfDir, Some(staging))
-    }
-
-  // --- PQ + k-means staged serving products (round 19 follow-on) -------------
-  //
-  // The rest of the vector-index family behind the SAME one staging
-  // directory argument and the same Manifest fence
-  // discipline, each product self-contained so a partial ingest degrades
-  // per-family to recompute: ann_ivf_pq's serving product is the encoded
-  // inverted file — (cell, vec_id, 8-byte code) — plus the per-subspace
-  // codebooks and both calibrated depths (probe + shortlist), and
-  // ann_ivf_kmeans' is the FITTED centroid matrix (the driver Lloyd fit
-  // every fresh JVM otherwise re-runs) plus its postings and probe
-  // depth. At 10⁹ vectors the hoisted per-execution work is the
-  // N·√N·d assignment arithmetic AND (for PQ) the N·m·ksub·subDim
-  // encode pass; the staged arm reads rows that already exist. Codebooks
-  // and fitted centroids persist as exact doubles (parquet DOUBLE
-  // round-trips bit-exactly), so the served model — and every downstream
-  // fingerprint, including the dynamic oracle's inlined matrices — is
-  // byte-identical to a recompute (IvfStagedSpec pins both families).
-
-  private def pqBooksPath(dir: String): String = s"$dir/pq_books.parquet"
-  private def pqPostingsPath(dir: String): String = s"$dir/pq_postings.parquet"
-  private def kmCentsPath(dir: String): String = s"$dir/km_cents.parquet"
-  private def kmPostingsPath(dir: String): String = s"$dir/km_postings.parquet"
-
-  /** PQ fence identity: the coarse-quantizer identity (the codes join
-    * against its cells) plus the codebook construction. ksub, the
-    * calibrated shortlist depth, and nprobe are served values — each is
-    * content-deterministic under the fenced fields.
-    */
-  private def pqManifestFields(emb: DataFrame): Seq[(String, Any)] =
-    ivfManifestFields(emb) ++ Seq(
-      "pqM" -> PqM, "pqSubDim" -> PqSubDim,
-      "pqKsubMax" -> PqKsubMax, "pqSampleCap" -> PqSampleCap,
-      "pqRefine" -> PqRefine)
-
-  /** k-means fence identity: corpus content + the trained-quantizer
-    * construction (sample cap; the fit itself is seeded and
-    * content-deterministic). k and nprobe are served values.
-    */
-  private def kmManifestFields(emb: DataFrame): Seq[(String, Any)] = Seq(
-    "corpusFp" -> CorpusCaches.corpusFpMd5(emb),
-    "quantizer" -> "spherical-kmeans-cosine",
-    "dim" -> Dim, "cellReplicas" -> CellReplicas,
-    "topK" -> K, "calQueries" -> CalQueries,
-    "recallTargetPct" -> math.round(RecallTarget * 100).toInt,
-    "kmSampleCap" -> KmeansSampleCap)
-
-  /** Stage ann_ivf_pq's serving product: coarse centroid source rows
-    * (shared file with [[stageIvfIndex]] — identical content, either
-    * order wins), codebooks as exact doubles, the encoded inverted
-    * file, and the calibrated depths in the manifest.
-    */
-  def stagePqIndex(spark: SparkSession, sfDir: String,
-      stagingDir: String): String = {
-    val emb = Tables.embeddings(spark, sfDir)
-    require(CorpusCaches.corpusFpMd5(emb).nonEmpty,
-      "cannot stage a PQ index for a corpus with no file lineage - " +
-        "the provenance fence would have no identity to verify")
-    val n = corpusSize(emb)
-    writeIvfCents(emb, n, stagingDir)
-    val (ids, unit) = ivfModelOf(emb)
-    val (ksub, books) = pqBooksCached(emb, n)
-    import spark.implicits._
-    books.toSeq.zipWithIndex.map { case (v, i) => (i, v) }
-      .toDF("idx", "value")
-      .coalesce(1).write.mode("overwrite").parquet(pqBooksPath(stagingDir))
-    normed(emb).select(
-      explode(graft.functions.NearestCells.nearestCells(
-        col("embedding"), unit, ids, ids.length, Dim, CellReplicas)).as("cell"),
-      col("vec_id"),
-      graft.functions.PqCodes.pqEncode(col("embedding"), books,
-        PqM, ksub, PqSubDim).as("code"))
-      .write.mode("overwrite").parquet(pqPostingsPath(stagingDir))
-    val pairs = calibrationPairsCached(emb)
-    graft.sources.Manifest.write(spark.sparkContext.hadoopConfiguration,
-      stagingDir, "pq_meta.json",
-      pqManifestFields(emb) ++ Seq("ksub" -> ksub,
-        "shortK" -> calibratedPqShortlist(emb, books, ksub, pairs),
-        "nprobe" -> calibratedNprobe(pairs, unit, ids)))
-    stagingDir
-  }
-
-  /** Stage ann_ivf_kmeans' serving product: the FITTED unit-centroid
-    * matrix as exact doubles (cell ids are centroid indices 0..k-1, so
-    * the flat matrix is the whole model), its postings, and the
-    * calibrated probe depth.
-    */
-  def stageKmeansIndex(spark: SparkSession, sfDir: String,
-      stagingDir: String): String = {
-    val emb = Tables.embeddings(spark, sfDir)
-    require(CorpusCaches.corpusFpMd5(emb).nonEmpty,
-      "cannot stage a k-means index for a corpus with no file lineage - " +
-        "the provenance fence would have no identity to verify")
-    val (ids, unit) = kmeansModelOf(emb)
-    import spark.implicits._
-    unit.toSeq.zipWithIndex.map { case (v, i) => (i, v) }
-      .toDF("idx", "value")
-      .coalesce(1).write.mode("overwrite").parquet(kmCentsPath(stagingDir))
-    assignedCells(normed(emb), unit, ids)
-      .write.mode("overwrite").parquet(kmPostingsPath(stagingDir))
-    graft.sources.Manifest.write(spark.sparkContext.hadoopConfiguration,
-      stagingDir, "km_meta.json",
-      kmManifestFields(emb) ++ Seq("k" -> ids.length,
-        "nprobe" -> calibratedNprobe(calibrationPairsCached(emb), unit, ids)))
-    stagingDir
-  }
-
-  /** The hash-strided centroid SOURCE rows — factored so stageIvfIndex
-    * and stagePqIndex write the identical file (the two products share
-    * the coarse quantizer, so either staging order serves both).
-    */
-  private def writeIvfCents(emb: DataFrame, n: Long, stagingDir: String): Unit = {
-    val stride = math.max(1L, n / centroidCount(n))
-    emb.filter(pmod(xxhash64(col("vec_id")), lit(stride)) === 0)
-      .select(col("vec_id"), col("embedding"))
-      .coalesce(1).write.mode("overwrite").parquet(ivfServeCentsPath(stagingDir))
-  }
-
-  /** Read a flat (idx, value) exact-doubles matrix back in index order. */
-  private def readFlatDoubles(spark: SparkSession, path: String): Array[Double] =
-    spark.read.parquet(path).collect()
-      .map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1).map(_._2)
-
-  private[queries] final case class PqServing(ids: Array[Long],
-      unit: Array[Double], ksub: Int, books: Array[Double],
-      shortK: Int, nprobe: Int, codes: DataFrame)
-
-  /** ann_ivf_pq's serving components behind the staged dispatch: a
-    * fence-matched staging serves the persisted codes + codebooks +
-    * calibrated depths; anything else recomputes (the historical arm,
-    * untouched). Served models fill the same in-process cache slots as
-    * recompute — both sides are bit-identical, so a hit from either arm
-    * serves the other.
-    */
-  private[queries] def sharedPqServing(spark: SparkSession,
-      emb: DataFrame, staging: Option[String]): PqServing = {
-    val n = corpusSize(emb)
-    staging.flatMap { dir =>
-      graft.sources.Manifest.lookup(spark.sparkContext.hadoopConfiguration,
-        dir, "pq_meta.json",
-        Seq(pqBooksPath(dir), pqPostingsPath(dir), ivfServeCentsPath(dir)),
-        pqManifestFields(emb), Seq("ksub", "shortK", "nprobe")).map((dir, _))
-    } match {
-      case Some((dir, m)) =>
-        val (ids, unit) = centModelCached("ivf", emb)(
-          collectUnitCents(spark.read.parquet(ivfServeCentsPath(dir))))
-        val (ksub, books) = cachedOrBuild(pqCache, corpusKey(emb))(
-          (m("ksub").toInt, readFlatDoubles(spark, pqBooksPath(dir))))
-        PqServing(ids, unit, ksub, books, m("shortK").toInt, m("nprobe").toInt,
-          spark.read.parquet(pqPostingsPath(dir)))
-      case None =>
-        val (ids, unit) = ivfModelOf(emb)
-        val (ksub, books) = pqBooksCached(emb, n)
-        val pairs = calibrationPairsCached(emb)
-        val codes = normed(emb).select(
-          explode(graft.functions.NearestCells.nearestCells(
-            col("embedding"), unit, ids, ids.length, Dim, CellReplicas)).as("cell"),
-          col("vec_id"),
-          graft.functions.PqCodes.pqEncode(col("embedding"), books,
-            PqM, ksub, PqSubDim).as("code"))
-        PqServing(ids, unit, ksub, books,
-          calibratedPqShortlist(emb, books, ksub, pairs),
-          calibratedNprobe(pairs, unit, ids), codes)
-    }
-  }
-
-  /** ann_ivf_kmeans' serving components behind the staged dispatch. */
-  private[queries] def sharedKmeansServing(spark: SparkSession,
-      emb: DataFrame, staging: Option[String]): IvfServing =
-    staging.flatMap { dir =>
-      graft.sources.Manifest.lookup(spark.sparkContext.hadoopConfiguration,
-        dir, "km_meta.json", Seq(kmCentsPath(dir), kmPostingsPath(dir)),
-        kmManifestFields(emb), Seq("k", "nprobe")).map((dir, _))
-    } match {
-      case Some((dir, m)) =>
-        val (ids, unit) = centModelCached("kmeans", emb) {
-          val flat = readFlatDoubles(spark, kmCentsPath(dir))
-          val k = m("k").toInt
-          require(flat.length == k * Dim,
-            s"staged k-means matrix is ${flat.length} doubles, expected ${k * Dim}")
-          (Array.tabulate(k)(_.toLong), flat)
-        }
-        IvfServing(ids, unit, spark.read.parquet(kmPostingsPath(dir)),
-          m("nprobe").toInt)
-      case None =>
-        val (ids, unit) = kmeansModelOf(emb)
-        IvfServing(ids, unit, assignedCells(normed(emb), unit, ids),
-          calibratedNprobe(calibrationPairsCached(emb), unit, ids))
     }
 
   // -------------------------------------------------------------------

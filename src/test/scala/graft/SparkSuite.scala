@@ -22,13 +22,16 @@ trait SparkSuite extends AnyFunSuite {
 
 object SparkSuite {
   lazy val session: SparkSession = {
+    // Tables a spec saves (ScaleTechniquesSpec) land in this warehouse;
+    // it is deleted when the JVM exits.
+    val warehouse = java.nio.file.Files.createTempDirectory("graft-wh")
+    sys.addShutdownHook(scala.util.Try(graft.sources.Staging.deleteRecursively(warehouse)))
     // local[4, 2]: 4 threads, maxFailures=2 — lets ChaosSpec exercise the
     // task-retry contract (reference: 10 s deadline re-execution,
     // mr/coordinator.go:141-154) without a second SparkContext.
     val s = SparkSession.builder()
       .master("local[4, 2]")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.adaptive.enabled", "true")

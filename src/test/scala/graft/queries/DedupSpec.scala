@@ -673,13 +673,25 @@ class DedupSpec extends SparkSuite {
       (1L, a), (2L, a), (5L, Array(0f, 1f, 0f, 0f)),
       (101L, a), (102L, a)
     ).toDF("vec_id", "embedding")
-    val pairs = Dedup.deltaEmbedFrom(corpus,
-        Dedup.LshPlan(bits = 6, tables = 8, work = 0, candFraction = 0),
-        threshold = 0.8, dim = 4, isNew = c => c >= 100L)
-      .select("vec_a", "vec_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs == Set((1L, 101L), (2L, 101L), (1L, 102L), (2L, 102L),
-      (101L, 102L)), s"got $pairs")
+    val plan = Dedup.LshPlan(bits = 6, tables = 8, work = 0, candFraction = 0)
+    def scored(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // The funnel's probe predicate, table-driven: the batch (symmetric
+    // probing), every vector (directional probing — must equal the
+    // closed-corpus funnel on the same corpus and plan, old×old pair
+    // (1, 2) included) and no vector (nothing probes).
+    val cases = Seq[(String, Column => Column, Set[(Long, Long, Double)])](
+      ("≥ 100", c => c >= 100L, Set((1L, 101L), (2L, 101L), (1L, 102L),
+        (2L, 102L), (101L, 102L)).map { case (x, y) => (x, y, 1.0) }),
+      ("every vector", Dedup.AllDocs,
+        scored(Dedup.embedBucketedWithPlan(corpus, plan, 0.8, None, dim = 4))),
+      ("no vector", _ => lit(false), Set.empty))
+    assert(cases(1)._3.exists(p => p._1 == 1L && p._2 == 2L),
+      "the closed-corpus funnel must report the old×old pair")
+    cases.foreach { case (name, inProbe, expected) =>
+      val got = scored(Dedup.deltaEmbedFrom(corpus, plan, 0.8, 4, inProbe))
+      assert(got == expected, s"$name: got $got expected $expected")
+    }
   }
 
   test("staged delta-embed (old keys from parquet, batch signed fresh) equals in-query") {

@@ -81,48 +81,19 @@ object IvfStagedProbe {
       require(nRe1 == nSt1,
         s"ann_ivf row count diverged across the dispatch: $nRe1 vs $nSt1")
 
-      // Filtered-stratum pair (round-19 follow-on): the staged arm
-      // serves the persisted postings semi-joined on the stratum ids in
-      // place of the per-execution stratum assignment — same alternating
-      // protocol, row identity required on the first pair.
-      def filteredLap(staged: Boolean): (Long, Double) = {
-        var n = 0L
-        val w = timed {
-          n = Similarity.annFilteredWith(spark, sf, Similarity.filterPred10(),
-            s"label${Similarity.FilterLabel}", Some(staging).filter(_ => staged)).count()
-        }
-        (n, w)
-      }
-      filteredLap(staged = false) // warm-up (fills the stratum caches)
-      val fLaps = (1 to lapPairs).map { _ =>
-        val (fnRe, fReW) = filteredLap(staged = false)
-        val (fnSt, fStW) = filteredLap(staged = true)
-        (fnRe, fReW, fnSt, fStW)
-      }
-      val fRe = fLaps.map(_._2).min
-      val fSt = fLaps.map(_._4).min
-      require(fLaps.head._1 == fLaps.head._3,
-        s"ann_filtered row count diverged across the dispatch: " +
-          s"${fLaps.head._1} vs ${fLaps.head._3}")
       val crossover =
         if (re - st > 1e-3) (stageWrite / (re - st)).ceil.toLong else -1L
       println(f"[ivfstaged] $sf recompute=$re%.2f staged=$st%.2f " +
         f"assignRecompute=$assignRecompute%.2f stageWrite=$stageWrite%.2f " +
-        f"stagedRead=$stagedRead%.2f rows=$nRe1 crossoverReuses=$crossover " +
-        f"filteredRecompute=$fRe%.2f filteredStaged=$fSt%.2f")
+        f"stagedRead=$stagedRead%.2f rows=$nRe1 crossoverReuses=$crossover")
       val lapsJson =
         lapsRun.map(l => s"[${fmt3(l._2)},${fmt3(l._4)}]").mkString(",")
-      val fLapsJson =
-        fLaps.map(l => s"[${fmt3(l._2)},${fmt3(l._4)}]").mkString(",")
       s"""{"sf":"$sf","recompute":${fmt3(re)},"staged":${fmt3(st)},""" +
         s""""assignRecompute":${fmt3(assignRecompute)},""" +
         s""""stageWrite":${fmt3(stageWrite)},""" +
         s""""stagedRead":${fmt3(stagedRead)},""" +
         s""""rows":$nRe1,"crossoverReuses":$crossover,""" +
-        s""""lapPairsReSt":[$lapsJson],""" +
-        s""""filteredRecompute":${fmt3(fRe)},"filteredStaged":${fmt3(fSt)},""" +
-        s""""filteredRows":${fLaps.head._1},""" +
-        s""""filteredLapPairsReSt":[$fLapsJson]}"""
+        s""""lapPairsReSt":[$lapsJson]}"""
     }
     val out = s"""{"crossoverRule":"R* = stageWrite / (recompute - staged); -1 = staging never wins at that size","caveat":"in-process model+calibration caches serve both arms; cross-JVM serving also skips the 64xN calibration scan","points":[${points.mkString(",")}]}"""
     println("[ivfstaged] " + out)

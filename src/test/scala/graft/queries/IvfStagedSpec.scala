@@ -41,78 +41,6 @@ class IvfStagedSpec extends SparkSuite {
       "the staged entry must equal the recompute form row-for-row")
   }
 
-  test("filtered family serves the staged postings via the stratum semi-join") {
-    // Round-19 follow-on: annFilteredWith routes through
-    // sharedIvfFilteredPostings — under a fence-matched staging the
-    // stratum's inverted file is the persisted full-corpus postings
-    // semi-joined on the stratum ids (no per-execution assignment), and
-    // both strata must be row-identical across the switch.
-    withTempDir("ivf-filter") { stagingPath =>
-      val staging = stagingPath.toString
-      val recompute10 = rows(Similarity.annFiltered(spark, sf))
-      val recompute1 = rows(Similarity.annFilteredRare(spark, sf))
-      Similarity.stageIvfIndex(spark, sf, staging)
-      val emb = graft.Tables.embeddings(spark, sf)
-      val (_, _, assigned) = Similarity.sharedIvfFilteredPostings(
-        spark, emb, emb.filter(Similarity.filterPred10()), Some(staging))
-      assert(assigned.inputFiles.exists(_.contains(staging)),
-        "the staged arm must scan the persisted postings, got " +
-          assigned.inputFiles.take(2).mkString(","))
-      assert(rows(Similarity.annFilteredWith(spark, sf, Similarity.filterPred10(),
-          s"label${Similarity.FilterLabel}", Some(staging))) == recompute10,
-        "ann_filtered must be row-identical across the staged-postings dispatch")
-      assert(rows(Similarity.annFilteredWith(spark, sf, Similarity.filterPredRare(),
-          "rare", Some(staging))) == recompute1,
-        "ann_filtered_rare must be row-identical across the staged-postings dispatch")
-    }
-  }
-
-  test("pq and kmeans families serve their staged products, row-identical") {
-    // Round-19 follow-on: the whole vector-index family behind the one
-    // staging location — ann_ivf_pq's encoded inverted file + codebooks
-    // + calibrated depths, ann_ivf_kmeans' fitted matrix + postings.
-    withTempDir("ivf-pqkm") { stagingPath =>
-      val staging = stagingPath.toString
-      val pqRecompute = rows(Similarity.annIvfPq(spark, sf))
-      val kmRecompute = rows(Similarity.annIvfKmeans(spark, sf))
-      Similarity.stagePqIndex(spark, sf, staging)
-      Similarity.stageKmeansIndex(spark, sf, staging)
-      val emb = graft.Tables.embeddings(spark, sf)
-      val pqS = Similarity.sharedPqServing(spark, emb, Some(staging))
-      assert(pqS.codes.inputFiles.nonEmpty &&
-        pqS.codes.inputFiles.forall(_.contains(staging)),
-        "the pq staged arm must scan the persisted code postings")
-      val kmS = Similarity.sharedKmeansServing(spark, emb, Some(staging))
-      assert(kmS.assigned.inputFiles.nonEmpty &&
-        kmS.assigned.inputFiles.forall(_.contains(staging)),
-        "the kmeans staged arm must scan the persisted postings")
-      assert(rows(Similarity.annIvfPqWith(spark, sf, Some(staging))) == pqRecompute,
-        "ann_ivf_pq must be row-identical across the staged dispatch")
-      assert(rows(Similarity.annIvfKmeansWith(spark, sf, Some(staging))) == kmRecompute,
-        "ann_ivf_kmeans must be row-identical across the staged dispatch")
-    }
-  }
-
-  test("a partial staging serves only its committed products") {
-    // stageIvfIndex alone: the coarse index serves, pq/kmeans — whose
-    // products were never staged — each degrade to recompute without
-    // touching the served sibling.
-    withTempDir("ivf-partial") { stagingPath =>
-      val staging = stagingPath.toString
-      Similarity.stageIvfIndex(spark, sf, staging)
-      val emb = graft.Tables.embeddings(spark, sf)
-      assert(Similarity.sharedIvfServing(spark, emb, Some(staging))
-        .assigned.inputFiles.exists(_.contains(staging)),
-        "the staged coarse index must serve")
-      assert(!Similarity.sharedPqServing(spark, emb, Some(staging))
-        .codes.inputFiles.exists(_.contains(staging)),
-        "pq must recompute when its product was not staged")
-      assert(!Similarity.sharedKmeansServing(spark, emb, Some(staging))
-        .assigned.inputFiles.exists(_.contains(staging)),
-        "kmeans must recompute when its product was not staged")
-    }
-  }
-
   test("provenance fence: an index staged from another corpus is refused") {
     withTempDir("ivf-foreign") { stagingPath =>
       val staging = stagingPath.toString

@@ -72,25 +72,34 @@ class StagingSpec extends SparkSuite {
   }
 
   test("superseded stages of the same source are deleted; other corpora coexist") {
-    withTempDir("graft-regen-clean") { corpus =>
+    // The stage directories live in java.io.tmpdir, outside both temp
+    // corpora: every one this test creates is deleted at its end.
+    val stages = scala.collection.mutable.Buffer.empty[java.io.File]
+    def stage(src: Path): java.io.File = {
+      val d = Staging.stagedDir("graft_spec_probe", s"$src/documents.parquet")
+      stages += d
+      d
+    }
+    try withTempDir("graft-regen-clean") { corpus =>
       val docs = graft.Tables.documents(spark, sf)
       writeSingleParquet(docs.limit(50), corpus.resolve("documents.parquet"))
-      val d1 = Staging.stagedDir("graft_spec_probe", s"$corpus/documents.parquet")
+      val d1 = stage(corpus)
       Files.createDirectories(d1.toPath)
       // A different corpus under the same prefix must NOT be treated as stale.
       withTempDir("graft-regen-other") { other =>
         writeSingleParquet(docs.limit(50), other.resolve("documents.parquet"))
-        val dOther = Staging.stagedDir("graft_spec_probe", s"$other/documents.parquet")
+        val dOther = stage(other)
         Files.createDirectories(dOther.toPath)
         // Regenerate the first corpus: its new key differs, its old dir dies,
         // the other corpus's stage survives.
         writeSingleParquet(docs.limit(60), corpus.resolve("documents.parquet"))
-        val d2 = Staging.stagedDir("graft_spec_probe", s"$corpus/documents.parquet")
+        val d2 = stage(corpus)
         assert(d2.getName != d1.getName, "content change did not change the key")
         assert(!d1.exists(), "superseded stage not cleaned up")
         assert(dOther.exists(), "unrelated corpus's stage was deleted")
       }
     }
+    finally stages.filter(_.exists()).foreach(d => Staging.deleteRecursively(d.toPath))
   }
 
   test("scoped: a body that throws leaves no directory") {
